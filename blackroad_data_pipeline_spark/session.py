@@ -11,7 +11,9 @@ driver harness all run with the same scale-aware defaults:
   ``spark.sql.shuffle.partitions`` / rely on AQE);
 - UTC session timezone so timestamp semantics match ANSI engines
   (and the DuckDB correctness oracle);
-- Arrow enabled for any Pandas-UDF path.
+- Arrow enabled for any Pandas-UDF path;
+- Python workers forked from ``_pydaemon``, which stops every task
+  from re-reading pyspark.zip and the spark-core jar.
 """
 
 from __future__ import annotations
@@ -32,13 +34,13 @@ def get_spark(
     unset). On a real cluster, pass ``master=None`` with
     ``SPARK_GRAFT_MASTER`` unset and let spark-submit supply it.
     """
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     if master is None:
         master = os.environ.get("SPARK_GRAFT_MASTER")
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"
 
-    cores = os.cpu_count() or 8
+    cores = (os.cpu_count() or 8) if cpus == "*" else int(cpus)
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -60,6 +62,11 @@ def get_spark(
         # parquet TIMESTAMP(NANOS) isn't a Spark type; read as long and
         # convert explicitly (see sources.readers.nanos_to_timestamp)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # workers must be able to import this package (run from the
+        # repo root or put it on PYTHONPATH), as the module-level
+        # pandas UDFs pickled by reference already require
+        .config("spark.python.daemon.module",
+                "blackroad_data_pipeline_spark._pydaemon")
     )
     # Pin the JVM default locale (ADVICE r7): Java
     # String.toLowerCase() — the F.lower fallback for non-ASCII — is

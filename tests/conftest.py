@@ -40,21 +40,25 @@ def spark():
     s = get_spark("tests", extra_conf=extra)
     # Route tiny literal fixtures through the Arrow LocalRelation path
     # (operators/parallel.py arrow_local_frame): the pickled-RDD frame
-    # behind plain createDataFrame costs ~0.2 s of Python-worker round
-    # trip on EVERY consuming action, which dominates a suite built on
-    # <100-row fixtures (measured: collect() 208 ms -> 4 ms). The
+    # behind plain createDataFrame runs Python tasks on EVERY
+    # consuming action. Those cost ~0.2 s each mostly because the
+    # worker re-read pyspark.zip and the spark-core jar per task; the
+    # session's daemon (_pydaemon) now skips that, and a 20-row
+    # fixture's collect() measures 117 ms on the RDD path vs 3 ms
+    # here (4 cores; 273 ms vs 6 ms before the daemon). The
     # conversion is value-exact for the safe type set and FALLS BACK
     # to the original path for everything else (timestamps, Decimals,
-    # nested Rows, RDD/pandas inputs, kwargs like verifySchema), so
-    # test semantics are unchanged — only the construction path is.
+    # nested Rows, RDD/pandas inputs, extra arguments like
+    # verifySchema), so test semantics are unchanged — only the
+    # construction path is.
     from blackroad_data_pipeline_spark.operators.parallel import (
         arrow_local_frame,
     )
 
     orig_create = s.createDataFrame
 
-    def fast_create(data, schema=None, **kwargs):
-        if not kwargs and isinstance(data, list) and data:
+    def fast_create(data, schema=None, *args, **kwargs):
+        if not args and not kwargs and isinstance(data, list) and data:
             struct = schema
             if schema is None or (isinstance(schema, (list, tuple))
                                   and all(isinstance(n, str) for n in schema)):
@@ -67,7 +71,7 @@ def spark():
                 df = arrow_local_frame(s, data, struct)
                 if df is not None:
                     return df
-        return orig_create(data, schema, **kwargs)
+        return orig_create(data, schema, *args, **kwargs)
 
     s.createDataFrame = fast_create
     yield s

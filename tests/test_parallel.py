@@ -115,3 +115,30 @@ def test_arrow_local_frame_exact_and_local(spark):
     # timestamps are excluded (host-zone vs UTC naive-datetime
     # semantics differ between the RDD and Arrow paths)
     assert arrow_local_frame(spark, [(1,)], "ts timestamp") is None
+
+
+def test_arrow_local_frame_wrong_arity_falls_back_and_raises(spark):
+    """A row shorter or longer than the schema must not be NULL-filled
+    or cut by the Arrow path: it falls back to the RDD path, which
+    raises. The fixture's createDataFrame takes the same route and
+    passes extra positional arguments through to Spark."""
+    import pytest
+
+    from blackroad_data_pipeline_spark.operators.parallel import (
+        arrow_local_frame,
+        lit_frame,
+    )
+
+    schema = "a long, b string"
+    mismatch = "FIELD_STRUCT_LENGTH_MISMATCH"
+    for rows in ([(1,), (2, "b")], [(1, "a", 3)]):
+        assert arrow_local_frame(spark, rows, schema) is None
+        with pytest.raises(Exception, match=mismatch):
+            lit_frame(spark, rows, schema).collect()
+        with pytest.raises(Exception, match=mismatch):
+            spark.createDataFrame(rows, schema).collect()
+    # positional samplingRatio/verifySchema reach Spark's own path
+    df = spark.createDataFrame([(1, "a")], schema, None, False)
+    assert df.collect()[0].asDict() == {"a": 1, "b": "a"}
+    assert "LocalRelation" not in \
+        df._jdf.queryExecution().optimizedPlan().toString()
