@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 import blackroad_data_pipeline_spark.llmops  # noqa: F401  (registers extension ops)
 import blackroad_data_pipeline_spark.streaming  # noqa: F401  (registers event-time ops)
 from blackroad_data_pipeline_spark.operators import apply_operator as op
-from blackroad_data_pipeline_spark.operators.parallel import lit_frame
+from blackroad_data_pipeline_spark.operators.parallel import lit_frame, overlap
 
 # Parity-subset scale knob (round 10, VERDICT r9 #6): the recall~1
 # parity pairs verify against BY-DESIGN-QUADRATIC exact oracles, so
@@ -2272,17 +2272,16 @@ def q_ann_pq_versioned(spark, sf_dir):
     # books1 (the window retrain replay) is independent of books0 and
     # of the refresh chain — train it concurrently (guide §2.6) so its
     # seed/refine jobs back-fill the chain's idle capacity (round 14)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=1) as _pool:
-        f_books1 = _pool.submit(
-            op, "pq_encode", batch, {**_PQ_CFG, "emit": "books"})
+    def _refresh_chain():
         books0 = op("pq_encode", e, {**_PQ_CFG, "emit": "books"})
-        mixed = op("model_refresh", batch,
-                   {**_PQ_CFG, "threshold": 0.0, "n_cells": 4,
-                    "cells": cells, "books": books0, "baseline": base,
-                    "store": e}, views={})
-        books1 = f_books1.result()
+        return books0, op("model_refresh", batch,
+                          {**_PQ_CFG, "threshold": 0.0, "n_cells": 4,
+                           "cells": cells, "books": books0,
+                           "baseline": base, "store": e}, views={})
+
+    (books0, mixed), books1 = overlap(
+        _refresh_chain,
+        lambda: op("pq_encode", batch, {**_PQ_CFG, "emit": "books"}))
     vbooks = (books0.withColumn("model_version", F.lit(0))
               .unionByName(books1.withColumn("model_version", F.lit(1))))
     out = op("ann_pq_versioned", e,

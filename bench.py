@@ -24,6 +24,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entry_mod
 from blackroad_data_pipeline_spark.operators import apply_operator as op
+from blackroad_data_pipeline_spark.operators.parallel import overlap
 from blackroad_data_pipeline_spark.session import get_spark
 
 N_RUNS = 3
@@ -234,33 +235,27 @@ def _incremental_ingest(s, d):
     # invocation still computes everything from the parquet inputs
     # (the checkpoints live and die inside this one timed run).
     # Old-shape numbers are kept in OPTIMIZATION_r14.md.
-    from concurrent.futures import ThreadPoolExecutor
-
     docs = _docs(s, d)
     store, kept_parts = None, []
     # within a day, the band-store write and the within-day dedup are
-    # INDEPENDENT jobs over the same batch — overlap them from a small
-    # thread pool (guide §2.6) exactly as a production ingest would;
-    # the day's bands are then reused as the against-join's batch side
-    # (`batch_bands`) so the signature kernel runs ONCE per day
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        for i in range(3):
-            day = docs.filter(f"doc_id % 3 = {i}")
-            f_bands = pool.submit(
-                lambda day=day: op("minhash_bands", day, _MINHASH_SCALE)
-                .localCheckpoint(eager=True))
-            f_kept = pool.submit(
-                lambda day=day: op("dedup_near_minhash", day,
-                                   _MINHASH_SCALE)
-                .localCheckpoint(eager=True))
-            bands, kept = f_bands.result(), f_kept.result()
-            if store is not None:
-                kept = op("dedup_near_against", kept,
-                          {**_MINHASH_SCALE, "history": store,
-                           "history_is_bands": True, "batch_bands": bands},
-                          views={}).localCheckpoint(eager=True)
-            store = bands if store is None else store.unionByName(bands)
-            kept_parts.append(kept.select("doc_id"))
+    # INDEPENDENT jobs over the same batch — overlap them (guide §2.6)
+    # exactly as a production ingest would; the day's bands are then
+    # reused as the against-join's batch side (`batch_bands`) so the
+    # signature kernel runs ONCE per day
+    for i in range(3):
+        day = docs.filter(f"doc_id % 3 = {i}")
+        bands, kept = overlap(
+            lambda: op("minhash_bands", day, _MINHASH_SCALE)
+            .localCheckpoint(eager=True),
+            lambda: op("dedup_near_minhash", day, _MINHASH_SCALE)
+            .localCheckpoint(eager=True))
+        if store is not None:
+            kept = op("dedup_near_against", kept,
+                      {**_MINHASH_SCALE, "history": store,
+                       "history_is_bands": True, "batch_bands": bands},
+                      views={}).localCheckpoint(eager=True)
+        store = bands if store is None else store.unionByName(bands)
+        kept_parts.append(kept.select("doc_id"))
     out = kept_parts[0]
     for p in kept_parts[1:]:
         out = out.unionByName(p)
@@ -271,8 +266,6 @@ def _embedding_ingest(s, d):
     embs = _embs(s, d)
     cfg = {"threshold": 0.9, "dim": 64, "n_planes": 12, "n_tables": 2}
     qcfg = {"dim": 64, "bits": 8, "bounds": [-1.0, 1.0]}
-    from concurrent.futures import ThreadPoolExecutor
-
     store, kept_parts = None, []
     # same daily-write materialization as _incremental_ingest
     # (VERDICT r13 #9): the INT8 history store is persisted per day
@@ -280,24 +273,21 @@ def _embedding_ingest(s, d):
     # subtree through the union was probe shape, not production cost.
     # The day's quantize write and within-day dedup are independent
     # jobs over the same batch — overlapped like _incremental_ingest.
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        for i in range(3):
-            day = embs.filter(f"vec_id % 3 = {i}")
-            f_q = pool.submit(
-                lambda day=day: op("quantize_embedding", day, qcfg)
-                .select("vec_id", "embedding", "q_lo", "q_hi")
-                .localCheckpoint(eager=True))
-            f_kept = pool.submit(
-                lambda day=day: op("dedup_embedding", day, cfg)
-                .localCheckpoint(eager=True))
-            q, kept = f_q.result(), f_kept.result()
-            if store is not None:
-                hist = op("dequantize_embedding", store, {"bits": 8})
-                kept = op("dedup_embedding_against", kept,
-                          {**cfg, "history": hist},
-                          views={}).localCheckpoint(eager=True)
-            store = q if store is None else store.unionByName(q)
-            kept_parts.append(kept.select("vec_id"))
+    for i in range(3):
+        day = embs.filter(f"vec_id % 3 = {i}")
+        q, kept = overlap(
+            lambda: op("quantize_embedding", day, qcfg)
+            .select("vec_id", "embedding", "q_lo", "q_hi")
+            .localCheckpoint(eager=True),
+            lambda: op("dedup_embedding", day, cfg)
+            .localCheckpoint(eager=True))
+        if store is not None:
+            hist = op("dequantize_embedding", store, {"bits": 8})
+            kept = op("dedup_embedding_against", kept,
+                      {**cfg, "history": hist},
+                      views={}).localCheckpoint(eager=True)
+        store = q if store is None else store.unionByName(q)
+        kept_parts.append(kept.select("vec_id"))
     kept_ids = kept_parts[0]
     for p in kept_parts[1:]:
         kept_ids = kept_ids.unionByName(p)

@@ -19,7 +19,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..operators.parallel import _leaf_scan_bytes, fan_out, lit_frame
+from ..operators.parallel import _leaf_scan_bytes, fan_out, lit_frame, overlap
 from ..operators.registry import register
 
 
@@ -281,7 +281,18 @@ def _ivf_centroids(df: DataFrame, config: Mapping) -> np.ndarray:
     xxhash64(id) seed the centroids (stable across runs/partitions —
     no RNG, no sort-order dependence), then ``refine`` distributed
     Lloyd iterations. Only k x dim floats ever reach the driver; the
-    per-vector assignments stay on the cluster."""
+    per-vector assignments stay on the cluster.
+
+    Deliberately NOT the exact-integer trainer (`_pq_codebooks`), for
+    two reasons. (1) On the integer contract, ivf_assign, ann_ivf and
+    knn_join(method=ivf) would have to apply the 2^53 guard and would
+    then RAISE on finite vectors they accept today — any component
+    above ~5.9 in magnitude at dim 64 and scale 1e6. (2) These means
+    are float ``avg()``, which is reduction-order sensitive: widening
+    the input moves centroids by ULPs (round 13, OPTIMIZATION_r13.md),
+    so this loop is neither fanned out nor materialized. Sharing one
+    loop would need a dtype branch at every step; two loops are
+    simpler."""
     field = config.get("field", "embedding")
     id_field = config.get("id_field", "vec_id")
     k = int(config.get("n_cells", 16))
@@ -1032,50 +1043,17 @@ def _fixed_point_guard(dim: int, scale: float) -> int:
     return int(math.sqrt(2.0 ** 53 / dim))
 
 
-def _int_centroids(qdf: DataFrame, id_col: str, k: int, refine: int,
-                   seed_order: str, dim: int, maxq: int) -> np.ndarray:
-    """semdedup's coarse quantizer, pinned to exact integer
-    arithmetic end-to-end (contrast `_ivf_centroids`, whose Lloyd
-    means are float and fine for recall-style gates but not for a
-    bit-replayable eps threshold): seeds are the k quantized vectors
-    first by xxhash64(id) (default) or by id (``seed_order: "id"`` —
-    the SQL-replayable policy), and each Lloyd round replaces a
-    non-empty cell's centroid with the TRUNCATED integer mean of its
-    members (sum div count, toward zero — Spark ``div`` and DuckDB
-    ``//`` agree). Cosine is scale-invariant, so the integer mean
-    quantizes the true mean with <=1 unit error per component and
-    keeps every later dot product exact. Empty cells keep their
-    previous centroid, like _ivf_centroids. Only k x dim longs reach
-    the driver per round."""
-    # NOT fanned out (round 13, measured): semdedup's one small
-    # training (n_cells seeds + one refine) pays more in per-task
-    # scheduling than the widened scan buys — contrast _pq_codebooks,
-    # whose multi-training consumers (model_refresh, ann_pq_versioned,
-    # the served-store builders) measurably win from fan-out.
-    order = ([F.xxhash64(F.col(id_col)), F.col(id_col)]
-             if seed_order == "hash" else [F.col(id_col)])
-    seed = qdf.orderBy(*order).limit(k).select("__q").collect()
-    # (0, dim) on an empty/all-NULL corpus — keeps every axis-1
-    # reduction well-formed; the cell kernel then simply never runs
-    cents = np.array([list(r["__q"]) for r in seed],
-                     dtype=np.int64).reshape(-1, dim)
-    for _ in range(refine):
-        assigned = qdf.select(
-            _int_assign_udf(cents, maxq)(F.col("__q")).alias("__c"),
-            F.posexplode("__q").alias("__pos", "__v"))
-        # exact int64 sums: order-insensitive, no decimal machinery.
-        # Overflow needs n_cell * maxq >= 2^63 => ~7.8e11 rows per
-        # cell at dim 64 — document, don't pay a guard job for it.
-        rows = (assigned.groupBy("__c", "__pos")
-                .agg(F.sum("__v").alias("__s"), F.count("*").alias("__n"))
-                .collect())
-        nxt = cents.copy()
-        for r in rows:
-            s, n = int(r["__s"]), int(r["__n"])
-            # truncated-toward-zero integer mean (Spark div / DuckDB //)
-            nxt[r["__c"], r["__pos"]] = (abs(s) // n) * (1 if s >= 0 else -1)
-        cents = nxt
-    return cents
+def _quantized(df: DataFrame, field: str, id_field: str,
+               scale: float) -> DataFrame:
+    """The integer trainer's input: ``__id`` and ``__q`` =
+    floor(x * scale) per component, over VALID vectors only —
+    valid_vec, not isNotNull: floor(NaN * scale) long-casts to 0 in
+    Spark (NULL in DuckDB), so a NaN component would land the vector
+    at that dimension's origin instead of excluding it (round 10)."""
+    return (df.filter(valid_vec(F.col(field)))
+            .select(F.col(id_field).alias("__id"),
+                    F.transform(F.col(field), lambda x: F.floor(
+                        x.cast("double") * F.lit(scale))).alias("__q")))
 
 
 def _int_assign_udf(cents: np.ndarray, maxq: int):
@@ -1164,9 +1142,7 @@ def op_semdedup(df: DataFrame, config: Mapping, views) -> DataFrame:
     eps = float(config.get("eps", 0.95))
     n_cells = int(config.get("n_cells", 16))
     refine = int(config.get("refine", 1))
-    seed_order = config.get("seed_order", "hash")
-    if seed_order not in ("hash", "id"):
-        raise ValueError(f"semdedup seed_order must be hash|id, got {seed_order!r}")
+    seed_order = _seed_order(config, "semdedup")
     keep = config.get("keep", "outlier")
     if keep not in ("outlier", "min_id"):
         raise ValueError(f"semdedup keep must be outlier|min_id, got {keep!r}")
@@ -1177,15 +1153,14 @@ def op_semdedup(df: DataFrame, config: Mapping, views) -> DataFrame:
         raise ValueError(f"semdedup action must be filter|flag, got {action!r}")
     maxq = _fixed_point_guard(dim, scale)
 
-    # valid_vec, not isNotNull: floor(NaN * scale) long-casts to 0 in
-    # Spark — a NaN component would silently land the vector at the
-    # origin of that dimension instead of excluding it (round-10)
-    qdf = (df.filter(valid_vec(F.col(field)))
-           .select(F.col(id_field).alias("__id"),
-                   F.transform(F.col(field), lambda x: F.floor(
-                       x.cast("double") * F.lit(scale))).alias("__q")))
-    cents = _int_centroids(qdf, "__id", n_cells, refine, seed_order,
-                           dim, maxq)
+    qdf = _quantized(df, field, id_field, scale)
+    # the m=1 case of the integer trainer, with the cosine cell kernel
+    # as its one-code array: cosine is scale-invariant, so a truncated
+    # integer mean quantizes the true mean within 1 unit per component
+    # and keeps every later dot product exact
+    cents = _pq_codebooks(
+        qdf, dim, 1, n_cells, refine, seed_order, maxq,
+        assign=lambda b, q: lambda c: F.array(_int_assign_udf(b[0], q)(c)))[0]
     assigned = qdf.withColumn(
         "__cell", _int_assign_udf(cents, maxq)(F.col("__q")))
 
@@ -1335,12 +1310,19 @@ def _pq_params(config: Mapping, op: str):
     if not 2 <= ks <= 65536:
         raise ValueError(f"{op}: ks={ks} out of range (2..65536)")
     refine = int(config.get("refine", 1))
+    seed_order = _seed_order(config, op)
+    scale = float(config.get("scale", 1e6))
+    return dim, m, ks, refine, seed_order, scale
+
+
+def _seed_order(config: Mapping, op: str) -> str:
+    """The integer trainer's seed policy: ``hash`` (xxhash64(id),
+    default) or ``id`` (the SQL-replayable one)."""
     seed_order = config.get("seed_order", "hash")
     if seed_order not in ("hash", "id"):
         raise ValueError(
             f"{op} seed_order must be hash|id, got {seed_order!r}")
-    scale = float(config.get("scale", 1e6))
-    return dim, m, ks, refine, seed_order, scale
+    return seed_order
 
 
 def _pq_guard(sub: int, scale: float) -> int:
@@ -1392,41 +1374,52 @@ def _pq_assign_udf(books: np.ndarray, maxq: int):
     return assign
 
 
-def _pq_codebooks(qdf: DataFrame, id_col: str, dim: int, m: int, ks: int,
-                  refine: int, seed_order: str, maxq: int) -> np.ndarray:
-    """Deterministic PQ training, same pinned integer contract as
-    `_int_centroids`: the ks seed ROWS (by xxhash64(id), or by id for
-    the SQL-replayable policy) are sliced into all m sub-codebooks,
-    then each Lloyd round reassigns codes (argmin exact squared-L2)
-    and replaces non-empty codewords with the truncated integer mean
-    of their members. Each round is ONE assignment scan + ONE
-    (subspace, code, position) aggregation — m * ks * sub longs to
-    the driver, never vectors."""
+def _pq_codebooks(qdf: DataFrame, dim: int, m: int, ks: int, refine: int,
+                  seed_order: str, maxq: int,
+                  assign=_pq_assign_udf) -> np.ndarray:
+    """The exact-integer Lloyd trainer behind every fixed-point model:
+    PQ books (``m`` subspaces), the model_refresh coarse quantizer
+    (``m=1``) and semdedup's cells (``m=1`` with the cosine
+    `_int_assign_udf` as ``assign``). ``qdf`` is a `_quantized` frame.
+
+    The ks seed ROWS (by xxhash64(id), or by id for the SQL-replayable
+    policy) are sliced into all m sub-codebooks; each Lloyd round
+    reassigns codes with ``assign(books, maxq)`` — a kernel over
+    ``__q`` returning the array of m per-subspace codes — and replaces
+    every non-empty codeword with the TRUNCATED integer mean of its
+    members (sum div count, toward zero — Spark ``div`` and DuckDB
+    ``//`` agree). Empty codewords keep their previous value. Each
+    round is ONE assignment scan + ONE (subspace, code, position)
+    aggregation — m * ks * sub longs to the driver, never vectors.
+    Returns (m, ks, sub) int64; (m, 0, sub) on an empty corpus."""
     sub = dim // m
-    # same adaptive-width rationale (and the same exact-integer
-    # order-independence argument) as _int_centroids
+    # Exact int64 sums do not depend on reduction order, so neither the
+    # input width nor the materialization below can move a model:
+    # widen a starved input (fan_out) and, when the training input is
+    # provably SMALL (leaf scan bytes below 1 GiB — unknown-stats
+    # inputs, e.g. already-checkpointed windows, report 0 and skip),
+    # materialize it once so the seed TakeOrdered and the refine scans
+    # read stored longs instead of re-running the interpreted
+    # per-element floor(x*scale) transform (round 14, VERDICT r13 #5).
+    # At corpus scale training streams.
     qdf = fan_out(qdf)
-    # Training reads the quantized frame twice per round plus once for
-    # the seed TakeOrdered, and every pass re-runs the upstream
-    # interpreted per-element floor(x*scale) transform. When the
-    # training input is provably SMALL (leaf scan bytes below 1 GiB —
-    # the scale-adaptive gate; unknown-stats inputs, e.g. already-
-    # checkpointed windows, report 0 and skip), materialize it once so
-    # seed and refine scan stored longs instead (round 14, VERDICT
-    # r13 #5). At corpus scale training streams exactly as before.
     if 0 < _leaf_scan_bytes(qdf) < (1 << 30):
         qdf = qdf.localCheckpoint(eager=True)
-    order = ([F.xxhash64(F.col(id_col)), F.col(id_col)]
-             if seed_order == "hash" else [F.col(id_col)])
+    order = ([F.xxhash64(F.col("__id")), F.col("__id")]
+             if seed_order == "hash" else [F.col("__id")])
     seed = qdf.orderBy(*order).limit(ks).select("__q").collect()
     books = np.array([list(r["__q"]) for r in seed],
                      dtype=np.int64).reshape(len(seed), m, sub)
     books = np.ascontiguousarray(books.transpose(1, 0, 2))  # (m, ks, sub)
     for _ in range(refine):
         assigned = qdf.select(
-            _pq_assign_udf(books, maxq)(F.col("__q")).alias("__codes"),
+            assign(books, maxq)(F.col("__q")).alias("__codes"),
             F.posexplode("__q").alias("__pos", "__v"))
         j = F.expr(f"__pos div {sub}").cast("int")
+        # exact int64 sums: order-insensitive, no decimal machinery.
+        # Overflow needs n * maxq >= 2^63 — over 5e11 members of one
+        # codeword at dim 64 under either guard — document, don't pay
+        # a guard job for it.
         rows = (assigned
                 .select(j.alias("__j"),
                         (F.col("__pos") % sub).alias("__p"),
@@ -1508,15 +1501,8 @@ def op_pq_encode(df: DataFrame, config: Mapping, views) -> DataFrame:
                 f"pq_encode: |books codeword| exceeds {maxq} — model "
                 "was trained at an incompatible scale")
     else:
-        # valid_vec: a NaN component floors to a garbage long in
-        # Spark (NULL in DuckDB) — invalid vectors neither train nor
-        # encode (round-10 contract)
-        qdf = (df.filter(valid_vec(F.col(field)))
-               .select(F.col(id_field).alias("__id"),
-                       F.transform(F.col(field), lambda x: F.floor(
-                           x.cast("double") * F.lit(scale))).alias("__q")))
-        books = _pq_codebooks(qdf, "__id", dim, m, ks, refine,
-                              seed_order, maxq)
+        books = _pq_codebooks(_quantized(df, field, id_field, scale),
+                              dim, m, ks, refine, seed_order, maxq)
     if emit == "books":
         return _books_df(df.sparkSession, books)
     if books.size == 0:
@@ -1620,14 +1606,9 @@ def op_ann_pq(df: DataFrame, config: Mapping, views) -> DataFrame:
     else:
         # train ONCE, reuse the books for both the encode kernel and
         # the probe's distance tables (encoding via op_pq_encode would
-        # run a second identical training pass). valid_vec, not
-        # isNotNull: NaN/Inf components floor to garbage longs.
-        qdf = (df.filter(valid_vec(F.col(field)))
-               .select(F.col(id_field).alias("__id"),
-                       F.transform(F.col(field), lambda x: F.floor(
-                           x.cast("double") * F.lit(scale))).alias("__q")))
-        books = _pq_codebooks(qdf, "__id", dim, m, ks, refine,
-                              seed_order, maxq)
+        # run a second identical training pass)
+        books = _pq_codebooks(_quantized(df, field, id_field, scale),
+                              dim, m, ks, refine, seed_order, maxq)
     if books.size == 0:
         # empty / all-NULL corpus with a config["probe"] (the probe_id
         # path early-returns above before training) — ADVICE r9
@@ -2019,26 +2000,19 @@ def op_model_refresh(df: DataFrame, config: Mapping, views) -> DataFrame:
 
     # 3. retrain on the window (pinned integer discipline — the
     # refresh is bit-replayable end to end)
-    qbatch = (df.filter(valid_vec(F.col(field)))
-              .select(F.col(id_field).alias("__id"),
-                      F.transform(F.col(field), lambda x: F.floor(
-                          x.cast("double") * F.lit(scale))).alias("__q")))
     # the retrain window is a frozen snapshot — materialize it once
     # (bounded by the window size, which production persists anyway)
     # and run the two INDEPENDENT trainings (fine books + coarse
     # quantizer) concurrently: their seed/refine jobs overlap instead
     # of serializing four scans (guide §2.6; round 14)
-    from concurrent.futures import ThreadPoolExecutor
-
-    qbatch = fan_out(qbatch).localCheckpoint(eager=True)
+    qbatch = fan_out(_quantized(df, field, id_field, scale)) \
+        .localCheckpoint(eager=True)
     maxq_coarse = _pq_guard(dim, scale)
-    with ThreadPoolExecutor(max_workers=2) as _pool:
-        f_books = _pool.submit(_pq_codebooks, qbatch, "__id", dim, m,
-                               ks, refine, seed_order, maxq_pq)
-        f_cells = _pool.submit(_pq_codebooks, qbatch, "__id", dim, 1,
-                               n_cells, refine, seed_order, maxq_coarse)
-        books_new = f_books.result()
-        qc_new = f_cells.result()[0]
+    books_new, qc_new = overlap(
+        lambda: _pq_codebooks(qbatch, dim, m, ks, refine, seed_order,
+                              maxq_pq),
+        lambda: _pq_codebooks(qbatch, dim, 1, n_cells, refine,
+                              seed_order, maxq_coarse)[0])
     if books_new.size == 0:
         raise ValueError("model_refresh: the drifted window has no "
                          "valid vectors to retrain on")

@@ -76,23 +76,37 @@ def _warn_once(key: str, msg: str, *args) -> None:
         log.warning(msg, *args)
 
 
-def _knob_width() -> int | None:
-    """SPARK_GRAFT_KERNEL_FANOUT parsed defensively: ``None`` when
-    unset or malformed (ADVICE r13 — a bad value must not raise inside
-    every kernel operator), else the non-negative int."""
-    raw = os.environ.get("SPARK_GRAFT_KERNEL_FANOUT", "")
+def _env_int(name: str) -> int | None:
+    """Integer knob ``name`` parsed defensively: ``None`` when unset or
+    malformed (ADVICE r13 — a bad value must not raise inside every
+    operator that reads it; it is ignored with a one-time warning),
+    else the non-negative int (``0`` is the knob's "disabled")."""
+    raw = os.environ.get(name, "")
     if not raw:
         return None
     try:
         v = int(raw.strip())
-        if v < 0:
-            raise ValueError(raw)
-        return v
     except ValueError:
-        _warn_once(f"knob:{raw}",
-                   "ignoring malformed SPARK_GRAFT_KERNEL_FANOUT=%r "
-                   "(expected an int >= 0); using the default width", raw)
-        return None
+        v = -1
+    if v >= 0:
+        return v
+    _warn_once(f"{name}:{raw}", "ignoring malformed %s=%r (expected an "
+               "int >= 0); using the default", name, raw)
+    return None
+
+
+def overlap(*thunks):
+    """Run INDEPENDENT driver-side thunks concurrently, one thread
+    each, and return their results in argument order. Each thunk
+    typically launches its own Spark jobs (two trainings, a write and
+    a dedup over the same frozen batch), so the jobs share the
+    executors instead of serializing (guide §2.6). All thunks finish
+    before the first failure re-raises."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
+        futures = [pool.submit(t) for t in thunks]
+        return [f.result() for f in futures]
 
 
 def _leaf_scan_bytes(df: DataFrame) -> int:
@@ -121,7 +135,7 @@ def fan_out(df: DataFrame, max_width: int | None = None) -> DataFrame:
     already carries enough tasks. Streaming inputs are returned
     unchanged (their micro-batch partitioning is owned by the
     source)."""
-    knob = _knob_width()
+    knob = _env_int("SPARK_GRAFT_KERNEL_FANOUT")
     if knob == 0:
         return df
     if df.isStreaming:
@@ -272,16 +286,7 @@ def pin_width(spark: SparkSession) -> int | None:
     task overhead on RE-EXECUTED kernel subtrees, while pins apply to
     terminal CPU-bound stages that run once and want every core.
     """
-    raw = os.environ.get("SPARK_GRAFT_WIDTH_PIN", "")
-    if raw:
-        try:
-            v = int(raw.strip())
-            if v < 0:
-                raise ValueError(raw)
-            return None if v == 0 else v
-        except ValueError:
-            _warn_once(f"pin:{raw}",
-                       "ignoring malformed SPARK_GRAFT_WIDTH_PIN=%r "
-                       "(expected an int >= 0); pinning to session "
-                       "parallelism", raw)
-    return spark.sparkContext.defaultParallelism
+    v = _env_int("SPARK_GRAFT_WIDTH_PIN")
+    if v == 0:
+        return None
+    return v or spark.sparkContext.defaultParallelism

@@ -16,6 +16,7 @@ from collections.abc import Mapping
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.parallel import overlap
 from ..operators.registry import register
 
 # Guards the set-conf -> start -> restore-conf window in
@@ -667,8 +668,6 @@ def run_stream_vector_ingest(df: DataFrame, path: str, checkpoint: str,
             # batch — overlap them (guide §2.6, the model_refresh
             # pattern); each training is self-contained and exact
             # integer Lloyd sums are reduction-order independent.
-            from concurrent.futures import ThreadPoolExecutor
-
             def _train_books():
                 op("pq_encode", kept, {**pq_cfg, "emit": "books"}) \
                     .write.mode("overwrite").parquet(f"{model_dir}/books")
@@ -678,9 +677,7 @@ def run_stream_vector_ingest(df: DataFrame, path: str, checkpoint: str,
                    {**pq_cfg, "n_cells": n_cells, "emit": "cells"}) \
                     .write.mode("overwrite").parquet(f"{model_dir}/cells")
 
-            with ThreadPoolExecutor(max_workers=2) as _pool:
-                fb, fc = _pool.submit(_train_books), _pool.submit(_train_cells)
-                fb.result(), fc.result()
+            overlap(_train_books, _train_cells)
             books, cells = _read("books"), _read("cells")
 
         store = None

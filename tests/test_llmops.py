@@ -490,10 +490,20 @@ def _semdedup_model(rows, dim, eps, n_cells, refine=1, keep="outlier",
             for j, i in enumerate(ids)}
 
 
-def test_semdedup_matches_python_model(spark):
+# input partitionings the integer trainer must be invariant to: the
+# file as read, one partition, and wider than the session
+_PARTS = pytest.mark.parametrize(
+    "parts", [None, 1, 7], ids=["as_read", "repartition1", "repartition7"])
+
+
+@_PARTS
+def test_semdedup_matches_python_model(spark, parts):
     """Cells and drop decisions on the sf0.001 corpus must equal the
-    driver-side replay of the pinned fixed-point contract."""
+    driver-side replay of the pinned fixed-point contract, at any
+    input partitioning."""
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    if parts:
+        e = e.repartition(parts)
     rows = [(r["vec_id"], list(r["embedding"])) for r in e.collect()]
     want = _semdedup_model(rows, dim=64, eps=0.3, n_cells=3, refine=2)
     got = {r["vec_id"]: (r["semdedup_cell"], r["is_dup"]) for r in
@@ -1911,10 +1921,14 @@ def _pq_model(rows, dim, m, ks, refine=1, scale=1e6):
     return {int(i): list(map(int, c)) for i, c in zip(ids, assign(books))}
 
 
-def test_pq_encode_matches_python_model(spark):
+@_PARTS
+def test_pq_encode_matches_python_model(spark, parts):
     """Codes on the sf0.001 corpus must equal the driver-side replay
-    of the pinned fixed-point contract (argmin L2, Lloyd means)."""
+    of the pinned fixed-point contract (argmin L2, Lloyd means), at
+    any input partitioning."""
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    if parts:
+        e = e.repartition(parts)
     rows = [(r["vec_id"], list(r["embedding"])) for r in e.collect()]
     want = _pq_model(rows, dim=64, m=8, ks=4, refine=2)
     got = {r["vec_id"]: list(r["pq_code"]) for r in

@@ -4,17 +4,19 @@ The helper must (1) widen an input that has fewer partitions than the
 session's default parallelism, (2) be a NO-OP on an input that is
 already at least that wide — the at-scale case, so production plans
 never gain an exchange — (3) honor the SPARK_GRAFT_KERNEL_FANOUT
-knob (0 = off, N = fixed width), and (4) never change operator
-output (the winnow Arrow kernel is the heaviest consumer — its
-fingerprint set must be partitioning-invariant).
+knob (0 = off, N = fixed width; SPARK_GRAFT_WIDTH_PIN shares its
+parser), and (4) never change operator output (the winnow Arrow
+kernel is the heaviest consumer — its fingerprint set must be
+partitioning-invariant).
 """
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from blackroad_data_pipeline_spark.operators import apply_operator as op
-from blackroad_data_pipeline_spark.operators.parallel import fan_out
+from blackroad_data_pipeline_spark.operators.parallel import fan_out, pin_width
 
 SF = "/root/testdata/sf0.001"
 
@@ -36,12 +38,32 @@ def test_fan_out_noop_on_wide_input(spark, monkeypatch):
     assert out is wide  # not just same width — the same plan object
 
 
-def test_fan_out_knob_disables_and_pins(spark, monkeypatch):
+@pytest.mark.parametrize("knob", ["SPARK_GRAFT_KERNEL_FANOUT",
+                                  "SPARK_GRAFT_WIDTH_PIN"])
+def test_knob_disables_pins_and_ignores_malformed(spark, monkeypatch,
+                                                  caplog, knob):
+    """Both width knobs share one parser: ``0`` disables, ``N`` pins
+    that width, and a malformed value is ignored (the default applies)
+    with ONE warning — it must never raise inside an operator."""
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    monkeypatch.setenv("SPARK_GRAFT_KERNEL_FANOUT", "0")
-    assert fan_out(docs) is docs
-    monkeypatch.setenv("SPARK_GRAFT_KERNEL_FANOUT", "5")
-    assert fan_out(docs).rdd.getNumPartitions() == 5
+    default = spark.sparkContext.defaultParallelism
+    if knob == "SPARK_GRAFT_KERNEL_FANOUT":
+        def width():
+            out = fan_out(docs)
+            return None if out is docs else out.rdd.getNumPartitions()
+        default = min(default, 8)
+    else:
+        def width():
+            return pin_width(spark)
+    monkeypatch.setenv(knob, "0")
+    assert width() is None
+    monkeypatch.setenv(knob, "5")
+    assert width() == 5
+    for bad in ("five", "-3", "five"):
+        monkeypatch.setenv(knob, bad)
+        assert width() == default
+    warned = [r.getMessage() for r in caplog.records if knob in r.getMessage()]
+    assert len(warned) == 2 and all("malformed" in w for w in warned)
 
 
 def test_winnow_output_partitioning_invariant(spark, monkeypatch):

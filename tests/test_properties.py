@@ -15,6 +15,7 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from blackroad_data_pipeline_spark.operators import apply_operator as op
@@ -1185,3 +1186,79 @@ def test_time_resample_matches_grid_model(spark, rows, step, fill):
                 want[(k, b)] = n
                 last = n
     assert got == want
+
+
+# Arrow-vs-RDD literal frames: column kinds lit_frame may see. The
+# Arrow-safe atoms (nested in arrays and structs too) must round-trip
+# exactly; timestamps must make the Arrow path decline.
+_LIT_COLUMNS = {
+    "int": st.integers(-2**31, 2**31 - 1),
+    "bigint": st.integers(-2**63, 2**63 - 1),
+    "double": st.floats(),
+    "float": st.floats(width=32),
+    "string": st.text(max_size=4),
+    "boolean": st.booleans(),
+    "binary": st.binary(max_size=3).map(bytearray),
+    "date": st.dates(),
+    "array<double>": st.lists(st.one_of(st.none(), st.floats()), max_size=3),
+    "struct<x:bigint,y:string>": st.one_of(
+        st.builds(lambda x, y: Row(x=x, y=y),
+                  st.integers(-2**63, 2**63 - 1), st.text(max_size=3)),
+        st.tuples(st.integers(-5, 5), st.text(max_size=3))),
+    "timestamp": st.datetimes(),
+}
+
+
+@st.composite
+def _lit_case(draw):
+    """A schema over 1-4 column kinds plus rows for it; some rows get
+    one value too few or too many, some are top-level ``Row``s."""
+    kinds = draw(st.lists(st.sampled_from(sorted(_LIT_COLUMNS)),
+                          min_size=1, max_size=4, unique=True))
+    names = [f"c{i}" for i in range(len(kinds))]
+    schema = ", ".join(f"{n} {k}" for n, k in zip(names, kinds))
+    rows = []
+    for _ in range(draw(st.integers(0, 6))):
+        vals = [draw(st.one_of(st.none(), _LIT_COLUMNS[k])) for k in kinds]
+        shape = draw(st.sampled_from(
+            ["tuple"] * 6 + ["row", "short", "long"]))
+        if shape == "row":
+            rows.append(Row(**dict(zip(names, vals))))
+        elif shape == "short":
+            rows.append(tuple(vals[:-1]))
+        elif shape == "long":
+            rows.append(tuple(vals) + (draw(st.integers()),))
+        else:
+            rows.append(tuple(vals))
+    return rows, schema
+
+
+def _same_value(a, b) -> bool:
+    """Exact equality that also tells NaN == NaN and -0.0 != 0.0."""
+    if isinstance(a, float) and isinstance(b, float):
+        return (math.isnan(a) and math.isnan(b)) or (
+            a == b and math.copysign(1, a) == math.copysign(1, b))
+    if isinstance(a, (tuple, list)) and isinstance(b, (tuple, list)):
+        return len(a) == len(b) and all(map(_same_value, a, b))
+    return type(a) is type(b) and a == b
+
+
+@given(case=_lit_case())
+@settings(**{**SETTINGS, "max_examples": 40})
+def test_arrow_local_frame_matches_rdd_path_or_declines(spark, case):
+    """For any literal rows, ``arrow_local_frame`` either declines
+    (``None`` — lit_frame then takes the RDD path) or builds a frame
+    whose ``collect()`` equals the RDD path's. Wrong-arity rows must
+    decline, since the RDD path raises on them."""
+    from blackroad_data_pipeline_spark.operators.parallel import (
+        arrow_local_frame,
+    )
+
+    rows, schema = case
+    fast = arrow_local_frame(spark, rows, schema)
+    if fast is None:
+        return
+    ref = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2),
+                                schema)
+    assert fast.schema == ref.schema
+    assert _same_value(fast.collect(), ref.collect())
