@@ -769,11 +769,91 @@ def op_similarity_join(df: DataFrame, config: Mapping, views) -> DataFrame:
 def op_dedup_embedding(df: DataFrame, config: Mapping, views) -> DataFrame:
     """Embedding-cosine near-dedup: drop rows whose embedding is
     within threshold of a smaller-id row (same greedy policy as
-    dedup_near_minhash)."""
+    dedup_near_minhash).
+
+    With ``history`` (and ``history_field`` / ``history_id_field``, as
+    in dedup_embedding_against) a row is also dropped when it is within
+    threshold of any valid history row: rows order by (is_batch, id),
+    and a batch row loses to every earlier row. That is exactly
+    ``dedup_embedding_against(dedup_embedding(df), history)`` — the
+    history test of a row never depends on which batch rows survive —
+    in ONE LSH pass instead of the within-batch self-join re-running
+    under each of the against-join's consumers: one bucket kernel over
+    batch ∪ history, one (table, bucket) join of batch rows against all
+    rows, one pair-dot verification and one anti-join. Same
+    hyperplanes, float64 kernels and double norms, so the same rows
+    survive. Pairs verify like the two-step form: candidates are
+    (id, id) pairs and every row carrying those ids is checked, except
+    that single-table (``n_tables: 1``) batch×batch pairs verify only
+    rows that share the bucket (similarity_join's single-table path);
+    that check reads each row's bucket back, so the single-table form
+    runs the bucket kernel a second time."""
     id_field = config.get("id_field", "vec_id")
-    pairs = op_similarity_join(df, config, views)
-    losers = pairs.select(F.col("id_b").alias(id_field)).dropDuplicates()
-    return df.join(losers, id_field, "left_anti")
+    if config.get("history") is None:
+        pairs = op_similarity_join(df, config, views)
+        losers = pairs.select(F.col("id_b").alias(id_field)).dropDuplicates()
+        return df.join(losers, id_field, "left_anti")
+
+    field = config.get("field", "embedding")
+    threshold = float(config.get("threshold", 0.9))
+    dim = int(config.get("dim", 64))
+    n_planes = int(config.get("n_planes", 12))
+    n_tables = int(config.get("n_tables", 1))
+    seed = int(config.get("seed", 42))
+    history = config["history"]
+    if isinstance(history, str):
+        history = views[history]
+    h_field = config.get("history_field", field)
+    h_id = config.get("history_id_field", id_field)
+
+    # invalid vectors and NULL ids never take part (the two-step form
+    # can never join them to a verified pair either; dropping NULL ids
+    # up front also keeps the anti-join's inferred isnotnull(id) from
+    # being pushed under one join side's exchange); a union column
+    # wider on one side (array<float> batch, dequantized array<double>
+    # history) widens exactly, so the float64 kernels see the same values
+    rows = (df.filter(valid_vec(F.col(field)))
+            .select(F.col(id_field).alias("__id"),
+                    F.lit(True).alias("__isb"),
+                    F.col(field).alias("__emb"))
+            .union(history.filter(valid_vec(F.col(h_field)))
+                   .select(F.col(h_id).alias("__id"),
+                           F.lit(False).alias("__isb"),
+                           F.col(h_field).alias("__emb")))
+            .filter(F.col("__id").isNotNull()))
+    sides = rows.withColumn("__norm", _norm_of(F.col("__emb")))
+    multi = _multi_bucket_udf(dim, n_planes, seed, n_tables)
+    # one exchange feeds both join sides (ReuseExchange), so the kernel
+    # runs once; no filter on the side flag may sit between the two
+    # (it would be pushed under the exchange and split it), hence the
+    # CASE form of "the other row orders first"
+    e = (sides.select("__id", "__isb", "__emb", "__norm",
+                      F.posexplode(multi(F.col("__emb")))
+                      .alias("__tbl", "__bkt"))
+         .repartition("__tbl", "__bkt"))
+
+    def side(frame, p):
+        return frame.select(*[F.col(c).alias(f"__{p}{c[2:]}")
+                              for c in frame.columns])
+
+    cands = (side(e, "b").join(side(e, "o"),
+                               (F.col("__btbl") == F.col("__otbl"))
+                               & (F.col("__bbkt") == F.col("__obkt")))
+             .filter(F.when(~F.col("__oisb"), F.col("__bisb")).otherwise(
+                 F.col("__bisb") & (F.col("__oid") < F.col("__bid"))))
+             .select("__bid", "__bisb", "__oid", "__oisb")
+             .dropDuplicates())
+    att = e if n_tables <= 1 else sides
+    hit = (_pair_dot_udf(F.col("__bemb"), F.col("__oemb"))
+           / (F.col("__bnorm") * F.col("__onorm")) >= threshold)
+    if n_tables <= 1:
+        hit = hit & (~F.col("__oisb") | (F.col("__bbkt") == F.col("__obkt")))
+    hits = (cands.join(side(att, "b"), ["__bid", "__bisb"])
+            .join(side(att, "o"), ["__oid", "__oisb"])
+            .filter(hit)
+            .select(F.col("__bid").alias(id_field))
+            .dropDuplicates())
+    return df.join(hits, id_field, "left_anti")
 
 
 @register("dedup_embedding_groups")

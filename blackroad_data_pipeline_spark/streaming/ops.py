@@ -544,10 +544,10 @@ def run_stream_vector_ingest(df: DataFrame, path: str, checkpoint: str,
        vectors never enter the store — `vector_health` is the audit
        of what this drops),
     2. near-dedups the micro-batch within itself (greedy
-       dedup_embedding) and then against the PERSISTED history —
-       consumed as int8 codes dequantized on the fly (4x narrower
-       I/O; the bucketed dedup_embedding_against join never re-reads
-       raw fp32 history),
+       dedup_embedding) and against the PERSISTED history in one LSH
+       pass (dedup_embedding with ``history``) — history consumed as
+       int8 codes dequantized on the fly (4x narrower I/O; the
+       bucketed join never re-reads raw fp32 history),
     3. bootstraps the PQ codebooks and IVF coarse quantizer from the
        FIRST batch and persists them (`model_path`/books, /cells);
        every later batch serves the FROZEN models, so pq codes and
@@ -624,7 +624,6 @@ def run_stream_vector_ingest(df: DataFrame, path: str, checkpoint: str,
             model_ver, model_dir = None, model_path
 
         batch = batch.filter(valid_vec(F.col(field)))
-        kept = op("dedup_embedding", batch, dd_cfg)
 
         def _read(sub):
             try:
@@ -637,15 +636,16 @@ def run_stream_vector_ingest(df: DataFrame, path: str, checkpoint: str,
 
         books = _read("books")
         cells = _read("cells")
-        dedup_done = False
-        if books is None or cells is None:
-            # the bootstrap branch consumes the within-batch dedup
-            # FOUR times (guard count, two trainings, the post-branch
-            # checkpoint) — materialize it once up front instead of
-            # re-running the LSH dedup subtree per consumer (the
-            # iterative-loop discipline; round 14)
-            kept = kept.localCheckpoint(eager=True)
-            dedup_done = True
+        bootstrap = books is None or cells is None
+        if bootstrap:
+            # the models train on the within-batch survivors, which
+            # the bootstrap consumes up to four times (guard count, two
+            # trainings, the encode or history dedup below) —
+            # materialize them once instead of re-running the LSH
+            # dedup subtree per consumer (the iterative-loop
+            # discipline; round 14)
+            batch = op("dedup_embedding", batch, dd_cfg).localCheckpoint(
+                eager=True)
             # Bootstrap GUARD: freezing books/cells from an empty or
             # near-empty first drain persists degenerate models, after
             # which pq_encode's empty-books path NULL-codes every later
@@ -653,7 +653,7 @@ def run_stream_vector_ingest(df: DataFrame, path: str, checkpoint: str,
             # drain fails UNCOMMITTED, so nothing is lost; re-run the
             # ingest once enough bootstrap data is queued, or lower
             # ``min_train``).
-            n_valid = kept.count()
+            n_valid = batch.count()
             if n_valid < min_train:
                 raise ValueError(
                     f"vector-ingest bootstrap: first batch has "
@@ -669,18 +669,18 @@ def run_stream_vector_ingest(df: DataFrame, path: str, checkpoint: str,
             # pattern); each training is self-contained and exact
             # integer Lloyd sums are reduction-order independent.
             def _train_books():
-                op("pq_encode", kept, {**pq_cfg, "emit": "books"}) \
+                op("pq_encode", batch, {**pq_cfg, "emit": "books"}) \
                     .write.mode("overwrite").parquet(f"{model_dir}/books")
 
             def _train_cells():
-                op("ivf_assign", kept,
+                op("ivf_assign", batch,
                    {**pq_cfg, "n_cells": n_cells, "emit": "cells"}) \
                     .write.mode("overwrite").parquet(f"{model_dir}/cells")
 
             overlap(_train_books, _train_cells)
             books, cells = _read("books"), _read("cells")
 
-        store = None
+        store = hist = None
         try:
             store = (spark.read.parquet(path_)
                      .filter(F.col("__ingest_batch") != F.lit(batch_id)))
@@ -689,19 +689,24 @@ def run_stream_vector_ingest(df: DataFrame, path: str, checkpoint: str,
             if cond != "PATH_NOT_FOUND" and "PATH_NOT_FOUND" not in str(e):
                 raise
         if store is not None:
+            # array_repeat folds to the same literal bounds array as a
+            # dim-wide F.array of literals, in one py4j call
             hist = store.select(
                 id_field,
                 F.col("q_emb").alias(field),
-                F.array(*[F.lit(lo)] * dim).alias("q_lo"),
-                F.array(*[F.lit(hi)] * dim).alias("q_hi"))
+                F.array_repeat(F.lit(lo), dim).alias("q_lo"),
+                F.array_repeat(F.lit(hi), dim).alias("q_hi"))
             hist = op("dequantize_embedding", hist,
                       {"bits": bits, "field": field})
-            kept = op("dedup_embedding_against", kept,
-                      {**dd_cfg, "history": hist}, views={})
-            dedup_done = False  # the against-join extended the plan
-
-        if not dedup_done:
-            kept = kept.localCheckpoint(eager=True)  # compute the dedup ONCE
+        if bootstrap and hist is None:
+            kept = batch  # deduped and materialized above
+        else:
+            # ONE LSH pass does the within-batch and the against-history
+            # dedup (re-running the within-batch step over bootstrap
+            # survivors drops nothing); materialized once so the three
+            # encode steps below do not each recompute it
+            kept = op("dedup_embedding", batch,
+                      {**dd_cfg, "history": hist}).localCheckpoint(eager=True)
         q = op("quantize_embedding", kept,
                {"dim": dim, "bits": bits, "bounds": [lo, hi],
                 "field": field, "as": "q_emb"})

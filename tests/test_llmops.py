@@ -1586,6 +1586,114 @@ def test_embedding_incremental_ingest_end_to_end(spark):
     assert [r[0] for r in sorted(inc_rows, key=lambda t: -t[1])][0] == 202
 
 
+@pytest.mark.parametrize("n_tables", [1, 8])
+def test_dedup_embedding_history_matches_two_step(spark, n_tables):
+    """dedup_embedding with ``history`` (one LSH pass over batch ∪
+    history) keeps exactly the rows of the two-step
+    dedup_embedding_against(dedup_embedding(batch), history).
+
+    Besides random rows and planted near-copies, the corpus plants the
+    cases where the two steps verify different row pairs, found with
+    the operator's own hyperplanes: a duplicated batch id whose second
+    vector is a near-copy of a smaller id but shares no bucket with it
+    while its first vector does (single-table within-batch pairs verify
+    only the colliding rows, so the id survives there), and duplicated
+    ids on either side of a history pair (against-pairs verify every
+    row of both ids, so the near-copy that shares no bucket still
+    drops its id). Also: ids shared between batch and history,
+    NULL/NaN/empty vectors and a NULL id on both sides, exact copies,
+    an array<double> history against an array<float> batch, and an
+    empty history."""
+    import numpy as np
+
+    from blackroad_data_pipeline_spark.llmops.similarity import _hyperplanes
+
+    dim, n_planes, seed, thr = 8, 4, 42, 0.9
+    cfg = {"threshold": thr, "dim": dim, "n_planes": n_planes,
+           "n_tables": n_tables, "seed": seed}
+    planes = np.vstack([_hyperplanes(dim, n_planes, seed + t)
+                        for t in range(n_tables)])
+    rng = np.random.RandomState(5)
+
+    def f32(v):
+        return [float(x) for x in np.asarray(v, dtype=np.float32)]
+
+    def keys(v):
+        bits = (np.asarray(v, dtype=np.float64) @ planes.T > 0)
+        return set(enumerate(bits.reshape(n_tables, n_planes)
+                             .astype(np.int64) @ (1 << np.arange(n_planes))))
+
+    def cos(a, b):
+        a, b = np.asarray(a, np.float64), np.asarray(b, np.float64)
+        return a @ b / np.sqrt((a @ a) * (b @ b))
+
+    def rand():
+        return rng.randn(dim)
+
+    def planted():
+        """(w, near, far): ``near`` is a near-copy of w in no bucket
+        of w, ``far`` shares a bucket with w and is far from it."""
+        for _ in range(100000):
+            w = f32(rand())
+            near = f32(np.asarray(w) + 0.35 * rand())
+            if cos(near, w) >= 0.93 and not keys(near) & keys(w):
+                break
+        else:
+            raise AssertionError("no near-copy outside w's buckets")
+        for _ in range(100000):
+            far = f32(rand())
+            if keys(far) & keys(w) and cos(far, w) < 0.5:
+                return w, near, far
+        raise AssertionError("no far vector in w's buckets")
+
+    hist = [(i, f32(rand())) for i in range(1, 31)]
+    batch = [(100 + i, f32(rand())) for i in range(30)]
+    batch += [(140 + i, f32(np.asarray(hist[i][1]) + 0.05 * rand()))
+              for i in range(6)]                      # near history
+    batch += [(150 + i, f32(np.asarray(batch[i][1]) + 0.05 * rand()))
+              for i in range(6)]                      # near smaller batch id
+    batch += [(160, hist[7][1]), (161, batch[9][1])]  # exact copies
+    batch += [(3, f32(np.asarray(hist[2][1]) + 0.02 * rand())),  # shared id
+              (4, f32(rand()))]                       # shared id, unrelated
+    w, near, far = planted()
+    batch += [(200, w), (201, far), (201, near)]
+    w, near, far = planted()
+    hist += [(50, far), (50, near)]
+    batch += [(210, w)]
+    w, near, far = planted()
+    hist += [(51, w)]
+    batch += [(220, far), (220, near)]
+    nan = float("nan")
+    batch += [(230, None), (231, [nan] * dim), (232, []),
+              (None, hist[4][1])]
+    hist += [(60, None), (61, [nan] * dim), (62, []),
+             (None, batch[12][1]), (63, batch[13][1])]
+
+    bdf = spark.createDataFrame(batch, "vec_id long, embedding array<float>")
+    hdf = spark.createDataFrame(hist, "vec_id long, embedding array<double>")
+
+    def rows(df):
+        return sorted(repr(tuple(r)) for r in df.collect())
+
+    def ids(df):
+        return {r["vec_id"] for r in df.collect()}
+
+    for hframe in (hdf, hdf.limit(0)):
+        fused = op("dedup_embedding", bdf, {**cfg, "history": hframe},
+                   views={})
+        two_step = op("dedup_embedding_against",
+                      op("dedup_embedding", bdf, cfg),
+                      {**cfg, "history": hframe}, views={})
+        assert rows(fused) == rows(two_step)
+    kept = ids(fused)  # empty history: the within-batch decisions only
+    assert kept.isdisjoint({150, 151, 161})
+    assert (201 in kept) == (n_tables == 1)
+    kept = ids(op("dedup_embedding", bdf, {**cfg, "history": hdf},
+                  views={}))
+    assert kept.isdisjoint({140, 160, 3, 210, 220})
+    assert {4, 200, 230, 231, 232, None} <= kept
+
+
 # -- pagerank --------------------------------------------------------------
 
 

@@ -735,6 +735,34 @@ def test_embedding_ingest_history_stays_int8(no_aqe):
     assert plans.shuffle_exchange_count(df) <= 8, plans.explain_text(df)
 
 
+def test_embedding_dedup_with_history_is_one_lsh_pass(no_aqe):
+    """The vector-ingest drain's dedup (dedup_embedding with
+    ``history``) is one LSH pass: exactly two Arrow Python nodes — ONE
+    bucket kernel over batch ∪ history (both sides of the (table,
+    bucket) join read one exchange) and ONE pair-dot — where the
+    two-step dedup_embedding_against(dedup_embedding(batch)) plans the
+    within-batch self-join under every consumer. Still bucketed: no
+    cartesian / nested-loop join, no row-at-a-time Python."""
+    import re
+
+    spark = no_aqe
+    batch = _embs(spark)
+    store = op("quantize_embedding", batch,
+               {"dim": 64, "bits": 8, "bounds": [-4.0, 4.0]}).select(
+        "vec_id", "embedding", "q_lo", "q_hi")
+    hist = op("dequantize_embedding", store, {"bits": 8})
+    df = op("dedup_embedding", batch,
+            {"history": hist, "threshold": 0.9, "dim": 64,
+             "n_planes": 2, "n_tables": 8}, views={})
+    text = plans.explain_text(df)
+    plans.assert_no_cartesian(df)
+    assert "BroadcastNestedLoopJoin" not in text, text
+    plans.assert_no_row_python(df)
+    kernels = re.findall(r"^\(\d+\) ArrowEvalPython\n.*\nArguments: \[(\w+)\(",
+                         text, re.M)
+    assert sorted(kernels) == ["_pair_dot_udf", "buckets"], text
+
+
 def test_semdedup_is_cell_scoped(no_aqe):
     """semdedup plan gate (round 9): the pairwise work runs inside the
     per-cell Arrow kernel — ONE cell shuffle feeds the applyInPandas

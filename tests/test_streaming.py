@@ -419,8 +419,10 @@ def test_stateful_dedup_event_time_ttl_data_path_eviction(spark, tmp_path):
 def test_stream_vector_ingest_frozen_models_and_history_dedup(spark, tmp_path):
     """Streaming vector intake (round 10): drain 1 bootstraps + freezes
     the PQ/IVF models and stores the batch; drain 2's near-dups of
-    drain-1 vectors are dropped via the int8 history, its invalid
-    vector never enters the store, and the stored codes are
+    drain-1 vectors are dropped via the int8 history and its near-dup
+    of a smaller day-2 id within the day — both kinds of loser in one
+    drain — its invalid vector never enters the store, and the stored
+    codes are
     bit-identical to a batch re-encode against the persisted models —
     the joinability/servability contract."""
     import numpy as np
@@ -464,6 +466,8 @@ def test_stream_vector_ingest_frozen_models_and_history_dedup(spark, tmp_path):
         (12, [float("nan")] + [0.0] * 7),                       # invalid
         (13, unit(rng.randn(8))),                               # new
     ]
+    day2_rows.append(                                   # ~dup of 11, same day
+        (14, unit(np.asarray(day2_rows[1][1]) + rng.randn(8) * 1e-3)))
     spark.createDataFrame(day2_rows, schema).write.parquet(
         str(src / "day2.parquet"))
     stream2 = spark.readStream.schema(schema).option(
@@ -494,6 +498,78 @@ def test_stream_vector_ingest_frozen_models_and_history_dedup(spark, tmp_path):
              {**cfg, "probe": base[3], "k": 1,
               "books": books, "codes": store.select("vec_id", "pq_code")})
     assert [r["vec_id"] for r in hit.collect()] == [3]
+
+
+def test_stream_vector_ingest_bootstrap_over_existing_store(
+        spark, tmp_path):
+    """A drain that finds no models but an existing store (models/
+    deleted between drains) bootstraps again: it retrains on the
+    WITHIN-BATCH survivors — a history near-dup still trains — and
+    stores only the rows that also survive the history dedup. The
+    retrained books and cells equal the batch trainers' over
+    dedup_embedding of the day's valid rows."""
+    import shutil
+
+    import numpy as np
+
+    from blackroad_data_pipeline_spark.operators import (
+        apply_operator as op,
+    )
+    from blackroad_data_pipeline_spark.streaming.ops import (
+        run_stream_vector_ingest,
+    )
+
+    rng = np.random.RandomState(11)
+
+    def unit(v):
+        v = np.asarray(v, dtype=np.float64)
+        return (v / np.linalg.norm(v)).tolist()
+
+    def near(v):
+        return unit(np.asarray(v) + rng.randn(8) * 1e-3)
+
+    base = [unit(rng.randn(8)) for _ in range(6)]
+    src = tmp_path / "vecs"
+    src.mkdir()
+    out = str(tmp_path / "store")
+    models = str(tmp_path / "models")
+    ckpt = str(tmp_path / "ckpt")
+    schema = "vec_id long, embedding array<float>"
+    kw = dict(threshold=0.98, dim=8, m=2, ks=2, n_cells=2,
+              n_planes=2, n_tables=8)
+
+    def drain(rows, name):
+        spark.createDataFrame(rows, schema).write.parquet(
+            str(src / f"{name}.parquet"))
+        stream = spark.readStream.schema(schema).option(
+            "recursiveFileLookup", True).parquet(str(src))
+        run_stream_vector_ingest(stream, out, ckpt, models, **kw)
+
+    drain(list(enumerate(base)), "day1")
+    shutil.rmtree(models)
+    fresh = [unit(rng.randn(8)) for _ in range(3)]
+    day2 = [(10, near(base[0])),                 # ~dup of history 0
+            (11, fresh[0]), (12, fresh[1]), (13, fresh[2]),
+            (14, near(fresh[0])),                # ~dup of 11, same day
+            (15, [float("nan")] + [0.0] * 7)]    # invalid
+    drain(day2, "day2")
+
+    got = sorted(r["vec_id"] for r in spark.read.parquet(out).collect())
+    assert got == [0, 1, 2, 3, 4, 5, 11, 12, 13]
+
+    survivors = op("dedup_embedding", spark.createDataFrame(
+        [r for r in day2 if r[0] != 15], schema),
+        {"threshold": 0.98, "dim": 8, "n_planes": 2, "n_tables": 8})
+    assert sorted(r["vec_id"] for r in survivors.collect()) == \
+        [10, 11, 12, 13]
+    cfg = {"dim": 8, "m": 2, "ks": 2, "seed_order": "id"}
+    for sub, want in (
+            ("books", op("pq_encode", survivors, {**cfg, "emit": "books"})),
+            ("cells", op("ivf_assign", survivors,
+                         {**cfg, "n_cells": 2, "emit": "cells"}))):
+        assert sorted(map(tuple, spark.read.parquet(
+            f"{models}/{sub}").collect())) == \
+            sorted(map(tuple, want.collect())), sub
 
 
 def test_stream_vector_ingest_bootstrap_guard_refuses_tiny_batch(
