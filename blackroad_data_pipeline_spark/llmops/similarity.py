@@ -748,12 +748,8 @@ def op_similarity_join(df: DataFrame, config: Mapping, views) -> DataFrame:
     # vectors never ride the explosion.
     dim = int(config.get("dim", 64))
     n_planes = int(config.get("n_planes", 12))
-    multi = _multi_bucket_udf(dim, n_planes, seed, n_tables)
-    # repartition on the (table, bucket) key: both self-join branches
-    # share one exchange — and one bucket-kernel pass over the corpus
-    b = (df.select(F.col(id_field).alias("__id"),
-                   F.posexplode(multi(F.col(field))).alias("__tbl", "__bkt"))
-         .repartition("__tbl", "__bkt"))
+    b = _table_keys(df, field, id_field,
+                    _multi_bucket_udf(dim, n_planes, seed, n_tables))
     cands = (
         b.select(F.col("__id").alias("id_a"), "__tbl", "__bkt")
         .join(b.select(F.col("__id").alias("id_b"), "__tbl", "__bkt"),
@@ -769,91 +765,26 @@ def op_similarity_join(df: DataFrame, config: Mapping, views) -> DataFrame:
 def op_dedup_embedding(df: DataFrame, config: Mapping, views) -> DataFrame:
     """Embedding-cosine near-dedup: drop rows whose embedding is
     within threshold of a smaller-id row (same greedy policy as
-    dedup_near_minhash).
+    dedup_near_minhash). With ``history`` (a DataFrame with the same
+    ``field`` and ``id_field`` columns) a row is also dropped when it
+    is within threshold of any valid history row.
 
-    With ``history`` (and ``history_field`` / ``history_id_field``, as
-    in dedup_embedding_against) a row is also dropped when it is within
-    threshold of any valid history row: rows order by (is_batch, id),
-    and a batch row loses to every earlier row. That is exactly
-    ``dedup_embedding_against(dedup_embedding(df), history)`` — the
-    history test of a row never depends on which batch rows survive —
-    in ONE LSH pass instead of the within-batch self-join re-running
-    under each of the against-join's consumers: one bucket kernel over
-    batch ∪ history, one (table, bucket) join of batch rows against all
-    rows, one pair-dot verification and one anti-join. Same
-    hyperplanes, float64 kernels and double norms, so the same rows
-    survive. Pairs verify like the two-step form: candidates are
-    (id, id) pairs and every row carrying those ids is checked, except
-    that single-table (``n_tables: 1``) batch×batch pairs verify only
-    rows that share the bucket (similarity_join's single-table path);
-    that check reads each row's bucket back, so the single-table form
-    runs the bucket kernel a second time."""
+    That is exactly ``dedup_embedding_against(dedup_embedding(df),
+    history)``, since a row's history test never depends on which
+    batch rows survive. The within-batch losers and the history hits
+    are unioned under ONE anti-join, so the within-batch self-join
+    runs once, not under each of the against-join's three reads of its
+    input; with ``n_tables`` > 1 the batch's bucket keys are one
+    exchange shared by the self-join and the history join. History
+    rows are only ever paired with batch rows."""
     id_field = config.get("id_field", "vec_id")
-    if config.get("history") is None:
-        pairs = op_similarity_join(df, config, views)
-        losers = pairs.select(F.col("id_b").alias(id_field)).dropDuplicates()
-        return df.join(losers, id_field, "left_anti")
-
-    field = config.get("field", "embedding")
-    threshold = float(config.get("threshold", 0.9))
-    dim = int(config.get("dim", 64))
-    n_planes = int(config.get("n_planes", 12))
-    n_tables = int(config.get("n_tables", 1))
-    seed = int(config.get("seed", 42))
-    history = config["history"]
-    if isinstance(history, str):
-        history = views[history]
-    h_field = config.get("history_field", field)
-    h_id = config.get("history_id_field", id_field)
-
-    # invalid vectors and NULL ids never take part (the two-step form
-    # can never join them to a verified pair either; dropping NULL ids
-    # up front also keeps the anti-join's inferred isnotnull(id) from
-    # being pushed under one join side's exchange); a union column
-    # wider on one side (array<float> batch, dequantized array<double>
-    # history) widens exactly, so the float64 kernels see the same values
-    rows = (df.filter(valid_vec(F.col(field)))
-            .select(F.col(id_field).alias("__id"),
-                    F.lit(True).alias("__isb"),
-                    F.col(field).alias("__emb"))
-            .union(history.filter(valid_vec(F.col(h_field)))
-                   .select(F.col(h_id).alias("__id"),
-                           F.lit(False).alias("__isb"),
-                           F.col(h_field).alias("__emb")))
-            .filter(F.col("__id").isNotNull()))
-    sides = rows.withColumn("__norm", _norm_of(F.col("__emb")))
-    multi = _multi_bucket_udf(dim, n_planes, seed, n_tables)
-    # one exchange feeds both join sides (ReuseExchange), so the kernel
-    # runs once; no filter on the side flag may sit between the two
-    # (it would be pushed under the exchange and split it), hence the
-    # CASE form of "the other row orders first"
-    e = (sides.select("__id", "__isb", "__emb", "__norm",
-                      F.posexplode(multi(F.col("__emb")))
-                      .alias("__tbl", "__bkt"))
-         .repartition("__tbl", "__bkt"))
-
-    def side(frame, p):
-        return frame.select(*[F.col(c).alias(f"__{p}{c[2:]}")
-                              for c in frame.columns])
-
-    cands = (side(e, "b").join(side(e, "o"),
-                               (F.col("__btbl") == F.col("__otbl"))
-                               & (F.col("__bbkt") == F.col("__obkt")))
-             .filter(F.when(~F.col("__oisb"), F.col("__bisb")).otherwise(
-                 F.col("__bisb") & (F.col("__oid") < F.col("__bid"))))
-             .select("__bid", "__bisb", "__oid", "__oisb")
-             .dropDuplicates())
-    att = e if n_tables <= 1 else sides
-    hit = (_pair_dot_udf(F.col("__bemb"), F.col("__oemb"))
-           / (F.col("__bnorm") * F.col("__onorm")) >= threshold)
-    if n_tables <= 1:
-        hit = hit & (~F.col("__oisb") | (F.col("__bbkt") == F.col("__obkt")))
-    hits = (cands.join(side(att, "b"), ["__bid", "__bisb"])
-            .join(side(att, "o"), ["__oid", "__oisb"])
-            .filter(hit)
-            .select(F.col("__bid").alias(id_field))
-            .dropDuplicates())
-    return df.join(hits, id_field, "left_anti")
+    pairs = op_similarity_join(df, config, views)
+    losers = pairs.select(F.col("id_b").alias(id_field))
+    if config.get("history") is not None:
+        field = config.get("field", "embedding")
+        losers = losers.union(_history_hits(
+            df, config["history"], config, field, id_field))
+    return df.join(losers.dropDuplicates(), id_field, "left_anti")
 
 
 @register("dedup_embedding_groups")
@@ -901,16 +832,39 @@ def op_dedup_embedding_against(df: DataFrame, config: Mapping, views) -> DataFra
     """
     field = config.get("field", "embedding")
     id_field = config.get("id_field", "vec_id")
+    history = config["history"]
+    if isinstance(history, str):
+        history = views[history]
+    hits = _history_hits(df, history, config,
+                         config.get("history_field", field),
+                         config.get("history_id_field", id_field))
+    return df.join(hits.dropDuplicates(), id_field, "left_anti")
+
+
+def _table_keys(df: DataFrame, field: str, id_field: str,
+                multi) -> DataFrame:
+    """(__id, __tbl, __bkt): every vector's L bucket keys, exploded to
+    narrow rows and shuffled on (table, bucket). Joins that read the
+    same corpus through this helper share one exchange, so the bucket
+    kernel runs once per row however many joins it feeds."""
+    return (df.select(F.col(id_field).alias("__id"),
+                      F.posexplode(multi(F.col(field)))
+                      .alias("__tbl", "__bkt"))
+            .repartition("__tbl", "__bkt"))
+
+
+def _history_hits(df: DataFrame, history: DataFrame, config: Mapping,
+                  h_field: str, h_id: str) -> DataFrame:
+    """Ids (column ``id_field``, possibly repeated) of the valid ``df``
+    rows within cosine ``threshold`` of a valid ``history`` row: the
+    candidate and verification half of dedup_embedding_against."""
+    field = config.get("field", "embedding")
+    id_field = config.get("id_field", "vec_id")
     threshold = float(config.get("threshold", 0.9))
     dim = int(config.get("dim", 64))
     n_planes = int(config.get("n_planes", 12))
     n_tables = int(config.get("n_tables", 1))
     seed = int(config.get("seed", 42))
-    history = config["history"]
-    if isinstance(history, str):
-        history = views[history]
-    h_field = config.get("history_field", field)
-    h_id = config.get("history_id_field", id_field)
 
     # invalid embeddings are never near-duplicates: batch rows with
     # invalid vectors survive (the anti-join can't hit them), invalid
@@ -920,8 +874,10 @@ def op_dedup_embedding_against(df: DataFrame, config: Mapping, views) -> DataFra
     history = history.filter(valid_vec(F.col(h_field)))
 
     multi = _multi_bucket_udf(dim, n_planes, seed, n_tables)
-    bb = cand_src.select(F.col(id_field).alias("__bid"),
-                   F.posexplode(multi(F.col(field))).alias("__tbl", "__bkt"))
+    # the batch keys go through the shuffle similarity_join uses, so
+    # dedup_embedding's self-join and this join share one exchange
+    bb = _table_keys(cand_src, field, id_field, multi) \
+        .withColumnRenamed("__id", "__bid")
     hb = history.select(F.col(h_id).alias("__hid"),
                         F.posexplode(multi(F.col(h_field)))
                         .alias("__tbl", "__bkt"))
@@ -934,14 +890,12 @@ def op_dedup_embedding_against(df: DataFrame, config: Mapping, views) -> DataFra
     hside = history.select(F.col(h_id).alias("__hid"),
                            F.col(h_field).alias("__hemb"),
                            _norm_of(F.col(h_field)).alias("__hnorm"))
-    hits = (cands.join(bside, "__bid").join(hside, "__hid")
+    return (cands.join(bside, "__bid").join(hside, "__hid")
             .withColumn("__cos",
                         _pair_dot_udf(F.col("__bemb"), F.col("__hemb"))
                         / (F.col("__bnorm") * F.col("__hnorm")))
             .filter(F.col("__cos") >= threshold)
-            .select(F.col("__bid").alias(id_field))
-            .dropDuplicates())
-    return df.join(hits, id_field, "left_anti")
+            .select(F.col("__bid").alias(id_field)))
 
 
 @register("embedding_outlier")

@@ -544,8 +544,8 @@ def run_stream_vector_ingest(df: DataFrame, path: str, checkpoint: str,
        vectors never enter the store — `vector_health` is the audit
        of what this drops),
     2. near-dedups the micro-batch within itself (greedy
-       dedup_embedding) and against the PERSISTED history in one LSH
-       pass (dedup_embedding with ``history``) — history consumed as
+       dedup_embedding) and against the PERSISTED history in one plan
+       (dedup_embedding with ``history``) — history consumed as
        int8 codes dequantized on the fly (4x narrower I/O; the
        bucketed join never re-reads raw fp32 history),
     3. bootstraps the PQ codebooks and IVF coarse quantizer from the
@@ -701,7 +701,7 @@ def run_stream_vector_ingest(df: DataFrame, path: str, checkpoint: str,
         if bootstrap and hist is None:
             kept = batch  # deduped and materialized above
         else:
-            # ONE LSH pass does the within-batch and the against-history
+            # ONE plan does the within-batch and the against-history
             # dedup (re-running the within-batch step over bootstrap
             # survivors drops nothing); materialized once so the three
             # encode steps below do not each recompute it

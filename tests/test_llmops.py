@@ -1588,9 +1588,9 @@ def test_embedding_incremental_ingest_end_to_end(spark):
 
 @pytest.mark.parametrize("n_tables", [1, 8])
 def test_dedup_embedding_history_matches_two_step(spark, n_tables):
-    """dedup_embedding with ``history`` (one LSH pass over batch ∪
-    history) keeps exactly the rows of the two-step
-    dedup_embedding_against(dedup_embedding(batch), history).
+    """dedup_embedding with ``history`` (within-batch losers and
+    history hits under one anti-join) keeps exactly the rows of the
+    two-step dedup_embedding_against(dedup_embedding(batch), history).
 
     Besides random rows and planted near-copies, the corpus plants the
     cases where the two steps verify different row pairs, found with
@@ -1602,8 +1602,9 @@ def test_dedup_embedding_history_matches_two_step(spark, n_tables):
     row of both ids, so the near-copy that shares no bucket still
     drops its id). Also: ids shared between batch and history,
     NULL/NaN/empty vectors and a NULL id on both sides, exact copies,
-    an array<double> history against an array<float> batch, and an
-    empty history."""
+    an array<double> history against an array<float> batch, a history
+    whose ids are strings (batch ids keep their own numeric order),
+    and an empty history."""
     import numpy as np
 
     from blackroad_data_pipeline_spark.llmops.similarity import _hyperplanes
@@ -1678,7 +1679,8 @@ def test_dedup_embedding_history_matches_two_step(spark, n_tables):
     def ids(df):
         return {r["vec_id"] for r in df.collect()}
 
-    for hframe in (hdf, hdf.limit(0)):
+    str_ids = hdf.withColumn("vec_id", F.col("vec_id").cast("string"))
+    for hframe in (hdf, str_ids, hdf.limit(0)):
         fused = op("dedup_embedding", bdf, {**cfg, "history": hframe},
                    views={})
         two_step = op("dedup_embedding_against",
@@ -1692,6 +1694,58 @@ def test_dedup_embedding_history_matches_two_step(spark, n_tables):
                   views={}))
     assert kept.isdisjoint({140, 160, 3, 210, 220})
     assert {4, 200, 230, 231, 232, None} <= kept
+
+
+def test_dedup_embedding_history_never_pairs_history_rows(spark, tmp_path):
+    """The candidate joins of dedup_embedding with ``history`` pair
+    batch rows with batch rows and batch rows with history rows, never
+    history with history: no (table, bucket) join reads the history on
+    both sides, so candidate work stays within n_tables × batch ×
+    (batch + history) pairs however large the store grows."""
+    import numpy as np
+
+    rng = np.random.RandomState(9)
+
+    def rows(ids):
+        return spark.createDataFrame(
+            [(i, [float(x) for x in rng.randn(8)]) for i in ids],
+            "vec_id long, embedding array<float>")
+
+    # the batch is a parquet scan, the history an in-memory frame, so a
+    # plan subtree reads the history iff it has a non-parquet leaf
+    rows(range(10)).write.parquet(str(tmp_path / "batch.parquet"))
+    batch = spark.read.parquet(str(tmp_path / "batch.parquet"))
+    hist = rows(range(1000, 1300))
+
+    def reads_history(plan):
+        if plan.nodeName() == "ReusedExchange":
+            plan = plan.child()
+        kids = plan.children()
+        if kids.size() == 0:
+            return not plan.nodeName().startswith("Scan parquet")
+        return any(reads_history(kids.apply(i)) for i in range(kids.size()))
+
+    def bucket_joins(plan):
+        if "Join" in plan.nodeName() and "tbl" in str(plan.leftKeys()):
+            yield plan
+        kids = plan.children()
+        for i in range(kids.size()):
+            yield from bucket_joins(kids.apply(i))
+
+    prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        for n_tables in (1, 2):
+            df = op("dedup_embedding", batch,
+                    {"threshold": 0.9, "dim": 8, "n_planes": 1,
+                     "n_tables": n_tables, "history": hist}, views={})
+            joins = list(bucket_joins(
+                df._jdf.queryExecution().executedPlan()))
+            assert joins
+            assert not any(reads_history(j.left())
+                           and reads_history(j.right()) for j in joins)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
 
 
 # -- pagerank --------------------------------------------------------------

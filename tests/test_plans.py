@@ -735,14 +735,16 @@ def test_embedding_ingest_history_stays_int8(no_aqe):
     assert plans.shuffle_exchange_count(df) <= 8, plans.explain_text(df)
 
 
-def test_embedding_dedup_with_history_is_one_lsh_pass(no_aqe):
+def test_embedding_dedup_with_history_hashes_each_row_once(no_aqe):
     """The vector-ingest drain's dedup (dedup_embedding with
-    ``history``) is one LSH pass: exactly two Arrow Python nodes — ONE
-    bucket kernel over batch ∪ history (both sides of the (table,
-    bucket) join read one exchange) and ONE pair-dot — where the
+    ``history``) runs each Python kernel once per row: ONE bucket
+    kernel over the batch, whose (table, bucket) exchange both the
+    within-batch self-join and the history join read, ONE over the
+    history, and one pair-dot per candidate stream — where the
     two-step dedup_embedding_against(dedup_embedding(batch)) plans the
-    within-batch self-join under every consumer. Still bucketed: no
-    cartesian / nested-loop join, no row-at-a-time Python."""
+    within-batch self-join under each of its three reads of the
+    survivors. Still bucketed: no cartesian / nested-loop join, no
+    row-at-a-time Python."""
     import re
 
     spark = no_aqe
@@ -751,16 +753,25 @@ def test_embedding_dedup_with_history_is_one_lsh_pass(no_aqe):
                {"dim": 64, "bits": 8, "bounds": [-4.0, 4.0]}).select(
         "vec_id", "embedding", "q_lo", "q_hi")
     hist = op("dequantize_embedding", store, {"bits": 8})
-    df = op("dedup_embedding", batch,
-            {"history": hist, "threshold": 0.9, "dim": 64,
-             "n_planes": 2, "n_tables": 8}, views={})
+    cfg = {"threshold": 0.9, "dim": 64, "n_planes": 2, "n_tables": 8}
+
+    def kernels(df):
+        return sorted(re.findall(
+            r"^\(\d+\) ArrowEvalPython\n.*\nArguments: \[(\w+)\(",
+            plans.explain_text(df), re.M))
+
+    df = op("dedup_embedding", batch, {**cfg, "history": hist}, views={})
     text = plans.explain_text(df)
     plans.assert_no_cartesian(df)
     assert "BroadcastNestedLoopJoin" not in text, text
     plans.assert_no_row_python(df)
-    kernels = re.findall(r"^\(\d+\) ArrowEvalPython\n.*\nArguments: \[(\w+)\(",
-                         text, re.M)
-    assert sorted(kernels) == ["_pair_dot_udf", "buckets"], text
+    assert kernels(df) == ["_pair_dot_udf", "_pair_dot_udf",
+                           "buckets", "buckets"], text
+    plans.assert_exchange_reuse(df, 2)
+    two_step = op("dedup_embedding_against",
+                  op("dedup_embedding", batch, cfg),
+                  {**cfg, "history": hist}, views={})
+    assert len(kernels(two_step)) > len(kernels(df))
 
 
 def test_semdedup_is_cell_scoped(no_aqe):

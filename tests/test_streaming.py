@@ -416,7 +416,8 @@ def test_stateful_dedup_event_time_ttl_data_path_eviction(spark, tmp_path):
     assert got == [1, 2, 3]  # event 3 re-emits despite carrying data
 
 
-def test_stream_vector_ingest_frozen_models_and_history_dedup(spark, tmp_path):
+def test_stream_vector_ingest_frozen_models_and_history_dedup(
+        spark, tmp_path, monkeypatch):
     """Streaming vector intake (round 10): drain 1 bootstraps + freezes
     the PQ/IVF models and stores the batch; drain 2's near-dups of
     drain-1 vectors are dropped via the int8 history and its near-dup
@@ -424,9 +425,13 @@ def test_stream_vector_ingest_frozen_models_and_history_dedup(spark, tmp_path):
     drain — its invalid vector never enters the store, and the stored
     codes are
     bit-identical to a batch re-encode against the persisted models —
-    the joinability/servability contract."""
+    the joinability/servability contract. Drain 2 dedups within the
+    day and against the history in ONE dedup_embedding call, so the
+    within-batch LSH self-join is not re-planned under each of
+    dedup_embedding_against's three reads of its input."""
     import numpy as np
 
+    from blackroad_data_pipeline_spark import operators
     from blackroad_data_pipeline_spark.operators import (
         apply_operator as op,
     )
@@ -472,7 +477,17 @@ def test_stream_vector_ingest_frozen_models_and_history_dedup(spark, tmp_path):
         str(src / "day2.parquet"))
     stream2 = spark.readStream.schema(schema).option(
         "recursiveFileLookup", True).parquet(str(src))
+    dedups = []
+
+    def spy(name, df, config, *args, **kwargs):
+        if name.startswith("dedup_embedding"):
+            dedups.append((name, config.get("history") is not None))
+        return op(name, df, config, *args, **kwargs)
+
+    monkeypatch.setattr(operators, "apply_operator", spy)
     run_stream_vector_ingest(stream2, out, ckpt, models, **kw)
+    monkeypatch.undo()
+    assert dedups == [("dedup_embedding", True)]
 
     store = spark.read.parquet(out)
     got = sorted(r["vec_id"] for r in store.collect())
