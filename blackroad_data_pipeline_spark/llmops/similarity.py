@@ -80,17 +80,12 @@ def _check_probe_finite(probe, op: str) -> list[float]:
 def cosine_col(a: Column, b: Column) -> Column:
     """Exact cosine similarity between two array<float> columns,
     computed element-sequentially in double (deterministic — float
-    reduction order never varies with partitioning)."""
+    reduction order never varies with partitioning). A zero vector
+    scores 0 (`_safe_norm`)."""
     dot = F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0), lambda acc, x: acc + x)
-    na = F.sqrt(F.aggregate(
-        F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0), lambda acc, x: acc + x))
-    nb = F.sqrt(F.aggregate(
-        F.transform(b, lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0), lambda acc, x: acc + x))
-    return dot / (na * nb)
+    return dot / (_safe_norm(a) * _safe_norm(b))
 
 
 @register("ann_bruteforce")
@@ -132,37 +127,15 @@ def _hyperplanes(dim: int, n_planes: int, seed: int) -> np.ndarray:
     return np.random.RandomState(seed).randn(n_planes, dim)
 
 
-def _bucket_udf(dim: int, n_planes: int, seed: int):
+def _multi_bucket_udf(dim: int, n_planes: int, seed: int, n_tables: int):
+    """All L tables' bucket ids in one kernel: the L*n_planes
+    hyperplanes stack into a single (L*b, dim) matrix, so the per-batch
+    cost is one matmul regardless of table count. Table t hashes with
+    seed + t and packs plane i's sign bit as ``1 << i``."""
     if not 1 <= n_planes <= 62:
         # 62 sign bits fill an int64 without touching the sign bit; beyond
         # that the packed id would silently wrap and multi-probe XOR masks
         # would stop matching stored buckets.
-        raise ValueError(f"n_planes={n_planes} out of range (1..62)")
-    planes = _hyperplanes(dim, n_planes, seed)
-
-    weights = (1 << np.arange(n_planes)).astype(np.int64)
-
-    @F.pandas_udf(T.LongType())
-    def bucket(embs: pd.Series) -> pd.Series:
-        # NULL embeddings hash to NULL (they have no position in
-        # cosine space) — round-9 NULL-fixture sweep: vstack on a
-        # batch containing None crashed the whole job
-        mask = embs.notna().to_numpy()
-        out = np.full(len(embs), None, dtype=object)
-        if mask.any():
-            mat = np.vstack(embs[mask].to_numpy())  # one matmul per batch
-            bits = (mat @ planes.T) > 0
-            out[mask] = bits.astype(np.int64) @ weights
-        return pd.Series(out)
-
-    return bucket
-
-
-def _multi_bucket_udf(dim: int, n_planes: int, seed: int, n_tables: int):
-    """All L tables' bucket ids in one kernel: the L*n_planes
-    hyperplanes stack into a single (L*b, dim) matrix, so the per-batch
-    cost is one matmul regardless of table count."""
-    if not 1 <= n_planes <= 62:
         raise ValueError(f"n_planes={n_planes} out of range (1..62)")
     planes = np.vstack([_hyperplanes(dim, n_planes, seed + t)
                         for t in range(n_tables)])  # (L*b, dim)
@@ -170,7 +143,10 @@ def _multi_bucket_udf(dim: int, n_planes: int, seed: int, n_tables: int):
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def buckets(embs: pd.Series) -> pd.Series:
-        mask = embs.notna().to_numpy()  # NULL embeddings hash to NULL
+        # NULL embeddings hash to NULL (they have no position in
+        # cosine space) — round-9 NULL-fixture sweep: vstack on a
+        # batch containing None crashed the whole job
+        mask = embs.notna().to_numpy()
         out = np.full(len(embs), None, dtype=object)
         if mask.any():
             mat = np.vstack(embs[mask].to_numpy())
@@ -187,7 +163,8 @@ def _multi_bucket_udf(dim: int, n_planes: int, seed: int, n_tables: int):
 @register("lsh_bucket")
 def op_lsh_bucket(df: DataFrame, config: Mapping, views) -> DataFrame:
     """Sign-random-projection bucket id per embedding (n_planes sign
-    bits packed into an int). Same seed => same buckets everywhere."""
+    bits packed into an int). Same seed => same buckets everywhere:
+    the id is table 0 of the multi-table kernel every LSH join uses."""
     field = config.get("field", "embedding")
     dim = int(config.get("dim", 64))
     n_planes = int(config.get("n_planes", 12))
@@ -196,8 +173,8 @@ def op_lsh_bucket(df: DataFrame, config: Mapping, views) -> DataFrame:
     # NULL input the kernel's notna mask already handles (valid_vec)
     return df.withColumn(
         "lsh_bucket",
-        _bucket_udf(dim, n_planes, seed)(
-            F.when(valid_vec(F.col(field)), F.col(field))))
+        _multi_bucket_udf(dim, n_planes, seed, 1)(
+            F.when(valid_vec(F.col(field)), F.col(field)))[0])
 
 
 @register("ann_lsh")
@@ -419,20 +396,95 @@ def _assign_multi_udf(centroids: np.ndarray, nprobe: int):
     return assign
 
 
-def _norm_of(col: Column) -> Column:
+def _safe_norm(col: Column) -> Column:
     """Euclidean norm of an array<float> column, element-sequential in
-    double (reduction order never varies with partitioning)."""
-    return F.sqrt(F.aggregate(
+    double (reduction order never varies with partitioning), with zero
+    pinned to 1.0 — the one norm contract of every cosine here: a zero
+    vector scores cosine 0 against anything instead of dividing by zero
+    (NaN, or DIVIDE_BY_ZERO under ANSI). Matches the knn cogroup
+    kernel's guard."""
+    n = F.sqrt(F.aggregate(
         F.transform(col, lambda x: x.cast("double") * x.cast("double")),
         F.lit(0.0), lambda acc, x: acc + x))
-
-
-def _safe_norm(col: Column) -> Column:
-    """`_norm_of` with zero pinned to 1.0 — knn_join's contract scores
-    zero-norm vectors at cosine 0 instead of NaN (matches the cogroup
-    kernel's guard; keeps impl parity on degenerate inputs)."""
-    n = _norm_of(col)
     return F.when(n == 0.0, F.lit(1.0)).otherwise(n)
+
+
+@F.pandas_udf(T.DoubleType())
+def _pair_dot_udf(a: pd.Series, b: pd.Series) -> pd.Series:
+    """Batched pair dot products: one einsum per Arrow batch. Catalyst
+    higher-order functions (zip_with+aggregate) are interpreted per
+    element — for 64-dim pairs the numpy kernel is ~5x faster."""
+    if len(a) == 0:
+        return pd.Series([], dtype="float64")
+    ma = np.vstack(a.to_numpy()).astype(np.float64)
+    mb = np.vstack(b.to_numpy()).astype(np.float64)
+    return pd.Series(np.einsum("ij,ij->i", ma, mb))
+
+
+# Marked nondeterministic (in place, so only here) to keep a filter on
+# its result ABOVE the projection that computes it: pushed below, the
+# filter re-evaluates the kernel, and a plan that both filters on and
+# returns the cosine ran it twice per candidate.
+_pair_dot_udf.asNondeterministic()
+
+
+def _side(df: DataFrame, field: str, id_field: str) -> DataFrame:
+    """(__id, __emb) rows of ``df``'s valid vectors — one side of an
+    LSH join. Invalid embeddings pair with nothing (valid_vec contract:
+    NULLs crashed the bucket kernel in the round-9 sweep; a NaN
+    component would NaN-poison the norm and every cosine it meets)."""
+    return df.filter(valid_vec(F.col(field))).select(
+        F.col(id_field).alias("__id"), F.col(field).alias("__emb"))
+
+
+def _lsh_kernel(config: Mapping):
+    """The stacked-matmul bucket kernel of an LSH join's config."""
+    return _multi_bucket_udf(int(config.get("dim", 64)),
+                             int(config.get("n_planes", 12)),
+                             int(config.get("seed", 42)),
+                             int(config.get("n_tables", 1)))
+
+
+def _table_keys(side: DataFrame, multi, shared: bool = True) -> DataFrame:
+    """(__id, __tbl, __bkt): every vector of a `_side`'s L bucket keys,
+    exploded to narrow rows — the only way an LSH join keys its input.
+    ``shared`` keys are shuffled on (table, bucket) here, so joins that
+    read the same side through this helper share one exchange and the
+    bucket kernel runs once per row however many joins it feeds. Keys
+    only one join reads are left to that join, which may broadcast
+    them instead of shuffling."""
+    keys = side.select("__id", F.posexplode(multi(F.col("__emb")))
+                       .alias("__tbl", "__bkt"))
+    return keys.repartition("__tbl", "__bkt") if shared else keys
+
+
+def _candidates(a: DataFrame, b: DataFrame,
+                pred: Column | None = None) -> DataFrame:
+    """Distinct (id_a, id_b) pairs of two `_table_keys` frames that
+    share a (table, bucket) key and satisfy ``pred`` (over id_a/id_b).
+    Only ids ride the bucket join and the cross-table dedup; vectors
+    attach per unique pair in `_verified`."""
+    pairs = a.withColumnRenamed("__id", "id_a").join(
+        b.withColumnRenamed("__id", "id_b"), ["__tbl", "__bkt"])
+    if pred is not None:
+        pairs = pairs.filter(pred)
+    return pairs.select("id_a", "id_b").dropDuplicates()
+
+
+def _verified(pairs: DataFrame, a: DataFrame, b: DataFrame) -> DataFrame:
+    """(id_a, id_b, cos_sim) of each candidate pair, ``a`` and ``b``
+    being the `_side` frames its ids come from. Norms are computed once
+    per side row (`_safe_norm`: a zero vector scores 0), the Arrow
+    pair-dot once per candidate."""
+    def attach(side: DataFrame, tag: str) -> DataFrame:
+        return side.select(F.col("__id").alias(f"id_{tag}"),
+                           F.col("__emb").alias(f"emb_{tag}"),
+                           _safe_norm(F.col("__emb")).alias(f"norm_{tag}"))
+
+    return (pairs.join(attach(a, "a"), "id_a").join(attach(b, "b"), "id_b")
+            .select("id_a", "id_b",
+                    (_pair_dot_udf(F.col("emb_a"), F.col("emb_b"))
+                     / (F.col("norm_a") * F.col("norm_b"))).alias("cos_sim")))
 
 
 def _knn_cells_cogroup(qside: DataFrame, iside: DataFrame,
@@ -522,10 +574,11 @@ def op_knn_join(df: DataFrame, config: Mapping, views) -> DataFrame:
 
     method: "lsh" — both sides hash into ``n_tables`` ×
     ``n_planes`` sign-random-projection tables (one stacked-matmul
-    Arrow kernel per side, `_multi_bucket_udf`); candidates join per
+    Arrow kernel per side; in self mode both sides read one key
+    exchange, so each row is hashed once); candidates join per
     (table, bucket) and are deduped as narrow id pairs BEFORE the
-    vectors attach (the dedup_embedding_against shape — multi-table
-    duplication is real here). Recall follows the standard
+    vectors attach — the candidate-and-verify path similarity_join
+    and dedup_embedding_against share. Recall follows the standard
     amplification 1-(1-p^b)^L.
 
     Scale shape (either method): one bucket/cell-key shuffle for the
@@ -614,35 +667,17 @@ def op_knn_join(df: DataFrame, config: Mapping, views) -> DataFrame:
             raise ValueError(
                 f"knn_join impl must be cogroup|pairs, got {impl!r}")
     elif method == "lsh":
-        dim = int(config.get("dim", 64))
-        n_planes = int(config.get("n_planes", 12))
-        n_tables = int(config.get("n_tables", 1))
-        seed = int(config.get("seed", 42))
-        multi = _multi_bucket_udf(dim, n_planes, seed, n_tables)
-        qb = df.select(F.col(id_field).alias("__qid"),
-                       F.posexplode(multi(F.col(field)))
-                       .alias("__tbl", "__bkt"))
-        ib = idx_df.select(F.col(i_id).alias("__iid"),
-                           F.posexplode(multi(F.col(i_field)))
-                           .alias("__tbl", "__bkt"))
-        cands = (qb.join(ib, ["__tbl", "__bkt"])
-                 .select("__qid", "__iid")
-                 .dropDuplicates(["__qid", "__iid"]))
-        if exclude_self:
-            cands = cands.filter(F.col("__qid") != F.col("__iid"))
-        qside = df.select(F.col(id_field).alias("__qid"),
-                          F.col(field).alias("__qemb"),
-                          _safe_norm(F.col(field)).alias("__qnorm"))
-        iside = idx_df.select(F.col(i_id).alias("__iid"),
-                              F.col(i_field).alias("__iemb"),
-                              _safe_norm(F.col(i_field)).alias("__inorm"))
-        scored = (cands.join(qside, "__qid").join(iside, "__iid")
-                  .withColumn("cos_sim",
-                              _pair_dot_udf(F.col("__qemb"), F.col("__iemb"))
-                              / (F.col("__qnorm") * F.col("__inorm")))
-                  # narrow BEFORE the per-query window: the rank
-                  # shuffle must never carry the wide vectors
-                  .select("__qid", "__iid", "cos_sim"))
+        qside = _side(df, field, id_field)
+        iside = _side(idx_df, i_field, i_id)
+        multi = _lsh_kernel(config)
+        # self mode reads one side twice: one shared key exchange
+        pairs = _candidates(
+            _table_keys(qside, multi, shared=self_join),
+            _table_keys(iside, multi, shared=self_join),
+            F.col("id_a") != F.col("id_b") if exclude_self else None)
+        scored = _verified(pairs, qside, iside).select(
+            F.col("id_a").alias("__qid"), F.col("id_b").alias("__iid"),
+            "cos_sim")
     else:
         raise ValueError(f"knn_join method must be ivf|lsh, got {method!r}")
 
@@ -656,25 +691,14 @@ def op_knn_join(df: DataFrame, config: Mapping, views) -> DataFrame:
                     F.col("__iid").alias("neighbor_id"), "cos_sim"))
 
 
-@F.pandas_udf(T.DoubleType())
-def _pair_dot_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Batched pair dot products: one einsum per Arrow batch. Catalyst
-    higher-order functions (zip_with+aggregate) are interpreted per
-    element — for 64-dim pairs the numpy kernel is ~5x faster."""
-    if len(a) == 0:
-        return pd.Series([], dtype="float64")
-    ma = np.vstack(a.to_numpy()).astype(np.float64)
-    mb = np.vstack(b.to_numpy()).astype(np.float64)
-    return pd.Series(np.einsum("ij,ij->i", ma, mb))
-
-
 @register("similarity_join")
 def op_similarity_join(df: DataFrame, config: Mapping, views) -> DataFrame:
     """All pairs with cosine >= threshold, via LSH buckets: pairwise
     work runs inside buckets (shuffle on bucket id), never across the
-    corpus. The embedding-cosine near-dup primitive. Norms are
-    computed once per vector JVM-side; the per-pair dot products run
-    as an Arrow-batched numpy kernel.
+    corpus. The embedding-cosine near-dup primitive. Each vector is
+    hashed once; candidate id pairs are deduped, then verified exactly
+    (norms once per vector JVM-side, the per-pair dot products in an
+    Arrow-batched numpy kernel).
 
     ``n_tables: L`` (default 1) unions candidates from L independent
     hash tables (distinct hyperplane seeds). One table recalls a pair
@@ -682,83 +706,16 @@ def op_similarity_join(df: DataFrame, config: Mapping, views) -> DataFrame:
     moderate similarities — while L tables recall 1-(1-p^b)^L, the
     standard amplification. Candidate ids are deduped across tables
     BEFORE embeddings are attached, so the exact-verification work is
-    per unique pair and the wide vectors never ride the union."""
-    field = config.get("field", "embedding")
-    id_field = config.get("id_field", "vec_id")
+    per unique pair and the wide vectors never ride the union. A
+    candidate is an id pair: where an id repeats, every row of both
+    ids is verified."""
     threshold = float(config.get("threshold", 0.9))
-    n_tables = int(config.get("n_tables", 1))
-    seed = int(config.get("seed", 42))
-    # invalid embeddings pair with nothing (valid_vec contract —
-    # NULLs crashed the bucket kernel in the round-9 sweep; a NaN
-    # component would NaN-poison the norm and every cosine it meets)
-    df = df.filter(valid_vec(F.col(field)))
-    norm = F.sqrt(F.aggregate(
-        F.transform(F.col(field), lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0), lambda acc, x: acc + x))
-
-    def verified(cands: DataFrame) -> DataFrame:
-        # norms computed once per vector, not once per candidate pair
-        sides = df.select(F.col(id_field).alias("__id"),
-                          F.col(field).alias("__emb"), norm.alias("__norm"))
-        return (
-            cands
-            .join(sides.select(F.col("__id").alias("id_a"),
-                               F.col("__emb").alias("emb_a"),
-                               F.col("__norm").alias("norm_a")), "id_a")
-            .join(sides.select(F.col("__id").alias("id_b"),
-                               F.col("__emb").alias("emb_b"),
-                               F.col("__norm").alias("norm_b")), "id_b")
-            .withColumn("cos_sim",
-                        _pair_dot_udf(F.col("emb_a"), F.col("emb_b"))
-                        / (F.col("norm_a") * F.col("norm_b")))
-            .filter(F.col("cos_sim") >= threshold)
-            .select("id_a", "id_b", "cos_sim")
-        )
-
-    if n_tables <= 1:
-        # single-table fast path: embeddings ride the one bucket join
-        # directly, and no pair-dedup is needed — each vector lands in
-        # exactly one lsh_bucket, so the self-join emits every
-        # (id_a, id_b) at most once (contrast near_dup_minhash, where
-        # multi-band duplication is real).
-        bucketed = op_lsh_bucket(df, config, views).select(
-            F.col(id_field).alias("__id"), F.col(field).alias("__emb"),
-            norm.alias("__norm"), "lsh_bucket")
-        left = bucketed.select(F.col("__id").alias("id_a"),
-                               F.col("__emb").alias("emb_a"),
-                               F.col("__norm").alias("norm_a"), "lsh_bucket")
-        right = bucketed.select(F.col("__id").alias("id_b"),
-                                F.col("__emb").alias("emb_b"),
-                                F.col("__norm").alias("norm_b"), "lsh_bucket")
-        return (
-            left.join(right, "lsh_bucket")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .withColumn("cos_sim",
-                        _pair_dot_udf(F.col("emb_a"), F.col("emb_b"))
-                        / (F.col("norm_a") * F.col("norm_b")))
-            .filter(F.col("cos_sim") >= threshold)
-            .select("id_a", "id_b", "cos_sim")
-        )
-
-    # multi-table: ONE corpus scan computes all L bucket ids (stacked
-    # hyperplanes, single matmul per Arrow batch), then a posexplode to
-    # (id, table, bucket) — narrow rows — and ONE self-join shuffled on
-    # (table, bucket), exactly the minhash-band shape. Cross-table
-    # dedup shuffles only the (id, id) candidate stream; the wide
-    # vectors never ride the explosion.
-    dim = int(config.get("dim", 64))
-    n_planes = int(config.get("n_planes", 12))
-    b = _table_keys(df, field, id_field,
-                    _multi_bucket_udf(dim, n_planes, seed, n_tables))
-    cands = (
-        b.select(F.col("__id").alias("id_a"), "__tbl", "__bkt")
-        .join(b.select(F.col("__id").alias("id_b"), "__tbl", "__bkt"),
-              ["__tbl", "__bkt"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    return verified(cands)
+    side = _side(df, config.get("field", "embedding"),
+                 config.get("id_field", "vec_id"))
+    keys = _table_keys(side, _lsh_kernel(config))
+    pairs = _candidates(keys, keys, F.col("id_a") < F.col("id_b"))
+    return _verified(pairs, side, side).filter(
+        F.col("cos_sim") >= threshold)
 
 
 @register("dedup_embedding")
@@ -774,9 +731,9 @@ def op_dedup_embedding(df: DataFrame, config: Mapping, views) -> DataFrame:
     batch rows survive. The within-batch losers and the history hits
     are unioned under ONE anti-join, so the within-batch self-join
     runs once, not under each of the against-join's three reads of its
-    input; with ``n_tables`` > 1 the batch's bucket keys are one
-    exchange shared by the self-join and the history join. History
-    rows are only ever paired with batch rows."""
+    input, and the batch's bucket keys are one exchange shared by the
+    self-join and the history join. History rows are only ever paired
+    with batch rows."""
     id_field = config.get("id_field", "vec_id")
     pairs = op_similarity_join(df, config, views)
     losers = pairs.select(F.col("id_b").alias(id_field))
@@ -841,61 +798,25 @@ def op_dedup_embedding_against(df: DataFrame, config: Mapping, views) -> DataFra
     return df.join(hits.dropDuplicates(), id_field, "left_anti")
 
 
-def _table_keys(df: DataFrame, field: str, id_field: str,
-                multi) -> DataFrame:
-    """(__id, __tbl, __bkt): every vector's L bucket keys, exploded to
-    narrow rows and shuffled on (table, bucket). Joins that read the
-    same corpus through this helper share one exchange, so the bucket
-    kernel runs once per row however many joins it feeds."""
-    return (df.select(F.col(id_field).alias("__id"),
-                      F.posexplode(multi(F.col(field)))
-                      .alias("__tbl", "__bkt"))
-            .repartition("__tbl", "__bkt"))
-
-
 def _history_hits(df: DataFrame, history: DataFrame, config: Mapping,
                   h_field: str, h_id: str) -> DataFrame:
     """Ids (column ``id_field``, possibly repeated) of the valid ``df``
     rows within cosine ``threshold`` of a valid ``history`` row: the
-    candidate and verification half of dedup_embedding_against."""
-    field = config.get("field", "embedding")
+    candidate and verification half of dedup_embedding_against.
+    Invalid batch rows are never near-duplicates (the anti-join can't
+    hit them); invalid history rows match nothing."""
     id_field = config.get("id_field", "vec_id")
     threshold = float(config.get("threshold", 0.9))
-    dim = int(config.get("dim", 64))
-    n_planes = int(config.get("n_planes", 12))
-    n_tables = int(config.get("n_tables", 1))
-    seed = int(config.get("seed", 42))
-
-    # invalid embeddings are never near-duplicates: batch rows with
-    # invalid vectors survive (the anti-join can't hit them), invalid
-    # history rows match nothing (valid_vec contract — round-9 NULL
-    # crash + round-10 NaN/Inf lever)
-    cand_src = df.filter(valid_vec(F.col(field)))
-    history = history.filter(valid_vec(F.col(h_field)))
-
-    multi = _multi_bucket_udf(dim, n_planes, seed, n_tables)
-    # the batch keys go through the shuffle similarity_join uses, so
-    # dedup_embedding's self-join and this join share one exchange
-    bb = _table_keys(cand_src, field, id_field, multi) \
-        .withColumnRenamed("__id", "__bid")
-    hb = history.select(F.col(h_id).alias("__hid"),
-                        F.posexplode(multi(F.col(h_field)))
-                        .alias("__tbl", "__bkt"))
-    cands = (bb.join(hb, ["__tbl", "__bkt"])
-             .select("__bid", "__hid")
-             .dropDuplicates(["__bid", "__hid"]))
-    bside = cand_src.select(F.col(id_field).alias("__bid"),
-                            F.col(field).alias("__bemb"),
-                            _norm_of(F.col(field)).alias("__bnorm"))
-    hside = history.select(F.col(h_id).alias("__hid"),
-                           F.col(h_field).alias("__hemb"),
-                           _norm_of(F.col(h_field)).alias("__hnorm"))
-    return (cands.join(bside, "__bid").join(hside, "__hid")
-            .withColumn("__cos",
-                        _pair_dot_udf(F.col("__bemb"), F.col("__hemb"))
-                        / (F.col("__bnorm") * F.col("__hnorm")))
-            .filter(F.col("__cos") >= threshold)
-            .select(F.col("__bid").alias(id_field)))
+    batch = _side(df, config.get("field", "embedding"), id_field)
+    hist = _side(history, h_field, h_id)
+    multi = _lsh_kernel(config)
+    # the batch keys are similarity_join's, so dedup_embedding's
+    # self-join and this join share one exchange
+    pairs = _candidates(_table_keys(batch, multi),
+                        _table_keys(hist, multi, shared=False))
+    return (_verified(pairs, batch, hist)
+            .filter(F.col("cos_sim") >= threshold)
+            .select(F.col("id_a").alias(id_field)))
 
 
 @register("embedding_outlier")

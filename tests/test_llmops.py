@@ -326,6 +326,32 @@ def test_lsh_bucket_deterministic(vecs):
     assert a[0] == a[1]  # near-identical vectors share a bucket
 
 
+@pytest.mark.parametrize("n_planes,seed", [(12, 42), (62, 7)])
+def test_lsh_bucket_matches_numpy_reference(spark, n_planes, seed):
+    """lsh_bucket packs the sign of plane i's projection as 1 << i,
+    over `_hyperplanes(dim, n_planes, seed)`; NULL and invalid
+    vectors hash to NULL."""
+    import numpy as np
+
+    from blackroad_data_pipeline_spark.llmops.similarity import _hyperplanes
+
+    rng = np.random.RandomState(3)
+    vecs = [(i, [float(x) for x in rng.randn(8).astype(np.float32)])
+            for i in range(40)]
+    bad = [(40, None), (41, []), (42, [float("nan")] + [0.0] * 7)]
+    df = spark.createDataFrame(vecs + bad,
+                               "vec_id long, embedding array<float>")
+    planes = _hyperplanes(8, n_planes, seed)
+    want = {i: int(sum(1 << p for p in np.flatnonzero(
+                np.asarray(v, dtype=np.float32) @ planes.T > 0)))
+            for i, v in vecs}
+    want.update({i: None for i, _ in bad})
+    got = {r["vec_id"]: r["lsh_bucket"] for r in op(
+        "lsh_bucket", df,
+        {"dim": 8, "n_planes": n_planes, "seed": seed}).collect()}
+    assert got == want
+
+
 def test_ann_lsh_finds_near_neighbor(vecs):
     got = [r["vec_id"] for r in
            op("ann_lsh", vecs, {"probe_id": 0, "k": 3, "dim": 4, "n_planes": 4}).collect()]
@@ -358,6 +384,36 @@ def test_similarity_join_multi_table_amplifies_recall(vecs):
     assert got == exact and all(r["cos_sim"] >= 0.6 for r in rows)
     # no duplicate pairs despite multi-table candidate duplication
     assert len(rows) == len(got)
+
+
+def test_similarity_join_single_table_matches_numpy_reference(spark):
+    """At one table, similarity_join returns exactly the pairs a < b
+    that share a `_hyperplanes` bucket and have cosine >= threshold,
+    with their cosines (sf0.001 embeddings)."""
+    import numpy as np
+
+    from blackroad_data_pipeline_spark.llmops.similarity import _hyperplanes
+
+    e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    rows = sorted((r["vec_id"], r["embedding"]) for r in e.collect())
+    ids = np.array([i for i, _ in rows])
+    mat = np.array([v for _, v in rows], dtype=np.float32)
+    bits = (mat @ _hyperplanes(64, 4, 42).T) > 0
+    bucket = bits.astype(np.int64) @ (1 << np.arange(4))
+    m64 = mat.astype(np.float64)
+    norm = np.linalg.norm(m64, axis=1)
+    cos = (m64 @ m64.T) / np.outer(norm, norm)
+    same = (bucket[:, None] == bucket[None, :]) & (ids[:, None] < ids[None, :])
+    # no candidate sits within rounding of the threshold, so the pair
+    # set cannot depend on summation order
+    assert not (same & (np.abs(cos - 0.3) < 1e-9)).any()
+    want = {(int(ids[a]), int(ids[b])): cos[a, b]
+            for a, b in zip(*np.nonzero(same & (cos >= 0.3)))}
+    got = {(r["id_a"], r["id_b"]): r["cos_sim"] for r in op(
+        "similarity_join", e,
+        {"threshold": 0.3, "dim": 64, "n_planes": 4, "n_tables": 1}).collect()}
+    assert set(got) == set(want) and len(want) > 50
+    assert all(abs(got[p] - want[p]) < 1e-12 for p in want)
 
 
 def _knn_truth(rows, k, exclude_self=True):
@@ -1592,15 +1648,13 @@ def test_dedup_embedding_history_matches_two_step(spark, n_tables):
     history hits under one anti-join) keeps exactly the rows of the
     two-step dedup_embedding_against(dedup_embedding(batch), history).
 
-    Besides random rows and planted near-copies, the corpus plants the
-    cases where the two steps verify different row pairs, found with
-    the operator's own hyperplanes: a duplicated batch id whose second
-    vector is a near-copy of a smaller id but shares no bucket with it
-    while its first vector does (single-table within-batch pairs verify
-    only the colliding rows, so the id survives there), and duplicated
-    ids on either side of a history pair (against-pairs verify every
-    row of both ids, so the near-copy that shares no bucket still
-    drops its id). Also: ids shared between batch and history,
+    Besides random rows and planted near-copies, the corpus plants
+    duplicate-id cases found with the operator's own hyperplanes: a
+    duplicated batch id whose second vector is a near-copy of a smaller
+    id but shares no bucket with it while its first vector does, and
+    duplicated ids on either side of a history pair. Candidates are id
+    pairs at every table count, so every row of both ids is verified
+    and the near-copy that shares no bucket still drops its id. Also: ids shared between batch and history,
     NULL/NaN/empty vectors and a NULL id on both sides, exact copies,
     an array<double> history against an array<float> batch, a history
     whose ids are strings (batch ids keep their own numeric order),
@@ -1689,7 +1743,7 @@ def test_dedup_embedding_history_matches_two_step(spark, n_tables):
         assert rows(fused) == rows(two_step)
     kept = ids(fused)  # empty history: the within-batch decisions only
     assert kept.isdisjoint({150, 151, 161})
-    assert (201 in kept) == (n_tables == 1)
+    assert 201 not in kept
     kept = ids(op("dedup_embedding", bdf, {**cfg, "history": hdf},
                   views={}))
     assert kept.isdisjoint({140, 160, 3, 210, 220})
@@ -2354,36 +2408,54 @@ def test_null_embeddings_never_crash_vector_ops(spark):
     """Round-9 NULL-fixture sweep: a single NULL embedding used to
     crash every LSH/IVF kernel (np.vstack over a batch containing
     None). NULL vectors hash/assign to NULL, are never probes,
-    neighbors or dup candidates, and dedup keeps them."""
-    df = spark.createDataFrame(
-        [(0, [1.0, 0.0]), (1, [0.95, 0.05]), (2, None), (3, [0.0, 1.0])],
-        "vec_id long, embedding array<float>")
-    b = {r["vec_id"]: r["lsh_bucket"] for r in
-         op("lsh_bucket", df, {"dim": 2, "n_planes": 4}).collect()}
-    assert b[2] is None and b[0] is not None
-    iv = {r["vec_id"]: r["ivf_cell"] for r in
-          op("ivf_assign", df, {"dim": 2, "n_cells": 2}).collect()}
-    assert iv[2] is None and iv[0] is not None
-    for name, cfg in [
-            ("ann_bruteforce", {"probe_id": 0, "k": 10}),
-            ("ann_lsh", {"probe_id": 0, "k": 10, "dim": 2,
-                         "n_planes": 2, "probe_radius": 2}),
-            ("ann_ivf", {"probe_id": 0, "k": 10, "n_cells": 1,
-                         "nprobe": 1})]:
-        got = {r["vec_id"] for r in op(name, df, cfg).collect()}
-        assert 2 not in got and got, name
-        # a NULL-embedding probe id finds nothing rather than crashing
-        assert op(name, df, {**cfg, "probe_id": 2}).collect() == []
-    pairs = op("similarity_join", df, {
-        "threshold": 0.9, "dim": 2, "n_planes": 1}).collect()
-    assert {(r["id_a"], r["id_b"]) for r in pairs} == {(0, 1)}
-    kept = {r["vec_id"] for r in op("dedup_embedding", df, {
-        "threshold": 0.9, "dim": 2, "n_planes": 1}).collect()}
-    assert kept == {0, 2, 3}  # NULL row survives, near-dup 1 dropped
-    inc = {r["vec_id"] for r in op("dedup_embedding_against", df, {
-        "history": df, "threshold": 0.9, "dim": 2, "n_planes": 1,
-        "history_id_field": "vec_id"}, views={}).collect()}
-    assert 2 in inc  # NULL batch rows are never near-duplicates
+    neighbors or dup candidates, and dedup keeps them. The second
+    input adds zero vectors — one sharing a bucket with a near-dup
+    pair, and two that share one with each other: they divided by a
+    zero norm (DIVIDE_BY_ZERO under ANSI) in every cosine join, and
+    now score cosine 0, so they pair with nothing and survive dedup."""
+    base = [(0, [1.0, 0.0]), (1, [0.95, 0.05]), (2, None), (3, [0.0, 1.0])]
+    zeros = [(4, [0.0, 0.0]), (5, [0.0, 0.0]),
+             (6, [-1.0, -0.5]), (7, [-1.0, -0.6])]
+    for rows, zero_ids, near in ((base, set(), set()),
+                                 (base + zeros, {4, 5}, {(6, 7)})):
+        df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+        b = {r["vec_id"]: r["lsh_bucket"] for r in
+             op("lsh_bucket", df, {"dim": 2, "n_planes": 4}).collect()}
+        assert b[2] is None and b[0] is not None
+        iv = {r["vec_id"]: r["ivf_cell"] for r in
+              op("ivf_assign", df, {"dim": 2, "n_cells": 2}).collect()}
+        assert iv[2] is None and iv[0] is not None
+        for name, cfg in [
+                ("ann_bruteforce", {"probe_id": 0, "k": 10}),
+                ("ann_lsh", {"probe_id": 0, "k": 10, "dim": 2,
+                             "n_planes": 2, "probe_radius": 2}),
+                ("ann_ivf", {"probe_id": 0, "k": 10, "n_cells": 1,
+                             "nprobe": 1})]:
+            got = {r["vec_id"] for r in op(name, df, cfg).collect()}
+            assert 2 not in got and got, name
+            # a NULL-embedding probe id finds nothing rather than crashing
+            assert op(name, df, {**cfg, "probe_id": 2}).collect() == []
+        if zero_ids:  # the zero vectors do meet candidates at one plane
+            b1 = {r["vec_id"]: r["lsh_bucket"] for r in
+                  op("lsh_bucket", df, {"dim": 2, "n_planes": 1}).collect()}
+            assert b1[4] == b1[5] == b1[6] == b1[7]
+            op("ann_lsh", df, {"probe_id": 4, "k": 10, "dim": 2,
+                               "n_planes": 1}).collect()
+        for n_tables in (1, 3):
+            pairs = op("similarity_join", df, {
+                "threshold": 0.9, "dim": 2, "n_planes": 1,
+                "n_tables": n_tables}).collect()
+            assert {(r["id_a"], r["id_b"]) for r in pairs} == {(0, 1)} | near
+        kept = {r["vec_id"] for r in op("dedup_embedding", df, {
+            "threshold": 0.9, "dim": 2, "n_planes": 1}).collect()}
+        # NULL row and zero vectors survive, near-dups 1 and 7 dropped
+        assert kept == {0, 2, 3} | zero_ids | {a for a, _ in near}
+        inc = {r["vec_id"] for r in op("dedup_embedding_against", df, {
+            "history": df, "threshold": 0.9, "dim": 2, "n_planes": 1,
+            "history_id_field": "vec_id"}, views={}).collect()}
+        # NULL batch rows are never near-duplicates, and a zero vector
+        # is not one even of itself
+        assert {2} | zero_ids <= inc and 0 not in inc
 
 
 def test_vector_ops_degenerate_corpora(spark):

@@ -684,6 +684,15 @@ def test_knn_join_is_bucketed_and_batched(no_aqe):
     assert len(plans.arrow_python_nodes(df)) <= 4
 
 
+def _arrow_kernels(df):
+    """The Python UDF of each ArrowEvalPython node in the plan, sorted."""
+    import re
+
+    return sorted(re.findall(
+        r"^\(\d+\) ArrowEvalPython\n.*\nArguments: \[(\w+)\(",
+        plans.explain_text(df), re.M))
+
+
 def test_knn_join_lsh_mode_no_allpairs(no_aqe):
     """LSH-mode kNN-join: candidates come from (table, bucket) joins
     with narrow id-pair dedup — no cartesian, no nested-loop join,
@@ -695,11 +704,41 @@ def test_knn_join_lsh_mode_no_allpairs(no_aqe):
     assert not plans.has_node(df, "BroadcastNestedLoopJoin"), \
         plans.explain_text(df)
     plans.assert_no_row_python(df)
-    assert plans.shuffle_exchange_count(df) <= 6, plans.explain_text(df)
-    # Python touches data only through the stacked-matmul bucket
-    # kernel and the pair-dot kernel (VERDICT r9 #7: LSH mode now
-    # carries the same Arrow-count gate as the IVF cogroup mode)
-    assert len(plans.arrow_python_nodes(df)) <= 2, plans.explain_text(df)
+    # the shared (table, bucket) key exchange, the id-pair dedup and
+    # the per-query window
+    assert plans.shuffle_exchange_count(df) <= 3, plans.explain_text(df)
+    # Python touches data only through ONE stacked-matmul bucket
+    # kernel (self mode: both sides read one key exchange) and ONE
+    # pair-dot kernel (VERDICT r9 #7: LSH mode carries the same
+    # Arrow-count gate as the IVF cogroup mode)
+    assert _arrow_kernels(df) == ["_pair_dot_udf", "buckets"], \
+        plans.explain_text(df)
+
+
+@pytest.mark.parametrize("name,cfg", [
+    ("similarity_join", {"n_tables": 1}),
+    ("similarity_join", {"n_tables": 8}),
+    ("dedup_embedding", {"n_tables": 1}),
+    ("dedup_embedding", {"n_tables": 8}),
+    ("knn_join", {"method": "lsh", "k": 10, "n_tables": 1}),
+    ("knn_join", {"method": "lsh", "k": 10, "n_tables": 8}),
+], ids=lambda v: v if isinstance(v, str) else f"t{v['n_tables']}")
+def test_lsh_join_hashes_and_verifies_once(no_aqe, name, cfg):
+    """Every LSH vector join runs one candidate-and-verify path: ONE
+    bucket kernel whose (table, bucket) exchange both sides of the
+    self-join read, and ONE pair-dot per candidate — also where the
+    plan both filters on and returns the cosine (similarity_join), and
+    at one table. Still bucketed: no cartesian / nested-loop join, no
+    row-at-a-time Python."""
+    df = op(name, _embs(no_aqe),
+            {"threshold": 0.9, "dim": 64, "n_planes": 8, **cfg})
+    plans.assert_no_cartesian(df)
+    assert not plans.has_node(df, "BroadcastNestedLoopJoin"), \
+        plans.explain_text(df)
+    plans.assert_no_row_python(df)
+    assert _arrow_kernels(df) == ["_pair_dot_udf", "buckets"], \
+        plans.explain_text(df)
+    plans.assert_exchange_reuse(df, 1)
 
 
 def test_embedding_ingest_history_stays_int8(no_aqe):
