@@ -174,9 +174,9 @@ def _cpu_scaling(s, d):
     # a sub-second canary (the full-width JVM signature measured 21 s)
     docs = _docs(s, d).select(
         "doc_id", F.substring("text", 1, 256).alias("text"))
-    # width = session parallelism DIRECTLY (not pin_width): the canary
-    # exists to measure core scaling, so its width must always track
-    # the core count regardless of the pin knob
+    # width = session parallelism DIRECTLY (not fan_out, which caps
+    # at 8): the canary exists to measure core scaling, so its width
+    # must always track the core count
     wide = docs.repartition(s.sparkContext.defaultParallelism, "doc_id")
     sig = op("minhash", wide, {"field": "text", "shingle_size": 5,
                                "num_hashes": 8, "sig_impl": "jvm"})

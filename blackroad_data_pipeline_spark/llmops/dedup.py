@@ -19,7 +19,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..operators.parallel import fan_out, lit_frame, pin_width
+from ..operators.parallel import fan_out, lit_frame
 from ..operators.registry import register
 from .text import kgrams_col, tokens_col
 
@@ -1542,29 +1542,18 @@ def op_triangle_count(df: DataFrame, config: Mapping, views) -> DataFrame:
     # bounded by the orientation's sqrt(2m) out-degree cap, so rows
     # stay small and NO wedge stream ever shuffles — the win on
     # dense graphs (measured ~2x on the co-purchase contract).
-    # Width pinned at the session parallelism (round 13): the
-    # intersect stages are CPU-heavy per byte (one sorted-array
-    # intersection per edge over sqrt(2m)-bounded adjacency arrays),
-    # so AQE's size-based coalescing starves them — it saw ~6 MB and
-    # folded 32 partitions to 5, leaving 27 cores idle (measured
-    # 5.26 s -> 3.45 s at sf0.1 with the pin; identical count). Skew
-    # is already bounded by the orientation theorem, which is what
-    # AQE skew-splitting would otherwise buy on these joins.
-    # Round 14: width routed through the shared, knob-tunable helper
-    # (SPARK_GRAFT_WIDTH_PIN; ADVICE r13).
-    width = pin_width(df.sparkSession)
-    _rep = (lambda fr, key: fr.repartition(width, key)) if width \
-        else (lambda fr, key: fr)
-    adj = (_rep(oriented, "u").groupBy("u").agg(
-        F.sort_array(F.collect_list("v")).alias("__nbrs")))
+    # The stages keep the session's shuffle width: an explicit
+    # repartition to defaultParallelism on u and v measured no faster
+    # (bench.py triangles, sf0.1, 4 cores, 10 alternating process
+    # pairs: median 5.91 s with it, 5.51 s without).
+    adj = oriented.groupBy("u").agg(
+        F.sort_array(F.collect_list("v")).alias("__nbrs"))
     per_edge = (
-        _rep(oriented.select("u", "v"), "u")
+        oriented.select("u", "v")
         .join(adj.select(F.col("u").alias("u"),
-                         F.col("__nbrs").alias("__na")), "u"))
-    per_edge = (
-        _rep(per_edge, "v")
-        .join(_rep(adj.select(F.col("u").alias("v"),
-                              F.col("__nbrs").alias("__nb")), "v"), "v")
+                         F.col("__nbrs").alias("__na")), "u")
+        .join(adj.select(F.col("u").alias("v"),
+                         F.col("__nbrs").alias("__nb")), "v")
         .select(F.size(F.array_intersect("__na", "__nb")).alias("__t")))
     return per_edge.agg(
         F.coalesce(F.sum("__t"), F.lit(0)).cast("long")

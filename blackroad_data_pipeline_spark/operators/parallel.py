@@ -14,35 +14,18 @@ placed BEFORE the kernel: the exchange moves the raw input rows once
 (cheap relative to the kernel by construction — fan_out is only
 applied where the per-row work dominates), and the exchange doubles
 as the projection barrier that keeps Catalyst from collapsing the
-kernel into the scan stage. When the input already has at least
-``target`` partitions — any real at-scale table — it is a NO-OP: no
-extra exchange is ever added at 100 TB, so the production plan shape
-is unchanged.
+kernel into the scan stage. When the input already has at least as
+many partitions as the width below — any real at-scale table — it is
+a NO-OP: no extra exchange is ever added at 100 TB, so the
+production plan shape is unchanged.
 
-Width is SIZE-AWARE with a measured floor (round 14): the target is
-
-    min(defaultParallelism, max(8, leaf_scan_bytes // 128 MB))
-
-so a genuinely large starved input (one 50 GB gzip) fans to a width
-proportional to its bytes (guide §6's 128 MB split sizing) while small
-local inputs keep the measured knee of 8. The byte estimate sums the
-LEAF relation statistics of the optimized plan (real file sizes for
-file scans); leaves without statistics report Spark's Long.Max
-sentinel and are ignored, so join-heavy subtrees with garbage
-estimates safely fall back to the floor. Measured width sweep (sf0.1,
-min-of-N bench): standalone kernel queries plateau by width 8 (winnow
-4.87 s un-fanned -> 1.25 s at 8 -> 1.51 s at 32), while composed
-ingest chains whose band/signature subtrees re-execute per day
-DEGRADE with width because every extra task multiplies per-stage
-scheduling/Arrow overhead across dozens of stages.
-
-``SPARK_GRAFT_KERNEL_FANOUT`` pins the TARGET width for deployments
-whose starved inputs deserve more (``0`` disables fan-out entirely).
-Note the ``n >= target`` no-op still applies: the knob can only
-WIDEN a narrow input up to its value, never narrow an already-wide
-one (narrowing would add an exchange to at-scale plans). A malformed
-value is ignored with a one-time warning — it must never break the
-operators that widen.
+The width is ``min(defaultParallelism, 8)``. The cap of 8 is a
+measured knee (sf0.1, min-of-N bench, 32 cores): standalone kernel
+queries plateau by width 8 (winnow 4.87 s un-fanned -> 1.25 s at 8
+-> 1.51 s at 32), while composed ingest chains whose band/signature
+subtrees re-execute per day DEGRADE with width because every extra
+task multiplies per-stage scheduling/Arrow overhead across dozens of
+stages.
 
 Only partition-INVARIANT kernels may be fanned out (every call site
 is a per-row/per-doc deterministic function); order-sensitive kernels
@@ -52,17 +35,13 @@ is a per-row/per-doc deterministic function); order-sensitive kernels
 from __future__ import annotations
 
 import logging
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 
 log = logging.getLogger(__name__)
 
 # see module docstring: measured plateau/degradation knee at sf0.1
-_DEFAULT_MAX_WIDTH = 8
-# guide §6: 128 MB-1 GB per task for large scans; the floor above
-# dominates until a starved input exceeds 1 GB
-_TARGET_PARTITION_BYTES = 128 * 1024 * 1024
+_MAX_WIDTH = 8
 # leaf stats at or above this are Spark's "unknown size" sentinel
 # (defaultSizeInBytes = Long.Max) or join-estimate garbage — ignore
 _UNKNOWN_SIZE_FLOOR = 1 << 60
@@ -74,25 +53,6 @@ def _warn_once(key: str, msg: str, *args) -> None:
     if key not in _warned:
         _warned.add(key)
         log.warning(msg, *args)
-
-
-def _env_int(name: str) -> int | None:
-    """Integer knob ``name`` parsed defensively: ``None`` when unset or
-    malformed (ADVICE r13 — a bad value must not raise inside every
-    operator that reads it; it is ignored with a one-time warning),
-    else the non-negative int (``0`` is the knob's "disabled")."""
-    raw = os.environ.get(name, "")
-    if not raw:
-        return None
-    try:
-        v = int(raw.strip())
-    except ValueError:
-        v = -1
-    if v >= 0:
-        return v
-    _warn_once(f"{name}:{raw}", "ignoring malformed %s=%r (expected an "
-               "int >= 0); using the default", name, raw)
-    return None
 
 
 def overlap(*thunks):
@@ -112,8 +72,8 @@ def overlap(*thunks):
 def _leaf_scan_bytes(df: DataFrame) -> int:
     """Sum of the optimized plan's LEAF relation size statistics —
     real file bytes for file scans. Leaves without statistics (Spark
-    reports Long.Max) are skipped; any failure reports 0 so the caller
-    falls back to the measured floor."""
+    reports Long.Max) are skipped; any failure reports 0, which callers
+    read as "size unknown"."""
     try:
         leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
         total = 0
@@ -124,30 +84,21 @@ def _leaf_scan_bytes(df: DataFrame) -> int:
         return total
     except Exception:
         _warn_once("leaf_stats",
-                   "fan_out: leaf statistics unavailable for a plan; "
-                   "using the default width floor")
+                   "leaf statistics unavailable for a plan; "
+                   "treating its size as unknown")
         return 0
 
 
-def fan_out(df: DataFrame, max_width: int | None = None) -> DataFrame:
-    """Repartition ``df`` round-robin to the size-aware target width
+def fan_out(df: DataFrame) -> DataFrame:
+    """Repartition ``df`` round-robin to ``min(defaultParallelism, 8)``
     iff it currently has fewer partitions — a no-op on any input that
     already carries enough tasks. Streaming inputs are returned
     unchanged (their micro-batch partitioning is owned by the
     source)."""
-    knob = _env_int("SPARK_GRAFT_KERNEL_FANOUT")
-    if knob == 0:
-        return df
     if df.isStreaming:
         return df
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
-    if knob:
-        target = knob
-    else:
-        by_size = _leaf_scan_bytes(df) // _TARGET_PARTITION_BYTES
-        target = min(parallelism, max(_DEFAULT_MAX_WIDTH, by_size))
-    if max_width:
-        target = min(target, max_width)
+    target = min(df.sparkSession.sparkContext.defaultParallelism,
+                 _MAX_WIDTH)
     if target <= 1:
         return df
     try:
@@ -269,24 +220,3 @@ def lit_frame(spark: SparkSession, data, schema):
     return spark.createDataFrame(
         spark.sparkContext.parallelize(rows, slices), schema)
 
-
-def pin_width(spark: SparkSession) -> int | None:
-    """Width for EXPLICIT repartitions that keep CPU-heavy, low-byte
-    stages at session parallelism — AQE's size-based coalescing sees
-    a few MB of sorted-adjacency/shingle arrays and folds the stage
-    to a handful of tasks, idling the rest of the box (triangle_count
-    measured 5.26 s -> 3.45 s at sf0.1 with the pin; the minhash
-    verify stages are the same class). Returns ``None`` when pinning
-    is disabled.
-
-    Tunable via ``SPARK_GRAFT_WIDTH_PIN`` (``0`` disables the pins,
-    ``N`` pins that width) so deployments can A/B it — the ADVICE r13
-    ask. Distinct from SPARK_GRAFT_KERNEL_FANOUT because the two
-    mechanisms bound different costs: fan-out's knee caps per-stage
-    task overhead on RE-EXECUTED kernel subtrees, while pins apply to
-    terminal CPU-bound stages that run once and want every core.
-    """
-    v = _env_int("SPARK_GRAFT_WIDTH_PIN")
-    if v == 0:
-        return None
-    return v or spark.sparkContext.defaultParallelism

@@ -128,9 +128,13 @@ def row_python_nodes(df: DataFrame) -> list[str]:
 
 
 def arrow_python_nodes(df: DataFrame) -> list[str]:
-    """Arrow-batched Python nodes — allowed, but worth counting."""
-    text = explain_text(df)
-    return [n for n in _ARROW_PYTHON_NODES if n in text]
+    """The type of each Arrow-batched Python node in the physical plan,
+    one entry per node — allowed, but worth counting: a kernel planned
+    twice appears twice. Reads the numbered node details of the
+    formatted explain, so a node is counted once however the tree
+    prints it."""
+    return re.findall(rf"^\(\d+\) ({'|'.join(_ARROW_PYTHON_NODES)})$",
+                      explain_text(df), re.M)
 
 
 def codegen_stage_count(df: DataFrame) -> int:

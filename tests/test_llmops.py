@@ -112,14 +112,13 @@ def test_winnow_position_shift_invariance(spark):
     assert len(inter) >= len(fps[1]) * 0.5
 
 
-def test_winnow_validation_and_plan(spark, monkeypatch):
-    # knob-off: the shuffle budgets below pin the AT-SCALE plan shape,
-    # where fan_out is a structural no-op (inputs already wide). The
-    # LocalRelation fixture is 1 partition, so without the knob
-    # fan_out legitimately adds its widening exchange.
-    monkeypatch.setenv("SPARK_GRAFT_KERNEL_FANOUT", "0")
-    df = spark.createDataFrame([(1, "hello world")],
-                               "doc_id long, text string")
+def test_winnow_validation_and_plan(spark):
+    # the shuffle budgets below pin the AT-SCALE plan shape, where the
+    # input is already at least defaultParallelism wide and fan_out is
+    # a no-op — so build the one-row input over that many partitions
+    width = spark.sparkContext.defaultParallelism
+    df = spark.range(1, 2, numPartitions=width).selectExpr(
+        "id AS doc_id", "'hello world' AS text")
     with pytest.raises(ValueError, match="k and window"):
         op("winnow", df, {"k": 0}, views={})
     from blackroad_data_pipeline_spark.plans import quality as plans

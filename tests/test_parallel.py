@@ -1,28 +1,25 @@
-"""Adaptive kernel fan-out (operators/parallel.py, round 13).
+"""Adaptive kernel fan-out (operators/parallel.py).
 
 The helper must (1) widen an input that has fewer partitions than the
-session's default parallelism, (2) be a NO-OP on an input that is
-already at least that wide — the at-scale case, so production plans
-never gain an exchange — (3) honor the SPARK_GRAFT_KERNEL_FANOUT
-knob (0 = off, N = fixed width; SPARK_GRAFT_WIDTH_PIN shares its
-parser), and (4) never change operator output (the winnow Arrow
-kernel is the heaviest consumer — its fingerprint set must be
+session's default parallelism to min(defaultParallelism, 8), (2) be a
+NO-OP on an input that is already at least that wide — the at-scale
+case, so production plans never gain an exchange — (3) pass streaming
+inputs through, and (4) never change operator output (the winnow
+Arrow kernel is the heaviest consumer — its fingerprint set must be
 partitioning-invariant).
 """
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from blackroad_data_pipeline_spark.operators import apply_operator as op
-from blackroad_data_pipeline_spark.operators.parallel import fan_out, pin_width
+from blackroad_data_pipeline_spark.operators.parallel import fan_out
 
 SF = "/root/testdata/sf0.001"
 
 
-def test_fan_out_widens_starved_input(spark, monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_KERNEL_FANOUT", raising=False)
+def test_fan_out_widens_starved_input(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     assert docs.rdd.getNumPartitions() == 1  # single-row-group fixture
     # default width: session parallelism, capped at the measured knee
@@ -30,58 +27,30 @@ def test_fan_out_widens_starved_input(spark, monkeypatch):
     assert fan_out(docs).rdd.getNumPartitions() == target
 
 
-def test_fan_out_noop_on_wide_input(spark, monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_KERNEL_FANOUT", raising=False)
+def test_fan_out_noop_on_wide_input(spark):
     target = spark.sparkContext.defaultParallelism
     wide = spark.range(1000, numPartitions=target + 3)
     out = fan_out(wide)
     assert out is wide  # not just same width — the same plan object
 
 
-@pytest.mark.parametrize("knob", ["SPARK_GRAFT_KERNEL_FANOUT",
-                                  "SPARK_GRAFT_WIDTH_PIN"])
-def test_knob_disables_pins_and_ignores_malformed(spark, monkeypatch,
-                                                  caplog, knob):
-    """Both width knobs share one parser: ``0`` disables, ``N`` pins
-    that width, and a malformed value is ignored (the default applies)
-    with ONE warning — it must never raise inside an operator."""
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    default = spark.sparkContext.defaultParallelism
-    if knob == "SPARK_GRAFT_KERNEL_FANOUT":
-        def width():
-            out = fan_out(docs)
-            return None if out is docs else out.rdd.getNumPartitions()
-        default = min(default, 8)
-    else:
-        def width():
-            return pin_width(spark)
-    monkeypatch.setenv(knob, "0")
-    assert width() is None
-    monkeypatch.setenv(knob, "5")
-    assert width() == 5
-    for bad in ("five", "-3", "five"):
-        monkeypatch.setenv(knob, bad)
-        assert width() == default
-    warned = [r.getMessage() for r in caplog.records if knob in r.getMessage()]
-    assert len(warned) == 2 and all("malformed" in w for w in warned)
-
-
-def test_winnow_output_partitioning_invariant(spark, monkeypatch):
+def test_winnow_output_partitioning_invariant(spark):
     """The heaviest fan_out consumer must produce the identical
-    fingerprint SET fanned out or not (winnowing is doc-local)."""
+    fingerprint SET from the fanned 1-partition parquet input and from
+    an already-wide input that fan_out leaves alone (winnowing is
+    doc-local)."""
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     cfg = {"field": "text", "id_field": "doc_id", "k": 5, "window": 4}
-    monkeypatch.setenv("SPARK_GRAFT_KERNEL_FANOUT", "0")
-    plain = op("winnow", docs, cfg).collect()
-    monkeypatch.setenv("SPARK_GRAFT_KERNEL_FANOUT", "7")
     fanned = op("winnow", docs, cfg).collect()
+    wide = docs.repartition(spark.sparkContext.defaultParallelism + 3)
+    assert fan_out(wide) is wide
+    plain = op("winnow", wide, cfg).collect()
     key = lambda r: (r["doc_id"], r["pos"], r["fp"])  # noqa: E731
     assert sorted(map(key, plain)) == sorted(map(key, fanned))
     assert len(plain) > 0
 
 
-def test_fan_out_streaming_passthrough(spark, tmp_path, monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_KERNEL_FANOUT", raising=False)
+def test_fan_out_streaming_passthrough(spark, tmp_path):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     docs.write.mode("overwrite").parquet(str(tmp_path / "src"))
     stream = (spark.readStream.schema(docs.schema)
@@ -90,8 +59,7 @@ def test_fan_out_streaming_passthrough(spark, tmp_path, monkeypatch):
     assert fan_out(stream) is stream
 
 
-def test_fan_out_rows_survive(spark, monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_KERNEL_FANOUT", raising=False)
+def test_fan_out_rows_survive(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     n = docs.count()
     out = fan_out(docs.select("doc_id"))

@@ -2,9 +2,9 @@
 plans/<tag>/<query>_<suffix>.txt (round-13 optimization evidence).
 
 Usage: python tools/capture_plans.py <tag> <suffix> q1 q2 ...
-Set SPARK_GRAFT_KERNEL_FANOUT=0 first to capture the pre-fanout
-("before") plan — the knob-off code path is byte-identical to the
-pre-round-13 operators.
+The plans are those of the session as configured: single-row-group
+fixture files scan as one partition, so kernels carry the fan-out
+exchange (operators/parallel.py) that an at-scale table never gets.
 """
 
 from __future__ import annotations

@@ -23,15 +23,18 @@ from blackroad_data_pipeline_spark.session import get_spark
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
+    spark = get_spark("plan_report")
     # Report the AT-SCALE plan: the adaptive kernel fan-out
     # (operators/parallel.py) only fires when the scan yields fewer
-    # partitions than the session has cores — always true at sf0.001,
-    # never for a real at-scale table — so the 100 TB-relevant shuffle
-    # counts are the no-fanout ones (tests/test_plans.py gates the
-    # same shape; the fan-out's local speedup is measured in bench.py,
-    # which runs with the knob live).
-    os.environ.setdefault("SPARK_GRAFT_KERNEL_FANOUT", "0")
-    spark = get_spark("plan_report")
+    # partitions than the session has cores — true of every
+    # single-row-group sf0.001 file, never of a real at-scale table.
+    # Splitting the fixture files by bytes (no per-file open cost, at
+    # least defaultParallelism partitions per scan) gives the at-scale
+    # width, where fan_out is a no-op; tests/test_plans.py gates the
+    # same shape.
+    spark.conf.set("spark.sql.files.minPartitionNum",
+                   str(spark.sparkContext.defaultParallelism))
+    spark.conf.set("spark.sql.files.openCostInBytes", "0")
     # Report plans with AQE OFF: the AdaptiveSparkPlan explain repeats
     # each shared Exchange per consuming branch (the ReuseExchange
     # dedup only happens at stage-materialization time under AQE), so
