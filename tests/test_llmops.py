@@ -2264,15 +2264,179 @@ def test_ann_pq_codes_require_books(spark, vecs):
                             "codes": codes})
 
 
-def test_pq_books_geometry_mismatch_raises(spark, vecs):
+def test_pq_books_geometry_mismatch_raises(spark, vecs, tmp_path):
+    """In-memory and parquet-backed books alike: a mismatched geometry
+    raises on every call (nothing is cached before validation), and
+    the matching geometry still resolves afterwards."""
     books = op("pq_encode", vecs, {"dim": 4, "m": 2, "ks": 2,
                                    "emit": "books"})
-    with pytest.raises(ValueError, match="subspaces"):
-        op("pq_encode", vecs, {"dim": 4, "m": 4, "ks": 2,
-                               "books": books})
-    with pytest.raises(ValueError, match="codeword length"):
-        op("pq_encode", vecs, {"dim": 2, "m": 2, "ks": 2,
-                               "books": books})
+    books.write.parquet(str(tmp_path / "books"))
+    for src in (books, spark.read.parquet(str(tmp_path / "books"))):
+        for _ in range(2):
+            with pytest.raises(ValueError, match="subspaces"):
+                op("pq_encode", vecs, {"dim": 4, "m": 4, "ks": 2,
+                                       "books": src})
+            with pytest.raises(ValueError, match="codeword length"):
+                op("pq_encode", vecs, {"dim": 2, "m": 2, "ks": 2,
+                                       "books": src})
+        assert op("pq_encode", vecs, {"dim": 4, "m": 2, "ks": 2,
+                                      "books": src}).count() == 5
+
+
+@pytest.fixture()
+def emb64(spark):
+    import numpy as np
+
+    rng = np.random.RandomState(21)
+    return spark.createDataFrame(
+        [(i, rng.randn(64).tolist()) for i in range(200)],
+        "vec_id long, embedding array<float>")
+
+
+def test_served_models_resolve_once_per_file_identity(spark, emb64,
+                                                      tmp_path):
+    """A served ann_pq probe resolves parquet-backed books and cells to
+    arrays once per model identity: the first probe's build collects
+    the two models, the second (over fresh reads of the same files,
+    as every drain makes) runs no Spark job at build time and returns
+    the same rows — the rows of the uncached in-memory models."""
+    e = emb64
+    cfg = {"dim": 64, "m": 8, "ks": 16, "refine": 1}
+    books = op("pq_encode", e, {**cfg, "emit": "books"})
+    cells = op("ivf_assign", e, {"n_cells": 4, "emit": "cells"})
+    codes = op("ivf_assign", op("pq_encode", e, {**cfg, "books": books}),
+               {"n_cells": 4, "cells": cells}).select(
+        "vec_id", "pq_code", "ivf_cell")
+    books.write.parquet(str(tmp_path / "books"))
+    cells.write.parquet(str(tmp_path / "cells"))
+    probe = list(e.filter("vec_id = 7").first()["embedding"])
+    pcfg = {**cfg, "probe": probe, "k": 10, "rerank": 40, "n_cells": 4,
+            "nprobe": 2, "codes": codes}
+
+    want = [tuple(r) for r in op("ann_pq", e, {
+        **pcfg, "books": books, "cells": cells}).collect()]
+    sc = spark.sparkContext
+    jobs = []
+    for i in range(2):
+        models = {k: spark.read.parquet(str(tmp_path / k))
+                  for k in ("books", "cells")}
+        group = f"{tmp_path.name}-build-{i}"  # counts the build's jobs
+        sc.setJobGroup(group, group)
+        try:
+            plan = op("ann_pq", e, {**pcfg, **models})
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+        assert [tuple(r) for r in plan.collect()] == want
+    assert jobs == [2, 0]
+
+
+def test_served_models_follow_an_in_place_overwrite(spark, emb64,
+                                                    tmp_path):
+    """Overwriting a model directory with a different model: a fresh
+    read serves the new model's adc_dist, and the stale DataFrame
+    (listing the deleted files) raises, as its collect always did."""
+    e = emb64
+    cfg = {"dim": 64, "m": 8, "ks": 4, "refine": 1}
+    old = op("pq_encode", e, {**cfg, "seed_order": "id", "emit": "books"})
+    new = op("pq_encode", e, {**cfg, "seed_order": "hash",
+                              "emit": "books"})
+
+    def adc(books):
+        return [(r["vec_id"], r["adc_dist"]) for r in op(
+            "ann_pq", e, {**cfg, "probe_id": 0, "k": 10,
+                          "books": books}).collect()]
+
+    p = str(tmp_path / "books")
+    old.write.parquet(p)
+    stale = spark.read.parquet(p)
+    assert adc(stale) == adc(old)
+    new.write.mode("overwrite").parquet(p)
+    assert adc(spark.read.parquet(p)) == adc(new) != adc(old)
+    with pytest.raises(Exception, match="FILE_NOT_EXIST|FileNotFound"):
+        adc(stale)
+
+
+def test_served_models_see_a_model_refresh(spark, tmp_path):
+    """model_refresh between two probes on a managed model root: the
+    second probe's fresh read of the root serves the new version. Each
+    version's filtered view of the versioned books table is its own
+    cache entry; cached arrays are read-only, and a model that is not
+    read from files is resolved on every call."""
+    import numpy as np
+
+    from blackroad_data_pipeline_spark.llmops import similarity as sim
+    from blackroad_data_pipeline_spark.store import (
+        store_current_version,
+        store_resolve,
+    )
+
+    dim = 8
+
+    def vec(center, bump, eps):
+        v = [0.0] * dim
+        v[center] = 1.0
+        v[(center + 3) % dim] += eps
+        v[4] += bump
+        return v
+
+    def frame(first, bump_cell, bump):
+        return spark.createDataFrame(
+            [(first + i, vec(i % 2, bump if i % 2 == bump_cell else 0.0,
+                             0.01 * ((i % 5) - 2))) for i in range(40)],
+            "vec_id long, embedding array<float>")
+
+    base, shift, shift2 = frame(0, 1, 0.0), frame(200, 1, 0.5), \
+        frame(400, 0, 0.7)
+    cells = spark.createDataFrame(
+        [(0, [1.0] + [0.0] * 7), (1, [0.0, 1.0] + [0.0] * 6)],
+        "cell int, centroid array<double>")
+    pq = {"dim": dim, "m": 2, "ks": 2, "refine": 1, "seed_order": "id"}
+    root = str(tmp_path / "models")
+
+    def served(sub):
+        return spark.read.parquet(f"{store_resolve(root)}/{sub}")
+
+    def probe(books=None):
+        return [tuple(r) for r in op("ann_pq", shift, {
+            **pq, "probe": [0.5, 0.25, 0.0, 0.0, 0.5, 0.0, 0.0, 0.0],
+            "k": 40, "books": books or served("books")},
+            views={}).collect()]
+
+    refresh = {**pq, "threshold": 0.10, "n_cells": 2, "store": base,
+               "model_root": root}
+    op("model_refresh", shift, {
+        **refresh, "cells": cells, "books": op(
+            "pq_encode", base, {**pq, "emit": "books"}),
+        "baseline": base}, views={}).collect()
+    assert store_current_version(root) == "v000001"
+    first = probe()
+    op("model_refresh", shift2, {
+        **refresh, "cells": served("cells"), "books": served("books"),
+        "baseline": shift, "version_old": 1}, views={}).collect()
+    assert store_current_version(root) == "v000002"
+    in_memory = spark.createDataFrame(served("books").collect(),
+                                      served("books").schema)
+    second = probe()
+    assert second == probe(in_memory)
+    assert second != first
+
+    versioned = sim.read_versioned_books(spark, root)
+
+    def version(v):
+        return sim._books_np(versioned.filter(F.col("model_version") == v)
+                             .drop("model_version"), dim, 2, "test")
+
+    b1, b2 = version(1), version(2)
+    assert not np.array_equal(b1, b2)
+    assert version(1) is b1 and version(2) is b2
+    assert np.array_equal(b2, sim._books_np(served("books"), dim, 2,
+                                            "test"))
+    with pytest.raises(ValueError, match="read-only"):
+        b1[0, 0, 0] = 0
+    fresh = sim._books_np(in_memory, dim, 2, "test")
+    assert fresh.flags.writeable
+    assert sim._books_np(in_memory, dim, 2, "test") is not fresh
 
 
 def test_ann_ivfpq_exhaustive_equals_plain_adc(spark):

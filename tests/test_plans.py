@@ -901,6 +901,35 @@ def test_ann_pq_served_plan_is_pure_jvm(no_aqe, tmp_path):
     assert any("ivf_cell" in f for f in plans.pushed_filters(pruned)), \
         plans.explain_text(pruned)
 
+    # rerank: the driver-held probe is scored as one array literal, so
+    # no probe frame is scanned and nothing joins against it
+    reranked = op("ann_pq", e, {**cfg, "probe": [0.1] * 64, "k": 10,
+                                "rerank": 40, "n_cells": 4, "nprobe": 1,
+                                "books": stored_books,
+                                "codes": stored_codes,
+                                "cells": stored_cells})
+    plans.assert_no_cartesian(reranked)  # no BroadcastNestedLoopJoin
+    assert not plans.has_node(reranked, "LocalTableScan"), \
+        plans.explain_text(reranked)
+    assert len(plans.arrow_python_nodes(reranked)) == 0, \
+        plans.explain_text(reranked)
+    assert plans.shuffle_exchange_count(reranked) <= 1, \
+        plans.explain_text(reranked)
+
+
+def test_ann_ivf_probe_is_a_literal(no_aqe):
+    """ann_ivf holds its probe on the driver (it ranks the cells with
+    it): the rerank scores that probe as one array literal — no probe
+    LocalTableScan, no BroadcastNestedLoopJoin — and the only Python
+    is the cell-assign kernel."""
+    df = op("ann_ivf", _embs(no_aqe),
+            {"probe_id": 0, "k": 10, "dim": 64, "n_cells": 4, "nprobe": 2})
+    plans.assert_no_cartesian(df)
+    plans.assert_no_row_python(df)
+    assert not plans.has_node(df, "LocalTableScan"), plans.explain_text(df)
+    assert len(plans.arrow_python_nodes(df)) == 1, plans.explain_text(df)
+    assert plans.shuffle_exchange_count(df) == 0, plans.explain_text(df)
+
 
 def test_ann_ivfpq_prune_precedes_encode(no_aqe):
     """IVFADC plan gate (round 10), internal-training mode: the cell

@@ -124,6 +124,29 @@ def test_shuffle_width_follows_declared_cores(monkeypatch):
     assert opts["spark.sql.shuffle.partitions"] == str(os.cpu_count())
 
 
+def test_driver_heap_follows_physical_memory(monkeypatch):
+    """Two fifths of physical memory in whole GiB, between 1g and 32g;
+    SPARK_GRAFT_DRIVER_MEM overrides it."""
+    real = os.sysconf
+    gib = {}
+
+    def sysconf(name):
+        if name == "SC_PAGE_SIZE":
+            return 4096
+        if name == "SC_PHYS_PAGES":
+            return gib["n"] * 2 ** 30 // 4096
+        return real(name)
+
+    monkeypatch.setattr(os, "sysconf", sysconf)
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    for n, want in ((16, "6g"), (15, "6g"), (2, "1g"), (1, "1g"),
+                    (64, "25g"), (512, "32g")):
+        gib["n"] = n
+        assert _builder_options(monkeypatch)["spark.driver.memory"] == want
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
+    assert _builder_options(monkeypatch)["spark.driver.memory"] == "3g"
+
+
 def test_daemon_module_default_and_override(monkeypatch):
     opts = _builder_options(monkeypatch)
     assert opts["spark.python.daemon.module"] == \
