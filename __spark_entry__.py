@@ -24,11 +24,14 @@ from blackroad_data_pipeline_spark.operators.parallel import lit_frame, overlap
 
 # Parity-subset scale knob (round 10, VERDICT r9 #6): the recall~1
 # parity pairs verify against BY-DESIGN-QUADRATIC exact oracles, so
-# their subsets must shrink as the fixture grows or sf10 sweeps have
-# to exempt them permanently. SPARK_GRAFT_PARITY_SCALE multiplies
-# every parity modulus — unset (=1) reproduces the exact contract
-# geometry the driver samples; tools/sf10_sweep.py sets it so the
-# SAME pair definitions stay feasible at 200k vectors / 500k docs.
+# their subsets must shrink as the fixture grows or large-fixture
+# sweeps have to exempt them permanently. SPARK_GRAFT_PARITY_SCALE
+# multiplies every parity modulus — unset (=1) reproduces the exact
+# contract geometry; a `tools/check_oracle.py` run over a generated
+# sf1+ clone sets it so the SAME pair definitions stay feasible
+# there. Pick a scale coprime with the gates' inner
+# splits (2/8/20; 101 works): a shared factor empties one side of a
+# split and the pair passes vacuously.
 # The Spark closure and the oracle SQL both read the derived moduli,
 # so the two sides can never disagree about the subset.
 _PSCALE = int(os.environ.get("SPARK_GRAFT_PARITY_SCALE", "1"))

@@ -169,6 +169,9 @@ SCALE_PROBES = {
 def _cpu_scaling(s, d):
     from pyspark.sql import functions as F
 
+    from blackroad_data_pipeline_spark.llmops.dedup import (
+        minhash_signature, shingles_col)
+
     # first 256 chars / 8 hash families: enough interpreted per-row
     # work to be compute-bound at any core count, small enough to stay
     # a sub-second canary (the full-width JVM signature measured 21 s)
@@ -178,12 +181,12 @@ def _cpu_scaling(s, d):
     # at 8): the canary exists to measure core scaling, so its width
     # must always track the core count
     wide = docs.repartition(s.sparkContext.defaultParallelism, "doc_id")
-    sig = op("minhash", wide, {"field": "text", "shingle_size": 5,
-                               "num_hashes": 8, "sig_impl": "jvm"})
+    sh = shingles_col(F.col("text"), 5)
+    sig = F.when(F.size(sh) > 0, minhash_signature(sh, 8))
     # modulo before summing: raw minhash values span int64 and a plain
     # SUM overflows under ANSI
-    h = F.element_at("minhash_sig", 1)
-    return sig.select(F.pmod(h, F.lit(1_000_000_007)).alias("h")).agg(
+    h = F.element_at(sig, 1)
+    return wide.select(F.pmod(h, F.lit(1_000_000_007)).alias("h")).agg(
         F.sum("h").alias("sig_sum"), F.count(F.lit(1)).alias("n"))
 
 

@@ -75,7 +75,9 @@ def minhash_signature(shingle_col: Column, num_hashes: int) -> Column:
     h_i(s) = xxhash64(s, i) (seeding via an appended literal —
     deterministic everywhere). O(num_hashes * n_shingles) hash calls
     in interpreted higher-order functions — correct but slow for large
-    signatures; the Arrow kernel below is the hot-path default.
+    signatures. No operator signs with it (they all use
+    minhash_text_kernel, a different family); it is the CPU-bound
+    all-JVM workload of bench.py's core-scaling canary.
 
     The seed must be captured via a closure over a ONE-parameter
     lambda: a ``lambda s, i=i:`` default-arg would make pyspark treat
@@ -164,30 +166,16 @@ def _signatures(idx_lists, vocab: dict, a, b, num_hashes: int):
             for ix in idx_lists]
 
 
-def minhash_kernel(num_hashes: int, seed: int = 0x5EED):
-    """Arrow-batched minhash signatures from SHINGLE ARRAYS: md5 each
-    BATCH-UNIQUE shingle once (the Zipf argument from the simhash
-    kernel — digest calls dominate, vocab is far smaller than the
-    shingle stream), then all families via one vectorized affine
-    transform. Deterministic across processes/partitions."""
-    a, b = _affine_family(num_hashes, seed)
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def sig(shingles: pd.Series) -> pd.Series:
-        vocab: dict[str, int] = {}
-        idx_lists = [_vocab_index(sh, vocab) for sh in shingles]
-        return pd.Series(_signatures(idx_lists, vocab, a, b, num_hashes))
-
-    return sig
-
-
 def minhash_text_kernel(k: int, num_hashes: int, seed: int = 0x5EED):
     """Text -> minhash signature in ONE Arrow kernel: tokenize +
-    k-shingle (_shingle_set, identical semantics to shingles_col) and
-    hash batch-deduped shingles (same family as minhash_kernel). Only
-    the text strings cross the Arrow boundary, not the ~k-times-larger
-    shingle arrays, and the interpreted JVM higher-order shingling
-    (the measured bottleneck) is replaced by a tight Python loop."""
+    k-shingle (_shingle_set, identical semantics to shingles_col), then
+    md5 each BATCH-UNIQUE shingle once (the Zipf argument from the
+    simhash kernel — digest calls dominate, vocab is far smaller than
+    the shingle stream) and apply all families as one vectorized
+    affine transform. Only the text strings cross the Arrow boundary,
+    not the ~k-times-larger shingle arrays, and the interpreted JVM
+    higher-order shingling (the measured bottleneck) is replaced by a
+    tight Python loop. Deterministic across processes/partitions."""
     a, b = _affine_family(num_hashes, seed)
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
@@ -228,31 +216,142 @@ def shingle_explode(df: DataFrame, id_field: str, field: str, k: int) -> DataFra
     return fan_out(df.select(id_field, field)).mapInPandas(explode, schema)
 
 
-def _sig_col(config: Mapping, shingles: Column, num_hashes: int) -> Column:
-    """Signature column per the configured implementation: the Arrow
-    kernel (default — one digest per batch-unique shingle) or the
-    all-JVM xxhash expression path (``sig_impl: "jvm"``). Both are
-    min-wise independent families; banding math is identical."""
-    if config.get("sig_impl", "arrow") == "jvm":
-        # NULL signature for zero-shingle (NULL-text) docs, matching
-        # the Arrow kernel (round-11 NULL-text contract)
-        return F.when(F.size(shingles) > 0,
-                      minhash_signature(shingles, num_hashes))
-    return minhash_kernel(num_hashes)(shingles)
-
-
 @register("minhash")
 def op_minhash(df: DataFrame, config: Mapping, views) -> DataFrame:
+    """Append ``minhash_sig``: the ``num_hashes`` (default 32) minhash
+    values of the distinct ``shingle_size``-token shingles (default 3)
+    of ``field`` — the signatures near_dup_minhash and minhash_bands
+    band, from the same Arrow kernel. NULL text gets a NULL signature;
+    an empty or whitespace-only document keeps one empty shingle."""
     field = config.get("field", "text")
     k = int(config.get("shingle_size", 3))
     num_hashes = int(config.get("num_hashes", 32))
-    sh = shingles_col(F.col(field), k)
-    return df.withColumn("minhash_sig", _sig_col(config, sh, num_hashes))
+    return df.withColumn("minhash_sig",
+                         minhash_text_kernel(k, num_hashes)(F.col(field)))
 
 
 # --------------------------------------------------------------------------
 # MinHash-LSH near-duplicate pairs
 # --------------------------------------------------------------------------
+
+
+def _text_side(df: DataFrame, field: str, id_field: str) -> DataFrame:
+    """(__id, __t) rows of one side of a minhash join, widened by
+    ``fan_out``: the signature kernel and the exact-verify shingling
+    both read this frame, and one unsplittable input file would
+    serialize both onto one task."""
+    return fan_out(df.select(F.col(id_field).alias("__id"),
+                             F.col(field).alias("__t")))
+
+
+def _band_entries_col(bands: int, rows: int) -> Column:
+    """(band_idx, band_hash) structs from the ``__sig`` signature
+    column — one banding for every minhash op, so a stored band table
+    is joinable against any freshly-signed batch. NULL signatures
+    (zero-shingle / NULL-text docs) yield a NULL array so the band
+    explode SKIPS them — xxhash64(NULL) would otherwise hash the bare
+    seed and band every NULL doc with every other (round 11)."""
+    return F.when(F.col("__sig").isNotNull(), F.array(*[
+        F.struct(
+            F.lit(b).alias("band_idx"),
+            F.xxhash64(F.array_join(
+                F.transform(F.slice("__sig", b * rows + 1, rows),
+                            lambda x: x.cast("string")), ",")).alias("band_hash"),
+        )
+        for b in range(bands)
+    ]))
+
+
+def _shared(keys: DataFrame) -> DataFrame:
+    """Band keys shuffled on (band_idx, band_hash), so every join that
+    reads them reuses one exchange and whatever computed them runs
+    once. Two things keep the branches' plans identical: the
+    dropDuplicates (free on that partitioning) pins the key projection,
+    where column pruning would give a branch that reads only the ids
+    its own plan; and NULL ids, which pair with nothing in any join
+    reading shared keys, are dropped here, where an ``isnotnull`` the
+    joins infer would otherwise reach the key source under some
+    branches only. Either split re-runs the kernel."""
+    return (keys.filter(F.col("__id").isNotNull())
+            .repartition("band_idx", "band_hash").dropDuplicates())
+
+
+def _band_keys(side: DataFrame, k: int, bands: int, rows: int,
+               shared: bool = True) -> DataFrame:
+    """(__id, band_idx, band_hash): the ``bands`` band keys of each doc
+    of a `_text_side` frame — the only place a text frame is signed.
+    Keys that more than one join reads are `_shared`; keys only one
+    join reads are left to it, which may broadcast them."""
+    keys = (side.withColumn("__sig",
+                            minhash_text_kernel(k, bands * rows)(F.col("__t")))
+            .select("__id", F.explode(_band_entries_col(bands, rows)).alias("b"))
+            .select("__id", "b.band_idx", "b.band_hash"))
+    return _shared(keys) if shared else keys
+
+
+def _text_candidates(a: DataFrame, b: DataFrame, pred: Column | None = None,
+                     max_bucket: int = 0) -> DataFrame:
+    """Distinct (id_a, id_b) pairs of two band-key frames that share a
+    band and satisfy ``pred`` (over id_a/id_b). Only ids ride the band
+    join; text attaches per unique pair in `_jaccard_verified`.
+
+    ``max_bucket`` (0 = uncapped) drops every band bucket holding more
+    than that many keys of the INDEX side ``b`` before the join: the
+    join is O(|a| * |b|) per bucket, and at corpus scale a boilerplate
+    bucket (thousands of identical headers/licenses) goes quadratic
+    (the winnow_overlap ``max_postings`` precedent). In a self-join
+    (``a is b``) that side is the whole bucket and the cap must be at
+    least 2, since a pair needs two docs. The count window rides the
+    join's own band-key exchange, so the cap adds no shuffle."""
+    self_join = a is b
+    if max_bucket < 0 or (self_join and max_bucket == 1):
+        raise ValueError(f"max_bucket must be 0 (uncapped) or >= "
+                         f"{2 if self_join else 1}, got {max_bucket}")
+    if max_bucket:
+        n = F.count(F.lit(1)).over(Window.partitionBy("band_idx", "band_hash"))
+        b = b.withColumn("__bc", n).filter(F.col("__bc") <= max_bucket).drop("__bc")
+        if self_join:
+            a = b
+    pairs = a.withColumnRenamed("__id", "id_a").join(
+        b.withColumnRenamed("__id", "id_b"), ["band_idx", "band_hash"])
+    if pred is not None:
+        pairs = pairs.filter(pred)
+    return pairs.select("id_a", "id_b").dropDuplicates()
+
+
+def _jaccard_verified(pairs: DataFrame, a: DataFrame, b: DataFrame,
+                      k: int, threshold: float) -> DataFrame:
+    """(id_a, id_b, jaccard) of each candidate pair whose exact
+    shingle-set jaccard is >= ``threshold``; ``a`` and ``b`` are the
+    `_text_side` frames its ids come from. A semi-join prunes each side
+    to its candidate ids first, so each candidate doc is shingled once
+    per side and the corpus never is — no corpus-scale persist needed
+    (the text scan happens twice, but a pruned parquet scan is cheap).
+    A verify-side width pin was tried and rejected (round 14): the
+    small id side broadcasts, so the corpus side is never shuffled,
+    and a pin added a full-corpus text exchange (1.37 -> 2.13 s)."""
+    def shingled(side: DataFrame, ids: DataFrame) -> DataFrame:
+        return (side.join(ids.dropDuplicates(), "__id", "left_semi")
+                .select("__id", shingles_col(F.col("__t"), k).alias("__sh")))
+
+    ids_a = pairs.select(F.col("id_a").alias("__id"))
+    ids_b = pairs.select(F.col("id_b").alias("__id"))
+    if a is b:
+        sets_a = sets_b = shingled(a, ids_a.unionByName(ids_b))
+    else:
+        sets_a, sets_b = shingled(a, ids_a), shingled(b, ids_b)
+
+    def attach(sets: DataFrame, tag: str) -> DataFrame:
+        return sets.select(F.col("__id").alias(f"id_{tag}"),
+                           F.col("__sh").alias(f"sh_{tag}"))
+
+    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
+    union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
+    return (pairs.join(attach(sets_a, "a"), "id_a")
+            .join(attach(sets_b, "b"), "id_b")
+            .withColumn("jaccard", inter / union)
+            .filter(F.col("jaccard") >= threshold)
+            .select("id_a", "id_b", "jaccard"))
 
 
 @register("near_dup_minhash")
@@ -263,101 +362,24 @@ def op_near_dup_minhash(df: DataFrame, config: Mapping, views) -> DataFrame:
     docs agreeing on any whole band land in one bucket. The self-join
     shuffles on (band_idx, band_hash) — bucket-sized groups, never the
     corpus. Exact shingle-set jaccard then verifies candidates, so LSH
-    recall tuning can't create false positives.
+    recall tuning can't create false positives. Both self-join
+    branches read one band-key exchange, so each doc is signed once.
 
-    ``max_bucket`` (default 0 = uncapped, exact-parity mode) bounds
-    the per-bucket self-join: the join is O(|bucket|²) per bucket, and
-    at corpus scale a boilerplate-heavy bucket (thousands of
-    near-identical headers/licenses) goes quadratic. With a cap,
-    buckets holding more than ``max_bucket`` doc ids are DROPPED
-    before the join (the winnow_overlap ``max_postings`` precedent) —
-    docs lose at most those buckets' candidate pairs, and a doc dense
-    enough to blow the cap is boilerplate by definition; route such
-    corpora through dedup_exact first. The bucket count rides the same
-    bucket-key exchange the join already needs, so the cap adds no
-    shuffle.
+    ``max_bucket`` (default 0 = uncapped, exact-parity mode; else at
+    least 2) drops buckets holding more than that many docs before the
+    join — docs lose at most those buckets' candidate pairs, and a doc
+    dense enough to blow the cap is boilerplate by definition; route
+    such corpora through dedup_exact first (see `_text_candidates`).
     """
-    field = config.get("field", "text")
-    id_field = config.get("id_field", "doc_id")
+    side = _text_side(df, config.get("field", "text"),
+                      config.get("id_field", "doc_id"))
     k = int(config.get("shingle_size", 3))
-    bands = int(config.get("bands", 8))
-    rows = int(config.get("rows_per_band", 4))
-    threshold = float(config.get("threshold", 0.8))
-    num_hashes = bands * rows
-
-    # adaptive kernel width (round 13): the signature kernel AND the
-    # exact-verify shingling below both read this frame — one
-    # unsplittable input file would serialize both onto one task
-    base = fan_out(
-        df.select(F.col(id_field).alias("__id"), F.col(field).alias("__t")))
-    if config.get("sig_impl", "arrow") == "jvm":
-        sigs = base.withColumn(
-            "__sig", minhash_signature(shingles_col(F.col("__t"), k), num_hashes))
-    else:
-        # text -> signature in one Arrow kernel: only the text crosses
-        # to Python, shingling runs batch-deduped (the JVM higher-order
-        # shingling was the measured bottleneck, not the hashing)
-        sigs = base.withColumn(
-            "__sig", minhash_text_kernel(k, num_hashes)(F.col("__t")))
-
-    band_entries = _band_entries_col(bands, rows)
-    # band join on ids ONLY — shuffling signatures or text through the
-    # bucket explosion would multiply the payload by `bands`. The
-    # explicit repartition on the bucket key makes BOTH self-join
-    # branches share ONE exchange (and one signature computation):
-    # without it each branch re-evaluates the whole upstream plan,
-    # doubling the kernel work (measured 3.6x on candidate generation)
-    buckets = (sigs.select("__id", F.explode(band_entries).alias("b"))
-               .repartition("b"))
-    max_bucket = int(config.get("max_bucket", 0))
-    if max_bucket:
-        if max_bucket < 2:
-            raise ValueError(f"max_bucket must be >= 2 (or 0 for "
-                             f"uncapped), got {max_bucket}")
-        from pyspark.sql import Window
-        bc = F.count(F.lit(1)).over(Window.partitionBy("b"))
-        buckets = (buckets.withColumn("__bc", bc)
-                   .filter(F.col("__bc") <= max_bucket).drop("__bc"))
-    cands = (
-        buckets.select(F.col("__id").alias("id_a"), "b")
-        .join(buckets.select(F.col("__id").alias("id_b"), "b"), ["b"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    # exact-jaccard verification shingles ONLY the candidate docs: a
-    # semi-join prunes the corpus to candidate ids first, so the
-    # expensive shingle construction runs over |candidates| rows, not
-    # the corpus — no corpus-scale persist needed anywhere (the text
-    # scan happens twice, but a pruned parquet scan is cheap; caching
-    # a 100 TB shingle table is not)
-    cand_ids = (cands.select(F.col("id_a").alias("__id"))
-                .unionByName(cands.select(F.col("id_b").alias("__id")))
-                .dropDuplicates(["__id"]))
-    # verify-side width pin: tried and REJECTED (round 14, VERDICT
-    # r13 #4 carry). Both placements measured SLOWER at sf0.1: the
-    # tiny cand_ids side BROADCASTS, so the corpus side is never
-    # shuffled — pinning before the semi-join added a full-corpus
-    # text exchange (near_dup_minhash 1.37 -> 2.13 s), and pinning
-    # the pruned post-join frame still paid a new exchange + 32-task
-    # scheduling for a stage that wasn't the bottleneck (2.10 s; pin
-    # disabled: 1.39 s). Unlike triangle_count's intersects, there is
-    # no pre-existing exchange here for the pin to widen.
-    sets = (base.join(cand_ids, "__id", "left_semi")
-            .select("__id", shingles_col(F.col("__t"), k).alias("__shingles")))
-    attached = (
-        cands.join(sets.select(F.col("__id").alias("id_a"),
-                               F.col("__shingles").alias("sh_a")), "id_a")
-        .join(sets.select(F.col("__id").alias("id_b"),
-                          F.col("__shingles").alias("sh_b")), "id_b")
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
-    return (
-        attached.withColumn("jaccard", inter / union)
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    keys = _band_keys(side, k, int(config.get("bands", 8)),
+                      int(config.get("rows_per_band", 4)))
+    pairs = _text_candidates(keys, keys, F.col("id_a") < F.col("id_b"),
+                             int(config.get("max_bucket", 0)))
+    return _jaccard_verified(pairs, side, side, k,
+                             float(config.get("threshold", 0.8)))
 
 
 @register("dedup_near_minhash")
@@ -1233,25 +1255,6 @@ def op_near_dup_hamming(df: DataFrame, config: Mapping, views) -> DataFrame:
     )
 
 
-def _band_entries_col(bands: int, rows: int) -> Column:
-    """(band_idx, band_hash) structs from the ``__sig`` signature
-    column — the banding shared by near_dup_minhash, minhash_bands
-    and dedup_near_against (identical hashing, so a stored band table
-    is joinable against any freshly-signed batch). NULL signatures
-    (zero-shingle / NULL-text docs) yield a NULL array so the band
-    explode SKIPS them — xxhash64(NULL) would otherwise hash the bare
-    seed and band every NULL doc with every other (round 11)."""
-    return F.when(F.col("__sig").isNotNull(), F.array(*[
-        F.struct(
-            F.lit(b).alias("band_idx"),
-            F.xxhash64(F.array_join(
-                F.transform(F.slice("__sig", b * rows + 1, rows),
-                            lambda x: x.cast("string")), ",")).alias("band_hash"),
-        )
-        for b in range(bands)
-    ]))
-
-
 @register("minhash_bands")
 def op_minhash_bands(df: DataFrame, config: Mapping, views) -> DataFrame:
     """The NARROW minhash band store for a corpus: one (id, band_idx,
@@ -1260,23 +1263,12 @@ def op_minhash_bands(df: DataFrame, config: Mapping, views) -> DataFrame:
     this is what incremental near-dup joins new batches against at
     100 TB — `dedup_near_against` with ``history_is_bands`` never
     re-reads or re-signs history text."""
-    field = config.get("field", "text")
     id_field = config.get("id_field", "doc_id")
-    k = int(config.get("shingle_size", 3))
-    bands = int(config.get("bands", 8))
-    rows = int(config.get("rows_per_band", 4))
-    base = fan_out(df.select(F.col(id_field), F.col(field).alias("__t")))
-    if config.get("sig_impl", "arrow") == "jvm":
-        sigs = base.withColumn(
-            "__sig", minhash_signature(shingles_col(F.col("__t"), k),
-                                       bands * rows))
-    else:
-        sigs = base.withColumn(
-            "__sig", minhash_text_kernel(k, bands * rows)(F.col("__t")))
-    return (sigs.select(id_field,
-                        F.explode(_band_entries_col(bands, rows)).alias("b"))
-            .select(id_field, F.col("b.band_idx").alias("band_idx"),
-                    F.col("b.band_hash").alias("band_hash")))
+    side = _text_side(df, config.get("field", "text"), id_field)
+    keys = _band_keys(side, int(config.get("shingle_size", 3)),
+                      int(config.get("bands", 8)),
+                      int(config.get("rows_per_band", 4)), shared=False)
+    return keys.select(F.col("__id").alias(id_field), "band_idx", "band_hash")
 
 
 @register("dedup_near_against")
@@ -1295,85 +1287,60 @@ def op_dedup_near_against(df: DataFrame, config: Mapping, views) -> DataFrame:
     history doc, never its text). With raw history, candidates are
     verified by EXACT shingle-set jaccard >= ``threshold`` on the
     semi-join-pruned pair set (LSH tuning can only lose recall,
-    never create false drops); with a band store there is no text to
-    verify against, so band agreement itself decides — size
-    bands/rows_per_band for the precision the corpus needs.
+    never create false drops), and each side is signed once however
+    many verify branches read its keys; with a band store there is
+    no text to verify against, so band agreement itself decides —
+    size bands/rows_per_band for the precision the corpus needs.
+
+    ``batch_bands`` (round 14): a PRECOMPUTED band table for the
+    batch side — the incremental-ingest pattern just WROTE the day's
+    minhash_bands store, and re-signing the batch here would run the
+    signature kernel a second time over the same documents. It must
+    cover every batch doc id; extra ids are harmless, because the
+    final anti-join only drops batch ids. Bands are a per-doc
+    deterministic function, so a table computed from any superset of
+    the batch (same config) is exactly equal on the batch ids.
+
+    ``max_bucket`` (default 0 = uncapped) drops band buckets holding
+    more than that many HISTORY docs, the unbounded side: a
+    boilerplate bucket with H history docs multiplies every matching
+    batch doc by H (see `_text_candidates`).
     """
     field = config.get("field", "text")
     id_field = config.get("id_field", "doc_id")
+    h_id = config.get("history_id_field", id_field)
     k = int(config.get("shingle_size", 3))
-    threshold = float(config.get("threshold", 0.8))
+    bands = int(config.get("bands", 8))
+    rows = int(config.get("rows_per_band", 4))
+    verify = not config.get("history_is_bands")
     history = config["history"]
     if isinstance(history, str):
         history = views[history]
-
-    # ``batch_bands`` (round 14): a PRECOMPUTED band table for the
-    # batch side — the incremental-ingest pattern just WROTE the
-    # day's minhash_bands store, and re-signing the batch here would
-    # run the signature kernel a second time over the same documents.
-    # Must cover every batch doc id (extra ids are harmless: the
-    # candidate set is intersected with the batch by the final
-    # anti-join's key equality). Bands are a per-doc deterministic
-    # function, so a minhash_bands table computed from any superset
-    # of the batch (same config) is exactly equal on the batch ids.
     bb = config.get("batch_bands")
-    if bb is not None:
-        if isinstance(bb, str):
-            bb = views[bb]
-        batch_bands = bb.select(F.col(id_field).alias("__bid"),
-                                "band_idx", "band_hash")
-    else:
-        batch_bands = op_minhash_bands(df, config, views).select(
-            F.col(id_field).alias("__bid"), "band_idx", "band_hash")
-    if config.get("history_is_bands"):
-        h_id = config.get("history_id_field", id_field)
-        hist_bands = history.select(F.col(h_id).alias("__hid"),
-                                    "band_idx", "band_hash")
-        verify = False
-    else:
-        h_field = config.get("history_field", field)
-        h_id = config.get("history_id_field", id_field)
-        hist_bands = op_minhash_bands(
-            history, {**config, "field": h_field, "id_field": h_id}, views
-        ).select(F.col(h_id).alias("__hid"), "band_idx", "band_hash")
-        verify = True
+    if isinstance(bb, str):
+        bb = views[bb]
 
-    max_bucket = int(config.get("max_bucket", 0))
-    if max_bucket:
-        # same hazard class as near_dup_minhash's self-join: a
-        # boilerplate band bucket with H history docs multiplies every
-        # matching batch doc by H. Cap the HISTORY side (the unbounded
-        # one); the count window shares the join's bucket-key exchange.
-        from pyspark.sql import Window as _W
-        bc = F.count(F.lit(1)).over(_W.partitionBy("band_idx",
-                                                   "band_hash"))
-        hist_bands = (hist_bands.withColumn("__bc", bc)
-                      .filter(F.col("__bc") <= max_bucket).drop("__bc"))
-    cands = (batch_bands.join(hist_bands, ["band_idx", "band_hash"])
-             .select("__bid", "__hid").dropDuplicates(["__bid", "__hid"]))
+    # raw-history verification reads the candidate pairs from three
+    # branches, so both key frames are shared; a band store's pairs
+    # feed the final anti-join only
+    def keys(side: DataFrame | None, stored: DataFrame | None,
+             stored_id: str) -> DataFrame:
+        if stored is None:
+            return _band_keys(side, k, bands, rows, shared=verify)
+        got = stored.select(F.col(stored_id).alias("__id"),
+                            "band_idx", "band_hash")
+        return _shared(got) if verify else got
 
+    batch = _text_side(df, field, id_field) if verify or bb is None else None
+    hist = (_text_side(history, config.get("history_field", field), h_id)
+            if verify else None)
+    pairs = _text_candidates(keys(batch, bb, id_field),
+                             keys(hist, None if verify else history, h_id),
+                             max_bucket=int(config.get("max_bucket", 0)))
     if verify:
-        # exact verification over the pruned candidate pair set only
-        # (verify-side width pin tried and rejected — see
-        # op_near_dup_minhash)
-        b_sets = (fan_out(df.select(id_field, field))
-                  .join(cands.select(F.col("__bid").alias(id_field))
-                        .dropDuplicates(), id_field, "left_semi")
-                  .select(F.col(id_field).alias("__bid"),
-                          shingles_col(F.col(field), k).alias("sh_b")))
-        h_field = config.get("history_field", field)
-        h_sets = (fan_out(history.select(h_id, h_field))
-                  .join(cands.select(F.col("__hid").alias(h_id))
-                        .dropDuplicates(), h_id, "left_semi")
-                  .select(F.col(h_id).alias("__hid"),
-                          shingles_col(F.col(h_field), k).alias("sh_h")))
-        attached = cands.join(b_sets, "__bid").join(h_sets, "__hid")
-        inter = F.size(F.array_intersect("sh_b", "sh_h")).cast("double")
-        union = F.size(F.array_union("sh_b", "sh_h")).cast("double")
-        losers = (attached.filter(inter / union >= threshold)
-                  .select(F.col("__bid").alias(id_field)).dropDuplicates())
-    else:
-        losers = cands.select(F.col("__bid").alias(id_field)).dropDuplicates()
+        pairs = _jaccard_verified(pairs, batch, hist, k,
+                                  float(config.get("threshold", 0.8)))
+    losers = pairs.select(F.col("id_a").alias(id_field)).dropDuplicates()
     return df.join(losers, id_field, "left_anti")
 
 

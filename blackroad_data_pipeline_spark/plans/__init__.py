@@ -1,6 +1,7 @@
 """Plan-quality tooling: make the physical plan a testable artifact."""
 
 from .quality import (  # noqa: F401
+    arrow_kernels,
     arrow_python_nodes,
     assert_broadcast_join,
     assert_exchange_reuse,

@@ -137,6 +137,30 @@ def arrow_python_nodes(df: DataFrame) -> list[str]:
                       explain_text(df), re.M)
 
 
+# one numbered Arrow node of the formatted explain, up to its
+# Arguments line (the Python function calls, plus attribute lists)
+_ARROW_NODE_ARGS = re.compile(
+    rf"^\(\d+\) (?:{'|'.join(_ARROW_PYTHON_NODES)})\n"
+    r"(?:(?!\(\d+\) ).*\n)*?Arguments: (.*)$", re.M)
+
+
+def arrow_kernels(df: DataFrame) -> list[str]:
+    """The Python function of each Arrow node in the physical plan,
+    sorted, one entry per call — an ArrowEvalPython node evaluating two
+    UDFs contributes both. A kernel planned twice (two branches that
+    each recompute it, say) appears twice. A call prints as
+    ``name(args)#exprId`` inside the node's Arguments; attribute lists
+    and the result slots (``pythonUDF0#12``) carry no call."""
+    out = []
+    for args in _ARROW_NODE_ARGS.findall(explain_text(df)):
+        for part in _split_top_level(args):
+            calls = (_split_top_level(part[1:-1]) if part.startswith("[")
+                     else [part])
+            out += [m.group(1) for c in calls
+                    if (m := re.match(r"(\w+)\(.*\)#\d+\w*$", c))]
+    return sorted(out)
+
+
 def codegen_stage_count(df: DataFrame) -> int:
     """Number of WholeStageCodegen spans — fused JVM loops. More rows
     per span = fewer virtual calls; 0 on a non-trivial relational plan

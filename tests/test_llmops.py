@@ -244,8 +244,9 @@ def test_near_dup_minhash_max_bucket_caps_boilerplate(spark):
     # uncapped default still finds the boilerplate clique
     assert op("near_dup_minhash", df, cfg) \
         .filter("id_a = 0 AND id_b = 1").count() == 1
-    with pytest.raises(ValueError, match="max_bucket"):
-        op("near_dup_minhash", df, {**cfg, "max_bucket": 1})
+    for bad in (1, -1):  # a pair needs two docs; negative is no cap
+        with pytest.raises(ValueError, match="max_bucket"):
+            op("near_dup_minhash", df, {**cfg, "max_bucket": bad})
 
 
 def test_dedup_near_against_max_bucket_caps_history_buckets(spark):
@@ -273,6 +274,16 @@ def test_dedup_near_against_max_bucket_caps_history_buckets(spark):
                       op("dedup_near_against", batch,
                          {**cfg, "max_bucket": 50}).collect())
     assert kept_cap == [9000, 9002]    # boilerplate bucket dropped
+    # the cap counts history docs only, so 1 is a valid cap here: the
+    # one-doc fox buckets stay, the boilerplate bucket goes
+    kept_one = sorted(r["doc_id"] for r in
+                      op("dedup_near_against", batch,
+                         {**cfg, "max_bucket": 1}).collect())
+    assert kept_one == [9000, 9002]
+    # a negative cap is an error, not a filter that drops every
+    # history bucket and silently keeps the whole batch
+    with pytest.raises(ValueError, match="max_bucket"):
+        op("dedup_near_against", batch, {**cfg, "max_bucket": -1})
 
 
 def test_dedup_near_minhash(docs):
@@ -1038,6 +1049,63 @@ def test_minhash_kernels_null_safe(spark):
         {"threshold": 0.5, "shingle_size": 2,
          "bands": 8, "rows_per_band": 1}).collect())
     assert kept == [1, 2, 3]               # NULL doc 1 always survives
+
+
+# op("minhash") signatures (shingle_size 3, num_hashes 4) and
+# minhash_bands rows (shingle_size 3, bands 2, rows_per_band 2) of
+# _EDGE_DOCS, as the shingle-array kernel op_minhash used before it
+# moved to minhash_text_kernel produced them. The text kernel must
+# reproduce every value: stored band tables and signatures written
+# by either kernel stay joinable.
+_EDGE_DOCS = [(1, None), (2, ""), (3, "   "), (4, "one"), (5, "two words"),
+              (6, "a\u00a0b c d e"), (7, "a b\u2028c d e"),
+              (8, "  a b c d e  "), (9, "a b c d e"), (10, "x\ty\nz w")]
+_EMPTY_SIG = [-2608726455055691902, 9038257086830599211,
+              -7390968786820569706, 8594037559843211343]
+_ABCDE_SIG = [114203739584733820, 1439208222015056781,
+              748447773888214057, 2082310009022996057]
+_PINNED_SIGS = {
+    1: None, 2: _EMPTY_SIG, 3: _EMPTY_SIG,
+    4: [2445534796296560213, 6846815684488565258,
+        -2031595785364178633, 2708597335007785712],
+    5: [4140703713356303559, -6799015578075569980,
+        -265633605638249603, -684062614985758922],
+    6: [6043707440601524571, 4265591033735125160,
+        748447773888214057, -2844856490231022254],
+    7: [6522690820902957227, 3701583409899980533,
+        -6378953532939379764, 1006704495991838853],
+    8: _ABCDE_SIG, 9: _ABCDE_SIG,
+    10: [4445738898504804054, 4945753545221907814,
+         8890796664428364274, 1858651880014868884],
+}
+_EMPTY_BANDS = [-1693470171474622632, 7362898851892035615]
+_ABCDE_BANDS = [-9050920889413019749, 1240047522938163632]
+_PINNED_BANDS = {
+    2: _EMPTY_BANDS, 3: _EMPTY_BANDS,
+    4: [4521587587924798609, -6441878091919512729],
+    5: [-3479886827216729648, 6042940822464318376],
+    6: [-7222704556942260981, 3124964058989113155],
+    7: [-4035511565181214292, -3431499849798732128],
+    8: _ABCDE_BANDS, 9: _ABCDE_BANDS,
+    10: [6512073187560528735, -8694618185670706441],
+}
+
+
+def test_minhash_outputs_pinned_on_edge_docs(spark):
+    """NULL (no signature, no bands), empty and whitespace-only docs
+    (one empty shingle), docs shorter than k, NBSP and U+2028 inside
+    tokens (not separators: the JVM splits on ASCII whitespace only),
+    padding, tabs and newlines — each signature and band row equals
+    the pinned value."""
+    df = spark.createDataFrame(_EDGE_DOCS, "doc_id long, text string")
+    sigs = {r["doc_id"]: r["minhash_sig"] for r in op(
+        "minhash", df, {"shingle_size": 3, "num_hashes": 4}).collect()}
+    assert sigs == _PINNED_SIGS
+    bands = {}
+    for r in op("minhash_bands", df, {"shingle_size": 3, "bands": 2,
+                                      "rows_per_band": 2}).collect():
+        bands.setdefault(r["doc_id"], {})[r["band_idx"]] = r["band_hash"]
+    assert {i: [b[0], b[1]] for i, b in bands.items()} == _PINNED_BANDS
 
 
 def test_shingle_kernels_match_jvm_on_unicode_whitespace(spark):

@@ -413,6 +413,39 @@ def test_minhash_runtime_adaptive_plan_reuses_exchanges(spark):
     assert len(re.findall(r"ReusedExchange", text)) >= 1, text
 
 
+def test_minhash_ops_sign_each_side_once(no_aqe, tmp_path):
+    """Every minhash op signs each text input exactly once: the
+    self-join's two branches and raw-history dedup_near_against's
+    three verify branches all read shared band-key exchanges (the
+    raw-history form used to plan its signature kernel six times).
+    A stored band table is never re-signed."""
+    d = _docs(no_aqe)
+    hist, batch = d.filter("doc_id % 2 = 0"), d.filter("doc_id % 2 = 1")
+    for name, frame in (("h", hist), ("b", batch)):
+        op("minhash_bands", frame, MINHASH_SCALE).write.parquet(
+            str(tmp_path / name))
+    h_bands = no_aqe.read.parquet(str(tmp_path / "h"))
+    b_bands = no_aqe.read.parquet(str(tmp_path / "b"))
+    raw = {**MINHASH_SCALE, "history": hist}
+    stored = {**MINHASH_SCALE, "history": h_bands, "history_is_bands": True}
+    cases = {
+        "near_dup_minhash": (op("near_dup_minhash", d, MINHASH_SCALE), 1),
+        "near_dup_minhash capped": (op("near_dup_minhash", d, {
+            **MINHASH_SCALE, "max_bucket": 50}), 1),
+        "dedup_near_minhash": (op("dedup_near_minhash", d, MINHASH_SCALE), 1),
+        "raw history": (op("dedup_near_against", batch, raw), 2),
+        "raw history capped": (op("dedup_near_against", batch, {
+            **raw, "max_bucket": 50}), 2),
+        "band history": (op("dedup_near_against", batch, stored), 1),
+        "band history, batch bands": (op("dedup_near_against", batch, {
+            **stored, "batch_bands": b_bands}), 0),
+    }
+    for case, (df, want) in cases.items():
+        assert plans.arrow_kernels(df).count("sig") == want, \
+            (case, plans.explain_text(df))
+        plans.assert_no_cartesian(df)
+
+
 def test_analytic_suite_plans_broadcast_and_push(spark):
     """TPC-H-derived multi-join suite: dimension joins broadcast (no
     cartesian products), predicates reach the scans, and each query
@@ -697,15 +730,6 @@ def test_knn_join_is_bucketed_and_batched(no_aqe):
     assert len(plans.arrow_python_nodes(df)) <= 3, plans.explain_text(df)
 
 
-def _arrow_kernels(df):
-    """The Python UDF of each ArrowEvalPython node in the plan, sorted."""
-    import re
-
-    return sorted(re.findall(
-        r"^\(\d+\) ArrowEvalPython\n.*\nArguments: \[(\w+)\(",
-        plans.explain_text(df), re.M))
-
-
 def test_knn_join_lsh_mode_no_allpairs(no_aqe):
     """LSH-mode kNN-join: candidates come from (table, bucket) joins
     with narrow id-pair dedup — no cartesian, no nested-loop join,
@@ -724,7 +748,7 @@ def test_knn_join_lsh_mode_no_allpairs(no_aqe):
     # kernel (self mode: both sides read one key exchange) and ONE
     # pair-dot kernel (VERDICT r9 #7: LSH mode carries the same
     # Arrow-count gate as the IVF cogroup mode)
-    assert _arrow_kernels(df) == ["_pair_dot_udf", "buckets"], \
+    assert plans.arrow_kernels(df) == ["_pair_dot_udf", "buckets"], \
         plans.explain_text(df)
 
 
@@ -749,7 +773,7 @@ def test_lsh_join_hashes_and_verifies_once(no_aqe, name, cfg):
     assert not plans.has_node(df, "BroadcastNestedLoopJoin"), \
         plans.explain_text(df)
     plans.assert_no_row_python(df)
-    assert _arrow_kernels(df) == ["_pair_dot_udf", "buckets"], \
+    assert plans.arrow_kernels(df) == ["_pair_dot_udf", "buckets"], \
         plans.explain_text(df)
     plans.assert_exchange_reuse(df, 1)
 
@@ -953,3 +977,68 @@ def test_ann_ivfpq_prune_precedes_encode(no_aqe):
     a2 = a1 + 1 + toks[a1 + 1:].index("ArrowEvalPython (")
     assert "Filter (" in toks[a1 + 1:a2], txt
     assert plans.shuffle_exchange_count(df) <= 2, txt
+
+
+# Contract queries allowed to plan an Arrow kernel more than once:
+# (query, kernel) -> (count, reason). Every other query plans each
+# kernel at most once (AQE off, wide scans — the tools/plan_report.py
+# settings). A kernel "planned twice" runs twice over its rows.
+REPEATED_KERNELS = {
+    ("dedup_near_against", "sig"): (2, "two inputs: batch and history"),
+    ("dedup_embedding_against", "buckets"): (
+        2, "two inputs: batch and history"),
+    ("contamination", "explode"): (2, "two inputs: corpus and benchmark"),
+    ("knn_join", "assign"): (
+        2, "two kernels: the query side probes nprobe cells, the index "
+           "side takes one"),
+    ("ann_ivfpq", "assign"): (
+        2, "two kernels: the IVF cell and the PQ code of each row"),
+    ("ann_ivf", "assign"): (
+        2, "the recall gate reads the approximate top-k twice (its size "
+           "and its overlap with the exact top-k)"),
+    ("ann_lsh", "buckets"): (
+        3, "the probe row, plus the corpus once per recall-gate branch"),
+    ("near_dup_simhash", "simhash_udf"): (
+        3, "the query recomputes simhash as an independent check; the "
+           "candidate branch evaluates the kernel twice per row, once "
+           "for an inferred isnotnull filter (a known defect)"),
+    ("ann_pq_served", "assign"): (
+        2, "the PQ encode evaluates the kernel twice per row, once for "
+           "an inferred isnotnull(pq_code) filter (a known defect)"),
+    ("ann_pq_versioned", "assign"): (
+        4, "two model versions, each encoding twice per row as in "
+           "ann_pq_served (a known defect)"),
+    ("ngram_jaccard", "explode"): (
+        2, "the document-frequency aggregate reads only the shingle "
+           "column of the shared posting exchange, so column pruning "
+           "gives it an exchange of its own (a known defect)"),
+    ("dedup_against_bloom", "_bloom_maybe"): (
+        5, "the bloom-negative and bloom-positive branches each probe "
+           "every batch row and within_batch reads both twice; sharing "
+           "the probe through repartition('__fp') still planned 5 "
+           "probes and added 3 shuffles of every batch row, which the "
+           "prefilter exists to avoid"),
+}
+
+
+def _contract_names():
+    import __spark_entry__ as entry
+
+    return list(entry.queries())
+
+
+@pytest.mark.parametrize("name", _contract_names())
+def test_contract_query_plans_each_kernel_once(no_aqe, name):
+    """One repeated-kernel gate over the whole contract surface: a
+    kernel planned more than once must be in REPEATED_KERNELS, with
+    exactly the count recorded there."""
+    from collections import Counter
+
+    import __spark_entry__ as entry
+
+    df = entry.queries()[name](no_aqe, SF)
+    got = {kernel: n for kernel, n in
+           Counter(plans.arrow_kernels(df)).items() if n > 1}
+    allowed = {kernel: n for (q, kernel), (n, _) in REPEATED_KERNELS.items()
+               if q == name}
+    assert got == allowed, plans.explain_text(df)

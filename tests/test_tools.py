@@ -149,29 +149,6 @@ def test_gen_fixture_nan_planting(tmp_path):
     assert 0.1 * len(emb) < n_bad < 0.3 * len(emb)
 
 
-def test_sf10_sweep_scale_must_be_coprime_with_inner_splits():
-    """ADVICE r10: a parity scale sharing a factor with a gate's inner
-    modulus (e.g. 100 vs dedup_near_against's doc_id % 2 split) empties
-    one side of the split, and the pair passes vacuously. The sweep
-    must refuse such scales and default to a coprime one."""
-    import math
-    import subprocess
-    import sys
-
-    sys.path.insert(0, "/root/repo/tools")
-    import sf10_sweep
-
-    # the default must be coprime with every declared inner modulus
-    for m in sf10_sweep.INNER_MODULI.values():
-        assert math.gcd(sf10_sweep.DEFAULT_SCALE, m) == 1
-
-    r = subprocess.run(
-        [sys.executable, "tools/sf10_sweep.py", "--scale", "100", "x"],
-        capture_output=True, text=True, cwd="/root/repo")
-    assert r.returncode == 2
-    assert "VACUOUSLY" in r.stdout
-
-
 def test_gen_fixture_skew_and_garble_levers(tmp_path):
     """Round-12 levers: --skew-zipf produces a genuinely hot key
     whose identity is DECORRELATED from the parity moduli (permuted

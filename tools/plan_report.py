@@ -1,9 +1,9 @@
 """Plan-quality report over every contract query.
 
 Prints a table of the physical-plan properties that matter at 100 TB
-(shuffle count, join strategies, Python eval nodes, codegen spans,
-pushed filters) for each `__spark_entry__.queries()` entry at sf0.001,
-and writes PLANS.md. Complements tests/test_plans.py (which gates the
+(shuffle count, join strategies, Python eval nodes and their
+kernels, codegen spans, pushed filters) for each
+`__spark_entry__.queries()` entry at sf0.001, and writes PLANS.md. Complements tests/test_plans.py (which gates the
 key properties) with full-surface visibility.
 
 Usage: python tools/plan_report.py [sf_dir]
@@ -13,12 +13,19 @@ from __future__ import annotations
 
 import os
 import sys
+from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod
 from blackroad_data_pipeline_spark import plans
 from blackroad_data_pipeline_spark.session import get_spark
+
+
+def _kernels(df) -> str:
+    counts = Counter(plans.arrow_kernels(df))
+    return ", ".join(k if n == 1 else f"{k}×{n}"
+                     for k, n in sorted(counts.items())) or "—"
 
 
 def main() -> int:
@@ -55,8 +62,10 @@ def main() -> int:
         "re-execute their upstream without reuse), joins (strategy",
         "list), pyrow (row-at-a-time Python nodes — must be 0), arrow",
         "(Arrow-batched Python nodes — the sanctioned escape hatch),",
-        "codegen (WholeStageCodegen spans), pushed (predicates reaching",
-        "a file scan).",
+        "kernels (the Python function of each Arrow node, ×n when one is",
+        "planned n times — `plans.arrow_kernels`), codegen",
+        "(WholeStageCodegen spans), pushed (predicates reaching a file",
+        "scan).",
         "",
         "Reading notes: a BroadcastNestedLoopJoin in the ANN probes is the",
         "intended shape — it broadcasts a SINGLE probe row against the scan",
@@ -65,8 +74,9 @@ def main() -> int:
         "time and return a checkpointed result, so their reported plan is",
         "the post-fixpoint consumer plan.",
         "",
-        "| query | shuffles | reused | joins | pyrow | arrow | codegen | pushed |",
-        "|---|---|---|---|---|---|---|---|",
+        "| query | shuffles | reused | joins | pyrow | arrow | kernels "
+        "| codegen | pushed |",
+        "|---|---|---|---|---|---|---|---|---|",
     ]
     for name, fn in entry_mod.queries().items():
         try:
@@ -78,11 +88,12 @@ def main() -> int:
                 f"| {', '.join(plans.join_strategies(df)) or '—'} "
                 f"| {len(plans.row_python_nodes(df))} "
                 f"| {len(plans.arrow_python_nodes(df))} "
+                f"| {_kernels(df)} "
                 f"| {plans.codegen_stage_count(df)} "
                 f"| {len(plans.pushed_filters(df))} |"
             )
         except Exception as e:  # noqa: BLE001 — report, don't abort the table
-            row = f"| {name} | ERROR: {type(e).__name__}: {e} | | | | | | |"
+            row = f"| {name} | ERROR: {type(e).__name__}: {e} | | | | | | | |"
         lines.append(row)
         print(row)
     out = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
