@@ -603,6 +603,12 @@ def simhash_udf(texts: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
+# Marked nondeterministic in place, as similarity's `_pair_dot_udf` is:
+# a filter Catalyst infers on the sketch then stays above the projection
+# that computes it, instead of re-running the kernel below it.
+simhash_udf.asNondeterministic()
+
+
 @register("simhash")
 def op_simhash(df: DataFrame, config: Mapping, views) -> DataFrame:
     field = config.get("field", "text")
@@ -802,8 +808,16 @@ def op_ngram_jaccard_join(df: DataFrame, config: Mapping, views) -> DataFrame:
     # one Arrow pass corpus -> posting rows, immediately repartitioned
     # on the shingle key: the freq aggregation AND the freq join both
     # hang off that single exchange, so the kernel runs once and the
-    # groupBy needs no further shuffle
-    inverted = shingle_explode(base, "__id", "__t", k).repartition("__s")
+    # groupBy needs no further shuffle. As in `_shared`, two things keep
+    # both branches on that one exchange: the dropDuplicates (free on
+    # that partitioning; a doc's shingles are distinct) pins the
+    # projection, which the aggregation would prune to the shingle
+    # column, and NULL ids, which pair with nothing, are dropped here,
+    # where the isnotnull the prefix joins infer would otherwise reach
+    # the postings under one branch only
+    inverted = (shingle_explode(base, "__id", "__t", k)
+                .filter(F.col("__id").isNotNull())
+                .repartition("__s").dropDuplicates())
     freq = inverted.groupBy("__s").agg(F.count(F.lit(1)).alias("__df"))
     prefix_len = F.col("__n") - F.ceil(F.lit(threshold) * F.col("__n")) + 1
     prefix = (

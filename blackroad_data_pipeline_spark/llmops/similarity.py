@@ -35,7 +35,7 @@ def valid_vec(col: Column) -> Column:
     they have no position in cosine/L2 space, and engines DISAGREE
     about them (Spark orders NaN largest in min/max, floor(NaN)
     long-casts to 0 while DuckDB propagates NaN; an empty array
-    crashes np.vstack). Filter-ops drop the row; annotate-ops emit
+    fails the batch decode). Filter-ops drop the row; annotate-ops emit
     NULL (callers wrap the kernel input in ``F.when(valid_vec(c), c)``
     so the existing NULL masks apply). Oracles replay the same
     predicate as ``len(list_filter(emb, x -> isfinite(x))) = len(emb)``
@@ -50,7 +50,8 @@ def valid_vec(col: Column) -> Column:
     (array_compact / array_max / array_contains), each one tight JVM
     pass: NULL components via the compact-size check, NaN via
     isnan(array_max) (Spark orders NaN greatest, so any NaN pins the
-    max), ±Inf via array_contains equality."""
+    max), ±Inf via array_contains equality. A vector of the wrong
+    width is not excluded: it raises (`_batch_matrix`, `cosine_col`)."""
     return col.isNotNull() & (F.size(col) > 0) & _components_ok(col)
 
 
@@ -112,14 +113,18 @@ def cosine_col(a: str, b: str) -> Column:
     (SQL text: `_sql_name` of a column, or `_float_array_sql` of a
     driver-held probe), computed element-sequentially in double
     (deterministic — float reduction order never varies with
-    partitioning). A zero vector scores 0 (`_safe_norm`). One F.expr
-    parse builds the same Catalyst expression as the Column-API form
-    (zip_with + aggregate over double casts), in one py4j call instead
-    of one per lambda and cast."""
+    partitioning). A zero vector scores 0 (`_safe_norm`), a NULL input
+    NULL (array_size is NULL for it in every ANSI mode), and vectors of
+    different lengths raise — zip_with would pad one with NULLs. One
+    F.expr parse builds the same Catalyst expression as the Column-API
+    form, in one py4j call instead of one per lambda and cast."""
     return F.expr(
+        f"CASE WHEN array_size({a}) != array_size({b}) THEN raise_error("
+        f"concat('cosine: vector lengths ', CAST(array_size({a}) AS STRING),"
+        f" ' and ', CAST(array_size({b}) AS STRING), ' differ')) ELSE "
         "aggregate(zip_with(" + a + ", " + b + ", (x, y) -> "
         "CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0.0D, (x, y) -> x + y)"
-        f" / (({_norm_sql(a)}) * ({_norm_sql(b)}))")
+        f" / (({_norm_sql(a)}) * ({_norm_sql(b)})) END")
 
 
 @register("ann_bruteforce")
@@ -156,6 +161,63 @@ def op_ann_bruteforce(df: DataFrame, config: Mapping, views) -> DataFrame:
     return out
 
 
+def _batch_matrix(series: pd.Series, width: int | None, op: str,
+                  maxq: int | None = None) -> tuple[np.ndarray, np.ndarray]:
+    """The one decode of a batch of vectors: ``(mask, mat)``, the
+    non-NULL rows and their float64 matrix. A vector whose length is
+    not ``width`` (the model's; None: the first row's) raises, naming
+    ``op``, the width and the batch's lengths. With ``maxq``, so does
+    a component past the fixed-point guard (`_fixed_point_guard`)."""
+    mask = series.notna().to_numpy()
+    vals = (series if mask.all() else series[mask]).to_numpy()
+    if not len(vals):
+        return mask, np.zeros((0, width or 0))
+    width = len(vals[0]) if width is None else width
+    try:
+        mat = np.vstack(vals).astype(np.float64)
+    except ValueError:  # rows of different lengths
+        mat = None
+    if mat is None or mat.shape[1] != width:
+        raise ValueError(
+            f"{op}: every vector must have the model's width {width}; "
+            f"this batch has widths {sorted({len(v) for v in vals})}")
+    if maxq is not None and np.abs(mat).max(initial=0.0) > maxq:
+        raise ValueError(
+            f"{op}: |quantized value| exceeds {maxq} — exact "
+            "fixed-point replay would lose bits past 2^53; lower "
+            "`scale` or pre-normalize the embeddings")
+    return mask, mat
+
+
+def _scatter(mask: np.ndarray, rows: np.ndarray) -> pd.Series:
+    """A kernel's output column: the per-row results ``rows`` of the
+    non-NULL rows of `_batch_matrix`, NULL at the masked rows."""
+    if mask.all():
+        return pd.Series(list(rows) if rows.ndim > 1 else rows)
+    out = np.full(len(mask), None, dtype=object)
+    for i, row in zip(np.flatnonzero(mask), rows):
+        out[i] = row
+    return pd.Series(out)
+
+
+def _nonzero(norms: np.ndarray) -> np.ndarray:
+    """``norms`` with zeros pinned to 1.0, so a zero vector scores
+    cosine 0: the numpy side of `_norm_sql`."""
+    return np.where(norms == 0, 1.0, norms)
+
+
+def _nearest_cells(mat: np.ndarray, centroids: np.ndarray,
+                   nprobe: int) -> np.ndarray:
+    """The nearest-cell rule of every IVF op: each row's ``nprobe``
+    nearest cells by cosine, nearest first; ties go to the lower cell
+    (stable argsort), so the first cell is the argmax."""
+    cents = centroids / _nonzero(
+        np.linalg.norm(centroids, axis=1, keepdims=True))
+    mat = mat / _nonzero(np.linalg.norm(mat, axis=1, keepdims=True))
+    order = np.argsort(-(mat @ cents.T), axis=1, kind="stable")
+    return order[:, :nprobe].astype(np.int32)
+
+
 @lru_cache(maxsize=8)
 def _hyperplanes(dim: int, n_planes: int, seed: int) -> np.ndarray:
     return np.random.RandomState(seed).randn(n_planes, dim)
@@ -177,19 +239,13 @@ def _multi_bucket_udf(dim: int, n_planes: int, seed: int, n_tables: int):
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def buckets(embs: pd.Series) -> pd.Series:
-        # NULL embeddings hash to NULL (they have no position in
-        # cosine space) — round-9 NULL-fixture sweep: vstack on a
-        # batch containing None crashed the whole job
-        mask = embs.notna().to_numpy()
-        out = np.full(len(embs), None, dtype=object)
-        if mask.any():
-            mat = np.vstack(embs[mask].to_numpy())
-            bits = (mat @ planes.T) > 0                  # (batch, L*b)
-            packed = (bits.reshape(-1, n_tables, n_planes).astype(np.int64)
-                      @ weights)                         # (batch, L)
-            for idx, row in zip(np.where(mask)[0], packed):
-                out[idx] = row
-        return pd.Series(out)
+        # NULL embeddings hash to NULL: they have no position in
+        # cosine space
+        mask, mat = _batch_matrix(embs, planes.shape[1], "lsh")
+        bits = (mat @ planes.T) > 0                      # (batch, L*b)
+        packed = (bits.reshape(-1, n_tables, n_planes).astype(np.int64)
+                  @ weights)                             # (batch, L)
+        return _scatter(mask, packed)
 
     return buckets
 
@@ -266,27 +322,6 @@ def op_ann_lsh(df: DataFrame, config: Mapping, views) -> DataFrame:
     )
 
 
-def _assign_udf(centroids: np.ndarray):
-    """Nearest-centroid (cosine) assignment, one matmul per Arrow
-    batch. Centroids ride in the closure (k x dim — tiny) and are
-    row-normalized once per executor."""
-    norms = np.linalg.norm(centroids, axis=1, keepdims=True)
-    cents = (centroids / np.where(norms == 0, 1.0, norms)).T  # (dim, k)
-
-    @F.pandas_udf(T.IntegerType())
-    def assign(embs: pd.Series) -> pd.Series:
-        mask = embs.notna().to_numpy()  # NULL embeddings -> NULL cell
-        out = np.full(len(embs), None, dtype=object)
-        if mask.any():
-            mat = np.vstack(embs[mask].to_numpy()).astype(np.float64)
-            mn = np.linalg.norm(mat, axis=1, keepdims=True)
-            mat = mat / np.where(mn == 0, 1.0, mn)
-            out[mask] = np.argmax(mat @ cents, axis=1).astype(np.int32)
-        return pd.Series(out)
-
-    return assign
-
-
 def _ivf_centroids(df: DataFrame, config: Mapping) -> np.ndarray:
     """Deterministic coarse quantizer: the k vectors with the smallest
     xxhash64(id) seed the centroids (stable across runs/partitions —
@@ -307,19 +342,20 @@ def _ivf_centroids(df: DataFrame, config: Mapping) -> np.ndarray:
     field = config.get("field", "embedding")
     id_field = config.get("id_field", "vec_id")
     k = int(config.get("n_cells", 16))
-    # invalid embeddings can neither seed nor pull a centroid (vstack
-    # on a None crashed the seed collect — round-9 NULL sweep; a NaN
-    # seed would NaN-poison every refined mean — round-10 lever)
+    # invalid embeddings can neither seed nor pull a centroid (a None
+    # has no position to seed from; a NaN seed would NaN-poison every
+    # refined mean)
     df = df.filter(valid_vec(F.col(field)))
     seed = (df.select(F.col(field).alias("__e"))
             .orderBy(F.xxhash64(F.col(id_field)), F.col(id_field))
             .limit(k).collect())
     if not seed:  # no non-NULL vectors: callers return empty results
         return np.zeros((0, 0))
-    cents = np.array([list(r["__e"]) for r in seed], dtype=np.float64)
+    _, cents = _batch_matrix(pd.Series([r["__e"] for r in seed]), None,
+                             "ivf")
     for _ in range(int(config.get("refine", 1))):
         assigned = df.select(
-            _assign_udf(cents)(F.col(field)).alias("__c"),
+            _assign_multi_udf(cents, 1)(F.col(field))[0].alias("__c"),
             F.posexplode(field).alias("__pos", "__v"))
         means = (assigned.groupBy("__c", "__pos")
                  .agg(F.avg(F.col("__v").cast("double")).alias("__m"))
@@ -358,9 +394,9 @@ def op_ivf_assign(df: DataFrame, config: Mapping, views) -> DataFrame:
     if cents.size == 0:  # empty/all-NULL corpus: no cells to assign
         return df.withColumn("ivf_cell", F.lit(None).cast("int"))
     # invalid vectors get a NULL cell (valid_vec when-wrap -> the
-    # kernel's existing NULL mask)
-    return df.withColumn("ivf_cell", _assign_udf(cents)(
-        F.when(valid_vec(F.col(field)), F.col(field))))
+    # kernel's NULL mask)
+    return df.withColumn("ivf_cell", _assign_multi_udf(cents, 1)(
+        F.when(valid_vec(F.col(field)), F.col(field)))[0])
 
 
 @register("ann_ivf")
@@ -384,18 +420,16 @@ def op_ann_ivf(df: DataFrame, config: Mapping, views) -> DataFrame:
         return lit_frame(
             df.sparkSession, [],
             df.select(id_field).schema.add("cos_sim", T.DoubleType()))
-    assigned = df.withColumn("ivf_cell", _assign_udf(cents)(F.col(field)))
+    assigned = df.withColumn(
+        "ivf_cell", _assign_multi_udf(cents, 1)(F.col(field))[0])
 
     probe_row = df.filter(F.col(id_field) == config["probe_id"]).select(field).head()
     if probe_row is None:  # unknown/NULL probe id -> empty, like ann_lsh
         return lit_frame(
             df.sparkSession, [],
             df.select(id_field).schema.add("cos_sim", T.DoubleType()))
-    probe = np.array(list(probe_row[0]), dtype=np.float64)
-    probe /= np.linalg.norm(probe) or 1.0
-    norms = np.linalg.norm(cents, axis=1)
-    sims = (cents / np.where(norms == 0, 1.0, norms)[:, None]) @ probe
-    cells = [int(c) for c in np.argsort(-sims)[:nprobe]]
+    probe = np.array([list(probe_row[0])], dtype=np.float64)
+    cells = [int(c) for c in _nearest_cells(probe, cents, nprobe)[0]]
 
     return (
         assigned.filter(F.col("ivf_cell").isin(cells))
@@ -408,22 +442,13 @@ def op_ann_ivf(df: DataFrame, config: Mapping, views) -> DataFrame:
 
 
 def _assign_multi_udf(centroids: np.ndarray, nprobe: int):
-    """Top-``nprobe`` nearest cells (cosine) per vector — the query
-    side of a batch kNN-join probes several inverted lists while the
-    index side stays single-cell. One matmul + one argsort per Arrow
-    batch; ties break to the lower cell index (stable argsort), so
-    the probe set is deterministic at any partitioning."""
-    norms = np.linalg.norm(centroids, axis=1, keepdims=True)
-    cents = (centroids / np.where(norms == 0, 1.0, norms)).T  # (dim, k)
-    nprobe = min(nprobe, centroids.shape[0])
-
+    """Top-``nprobe`` nearest cells per vector (`_nearest_cells`), one
+    matmul per Arrow batch. A vector's cell is element 0 of the
+    ``nprobe`` 1 kernel, as lsh_bucket is table 0 of the bucket one."""
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
     def assign(embs: pd.Series) -> pd.Series:
-        mat = np.vstack(embs.to_numpy()).astype(np.float64)
-        mn = np.linalg.norm(mat, axis=1, keepdims=True)
-        mat = mat / np.where(mn == 0, 1.0, mn)
-        order = np.argsort(-(mat @ cents), axis=1, kind="stable")
-        return pd.Series(list(order[:, :nprobe].astype(np.int32)))
+        mask, mat = _batch_matrix(embs, centroids.shape[1], "ivf")
+        return _scatter(mask, _nearest_cells(mat, centroids, nprobe))
 
     return assign
 
@@ -443,11 +468,10 @@ def _safe_norm(name: str) -> Column:
 def _pair_dot_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     """Batched pair dot products: one einsum per Arrow batch. Catalyst
     higher-order functions (zip_with+aggregate) are interpreted per
-    element — for 64-dim pairs the numpy kernel is ~5x faster."""
-    if len(a) == 0:
-        return pd.Series([], dtype="float64")
-    ma = np.vstack(a.to_numpy()).astype(np.float64)
-    mb = np.vstack(b.to_numpy()).astype(np.float64)
+    element — for 64-dim pairs the numpy kernel is ~5x faster. Both
+    sides are `_side` rows (valid, so never NULL) of one width."""
+    _, ma = _batch_matrix(a, None, "cosine")
+    _, mb = _batch_matrix(b, ma.shape[1], "cosine")
     return pd.Series(np.einsum("ij,ij->i", ma, mb))
 
 
@@ -539,18 +563,16 @@ def _knn_cells_cogroup(qside: DataFrame, iside: DataFrame,
                                  "cos_sim": []})
         order = i["__iid"].to_numpy().argsort(kind="stable")
         iid = i["__iid"].to_numpy()[order]
-        im = np.vstack(i["__iemb"].to_numpy()).astype(np.float64)[order]
-        inorm = np.linalg.norm(im, axis=1)
-        inorm = np.where(inorm == 0, 1.0, inorm)
+        im = _batch_matrix(i["__iemb"], None, "knn_join")[1][order]
+        inorm = _nonzero(np.linalg.norm(im, axis=1))
         qid_all = q["__qid"].to_numpy()
-        qm_all = np.vstack(q["__qemb"].to_numpy()).astype(np.float64)
+        _, qm_all = _batch_matrix(q["__qemb"], im.shape[1], "knn_join")
         block = max(1, 8_000_000 // len(iid))  # ~64 MB of doubles
         outs = []
         for s in range(0, len(qid_all), block):
             qid = qid_all[s:s + block]
             qm = qm_all[s:s + block]
-            qnorm = np.linalg.norm(qm, axis=1)
-            qnorm = np.where(qnorm == 0, 1.0, qnorm)
+            qnorm = _nonzero(np.linalg.norm(qm, axis=1))
             sims = (qm @ im.T) / (qnorm[:, None] * inorm[None, :])
             if exclude_self:
                 sims[qid[:, None] == iid[None, :]] = -np.inf
@@ -659,7 +681,7 @@ def op_knn_join(df: DataFrame, config: Mapping, views) -> DataFrame:
         # arise at most once — no dedup needed in either impl
         iside = idx_df.select(
             F.col(i_id).alias("__iid"), F.col(i_field).alias("__iemb"),
-            _assign_udf(cents)(F.col(i_field)).alias("__cell"))
+            _assign_multi_udf(cents, 1)(F.col(i_field))[0].alias("__cell"))
         qside = df.select(
             F.col(id_field).alias("__qid"), F.col(field).alias("__qemb"),
             F.explode(_assign_multi_udf(cents, nprobe)(F.col(field)))
@@ -1047,24 +1069,15 @@ def _int_assign_udf(cents: np.ndarray, maxq: int):
     why BLAS is bit-exact here). Ties break to the lower cell index
     (np.argmax first-occurrence == the oracle's ORDER BY cos DESC,
     cell). Zero norms pin to 1.0 (cosine 0)."""
-    cn = np.sqrt((cents.astype(np.float64) ** 2).sum(axis=1))
-    cn = np.where(cn == 0, 1.0, cn)
+    cn = _nonzero(np.sqrt((cents.astype(np.float64) ** 2).sum(axis=1)))
     cf = cents.astype(np.float64).T  # (dim, k)
 
     @F.pandas_udf(T.IntegerType())
     def assign(qs: pd.Series) -> pd.Series:
-        if len(qs) == 0:
-            return pd.Series([], dtype="int32")
-        mat = np.vstack(qs.to_numpy()).astype(np.float64)
-        if np.abs(mat).max(initial=0.0) > maxq:
-            raise ValueError(
-                f"semdedup: |quantized value| exceeds {maxq} — exact "
-                "fixed-point replay would lose bits past 2^53; lower "
-                "`scale` or pre-normalize the embeddings")
-        qn = np.sqrt((mat ** 2).sum(axis=1))
-        qn = np.where(qn == 0, 1.0, qn)
+        mask, mat = _batch_matrix(qs, cf.shape[0], "semdedup", maxq)
+        qn = _nonzero(np.sqrt((mat ** 2).sum(axis=1)))
         cos = (mat @ cf) / (qn[:, None] * cn[None, :])
-        return pd.Series(np.argmax(cos, axis=1)).astype("int32")
+        return _scatter(mask, np.argmax(cos, axis=1).astype(np.int32))
 
     return assign
 
@@ -1144,7 +1157,7 @@ def op_semdedup(df: DataFrame, config: Mapping, views) -> DataFrame:
     # integer mean quantizes the true mean within 1 unit per component
     # and keeps every later dot product exact
     cents = _pq_codebooks(
-        qdf, dim, 1, n_cells, refine, seed_order, maxq,
+        qdf, dim, 1, n_cells, refine, seed_order, maxq, "semdedup",
         assign=lambda b, q: lambda c: F.array(_int_assign_udf(b[0], q)(c)))[0]
     assigned = qdf.withColumn(
         "__cell", _int_assign_udf(cents, maxq)(F.col("__q")))
@@ -1166,16 +1179,11 @@ def op_semdedup(df: DataFrame, config: Mapping, views) -> DataFrame:
                 "work is quadratic) or max_cell if the memory is there")
         cell = int(pdf["__cell"].iloc[0])
         ids = pdf["__id"].to_numpy()
-        X = np.vstack(pdf["__q"].to_numpy()).astype(np.float64)
-        if np.abs(X).max(initial=0.0) > maxq:
-            raise ValueError(
-                f"semdedup: |quantized value| exceeds {maxq} — exact "
-                "fixed-point replay would lose bits past 2^53; lower "
-                "`scale` or pre-normalize the embeddings")
+        _, X = _batch_matrix(pdf["__q"], cmat.shape[1], "semdedup",
+                             maxq)
         cent = cmat[cell]
-        cnorm = np.sqrt((cent * cent).sum()) or 1.0
-        xnorm = np.sqrt((X * X).sum(axis=1))
-        xnorm = np.where(xnorm == 0, 1.0, xnorm)
+        cnorm = _nonzero(np.sqrt((cent * cent).sum()))
+        xnorm = _nonzero(np.sqrt((X * X).sum(axis=1)))
         csim = (X @ cent) / (xnorm * cnorm)
         if keep == "outlier":
             order = np.lexsort((ids, csim))  # csim asc, id asc
@@ -1396,7 +1404,9 @@ def _pq_assign_udf(books: np.ndarray, maxq: int):
     vectors, one ||x||^2 - 2x.c + ||c||^2 expansion (exact float64
     BLAS — every term's absolute sum is under 2^53) per subspace per
     Arrow batch. Ties break to the lower code (np.argmin
-    first-occurrence == the oracle's ORDER BY dist, code).
+    first-occurrence == the oracle's ORDER BY dist, code). Marked
+    nondeterministic for `_pair_dot_udf`'s reason: an inferred
+    ``isnotnull(pq_code)`` filter would re-run it.
 
     books: (m, ks, sub) int64."""
     m, ks, sub = books.shape
@@ -1405,33 +1415,20 @@ def _pq_assign_udf(books: np.ndarray, maxq: int):
 
     @F.pandas_udf(T.ArrayType(T.IntegerType()))
     def assign(qs: pd.Series) -> pd.Series:
-        if len(qs) == 0:
-            return pd.Series([], dtype=object)
-        mask = qs.notna().to_numpy()  # NULL vectors encode to NULL
-        vals = qs[mask]
-        out = np.full(len(qs), None, dtype=object)
-        if len(vals):
-            mat = np.vstack(vals.to_numpy()).astype(np.float64)
-            if np.abs(mat).max(initial=0.0) > maxq:
-                raise ValueError(
-                    f"pq: |quantized value| exceeds {maxq} — exact "
-                    "fixed-point replay would lose bits past 2^53; "
-                    "lower `scale` or pre-normalize the embeddings")
-            codes = np.empty((len(mat), m), dtype=np.int32)
-            for j in range(m):
-                X = mat[:, j * sub:(j + 1) * sub]
-                d = ((X ** 2).sum(axis=1)[:, None]
-                     - 2.0 * (X @ bf[j].T) + bnorm[j][None, :])
-                codes[:, j] = np.argmin(d, axis=1)
-            for idx, row in zip(np.where(mask)[0], codes):
-                out[idx] = row
-        return pd.Series(out)
+        mask, mat = _batch_matrix(qs, m * sub, "pq", maxq)
+        codes = np.empty((len(mat), m), dtype=np.int32)
+        for j in range(m):
+            X = mat[:, j * sub:(j + 1) * sub]
+            d = ((X ** 2).sum(axis=1)[:, None]
+                 - 2.0 * (X @ bf[j].T) + bnorm[j][None, :])
+            codes[:, j] = np.argmin(d, axis=1)
+        return _scatter(mask, codes)
 
-    return assign
+    return assign.asNondeterministic()
 
 
 def _pq_codebooks(qdf: DataFrame, dim: int, m: int, ks: int, refine: int,
-                  seed_order: str, maxq: int,
+                  seed_order: str, maxq: int, op: str,
                   assign=_pq_assign_udf) -> np.ndarray:
     """The exact-integer Lloyd trainer behind every fixed-point model:
     PQ books (``m`` subspaces), the model_refresh coarse quantizer
@@ -1447,7 +1444,9 @@ def _pq_codebooks(qdf: DataFrame, dim: int, m: int, ks: int, refine: int,
     ``//`` agree). Empty codewords keep their previous value. Each
     round is ONE assignment scan + ONE (subspace, code, position)
     aggregation — m * ks * sub longs to the driver, never vectors.
-    Returns (m, ks, sub) int64; (m, 0, sub) on an empty corpus."""
+    The seeds decode like a kernel batch (width ``dim``, guard ``maxq``;
+    ``op`` names the caller in errors). Returns (m, ks, sub) int64;
+    (m, 0, sub) on an empty corpus."""
     sub = dim // m
     # Exact int64 sums do not depend on reduction order, so neither the
     # input width nor the materialization below can move a model:
@@ -1464,8 +1463,9 @@ def _pq_codebooks(qdf: DataFrame, dim: int, m: int, ks: int, refine: int,
     order = ([F.xxhash64(F.col("__id")), F.col("__id")]
              if seed_order == "hash" else [F.col("__id")])
     seed = qdf.orderBy(*order).limit(ks).select("__q").collect()
-    books = np.array([list(r["__q"]) for r in seed],
-                     dtype=np.int64).reshape(len(seed), m, sub)
+    _, mat = _batch_matrix(pd.Series([r["__q"] for r in seed]), dim, op,
+                           maxq)
+    books = mat.astype(np.int64).reshape(len(seed), m, sub)
     books = np.ascontiguousarray(books.transpose(1, 0, 2))  # (m, ks, sub)
     for _ in range(refine):
         assigned = qdf.select(
@@ -1558,7 +1558,8 @@ def op_pq_encode(df: DataFrame, config: Mapping, views) -> DataFrame:
                 "was trained at an incompatible scale")
     else:
         books = _pq_codebooks(_quantized(df, field, id_field, scale),
-                              dim, m, ks, refine, seed_order, maxq)
+                              dim, m, ks, refine, seed_order, maxq,
+                              "pq_encode")
     if emit == "books":
         return _books_df(df.sparkSession, books)
     if books.size == 0:
@@ -1570,6 +1571,28 @@ def op_pq_encode(df: DataFrame, config: Mapping, views) -> DataFrame:
         F.when(valid_vec(F.col(field)), F.col(field)),  # invalid -> NULL code
         lambda x: F.floor(x.cast("double") * F.lit(scale)))
     return df.withColumn(out_field, _pq_assign_udf(books, maxq)(quant))
+
+
+def _pq_probe(df: DataFrame, config: Mapping, op: str, dim: int,
+              scale: float, maxq: int):
+    """(raw, quantized int64) probe of an ADC search, the quantized one
+    decoded like a kernel batch (width ``dim``, guard ``maxq``); None
+    when ``probe_id`` names no valid vector (like ann_lsh's, an invalid
+    probe finds nothing — data-side invalids exclude, never raise)."""
+    if "probe" in config:
+        raw = _check_probe_finite(config["probe"], op)
+    else:
+        row = df.filter(
+            F.col(config.get("id_field", "vec_id")) == config["probe_id"]
+        ).select(config.get("field", "embedding")).head()
+        if (row is None or row[0] is None or len(row[0]) == 0
+                or not np.isfinite(np.asarray(row[0],
+                                              dtype=np.float64)).all()):
+            return None
+        raw = list(row[0])
+    _, qv = _batch_matrix(pd.Series([np.floor(
+        np.asarray(raw, dtype=np.float64) * scale)]), dim, op, maxq)
+    return raw, qv[0].astype(np.int64)
 
 
 @register("ann_pq")
@@ -1636,26 +1659,15 @@ def op_ann_pq(df: DataFrame, config: Mapping, views) -> DataFrame:
     n_cells = int(config.get("n_cells", 0))
     nprobe = int(config.get("nprobe", 1))
 
-    if "probe" in config:
-        probe_raw = _check_probe_finite(config["probe"], "ann_pq")
-    else:
-        row = df.filter(F.col(id_field) == config["probe_id"]) \
-                .select(field).head()
-        if (row is None or row[0] is None or len(row[0]) == 0
-                or not np.isfinite(np.asarray(row[0],
-                                              dtype=np.float64)).all()):
-            # unknown or invalid-embedding probe -> empty, like
-            # ann_lsh (valid_vec contract: data-side invalids
-            # exclude, they don't raise)
-            schema = df.select(id_field).schema.add(
-                "adc_dist" if not rerank else "cos_sim",
-                T.LongType() if not rerank else T.DoubleType())
-            return lit_frame(df.sparkSession, [], schema)
-        probe_raw = list(row[0])
-    qv = np.floor(np.array(probe_raw, dtype=np.float64) * scale
-                  ).astype(np.int64)
-    if np.abs(qv).max(initial=0) > maxq:
-        raise ValueError(f"ann_pq: |quantized probe| exceeds {maxq}")
+    def empty() -> DataFrame:
+        return lit_frame(df.sparkSession, [], df.select(id_field).schema.add(
+            "adc_dist" if not rerank else "cos_sim",
+            T.LongType() if not rerank else T.DoubleType()))
+
+    probe = _pq_probe(df, config, "ann_pq", dim, scale, maxq)
+    if probe is None:
+        return empty()
+    probe_raw, qv = probe
 
     if books_src is not None:
         books = _books_np(books_src, dim, m, "ann_pq")
@@ -1668,14 +1680,11 @@ def op_ann_pq(df: DataFrame, config: Mapping, views) -> DataFrame:
         # the probe's distance tables (encoding via op_pq_encode would
         # run a second identical training pass)
         books = _pq_codebooks(_quantized(df, field, id_field, scale),
-                              dim, m, ks, refine, seed_order, maxq)
+                              dim, m, ks, refine, seed_order, maxq, "ann_pq")
     if books.size == 0:
         # empty / all-NULL corpus with a config["probe"] (the probe_id
         # path early-returns above before training) — ADVICE r9
-        schema = df.select(id_field).schema.add(
-            "adc_dist" if not rerank else "cos_sim",
-            T.LongType() if not rerank else T.DoubleType())
-        return lit_frame(df.sparkSession, [], schema)
+        return empty()
 
     # IVFADC coarse quantizer (pruning mode): centroids from the
     # served `cells` model, else trained here (float Lloyd — only the
@@ -1694,34 +1703,33 @@ def op_ann_pq(df: DataFrame, config: Mapping, views) -> DataFrame:
     if codes_src is not None:
         # serving path: stored codes, no encode kernel in the plan.
         # NULL codes are NULL-embedding rows (op_pq_encode contract)
-        # — excluded, same as the internal path's isNotNull filter.
+        # — excluded, same as the internal path's valid_vec filter.
         if cents is not None and "ivf_cell" not in codes_src.columns:
             raise ValueError(
                 "ann_pq: n_cells pruning over served `codes` needs an "
                 "ivf_cell column (op_ivf_assign at encode time)")
-        encoded = (codes_src.filter(F.col("pq_code").isNotNull())
-                   .select(id_field, "pq_code",
-                           *(["ivf_cell"] if cents is not None else [])))
+        encoded = codes_src.filter(F.col("pq_code").isNotNull())
+        cell = F.col("ivf_cell")
     else:
-        base = df.filter(valid_vec(F.col(field)))
-        quant = F.transform(F.col(field), lambda x: F.floor(
-            x.cast("double") * F.lit(scale)))
-        encoded = base.select(
-            F.col(id_field),
-            _pq_assign_udf(books, maxq)(quant).alias("pq_code"),
-            *([_assign_udf(cents)(F.col(field)).alias("ivf_cell")]
-              if cents is not None else []))
+        encoded = df.filter(valid_vec(F.col(field)))
+        cell = (_assign_multi_udf(cents, 1)(F.col(field))[0]
+                if cents is not None else None)
 
     if cents is not None:
         # rank the probe against the coarse centroids (driver-side —
-        # k x dim floats) and keep only codes in the nprobe nearest
-        # cells: the scan reads nprobe/n_cells of the corpus.
-        pv = np.array(probe_raw, dtype=np.float64)
-        pv = pv / (np.linalg.norm(pv) or 1.0)
-        cn = np.linalg.norm(cents, axis=1)
-        sims = (cents / np.where(cn == 0, 1.0, cn)[:, None]) @ pv
-        near = [int(c) for c in np.argsort(-sims, kind="stable")[:nprobe]]
-        encoded = encoded.filter(F.col("ivf_cell").isin(near))
+        # k x dim floats) and keep only rows in the nprobe nearest
+        # cells: the scan reads nprobe/n_cells of the corpus. The
+        # filter goes before the encode kernel, which Catalyst cannot
+        # push it below (the kernel is nondeterministic), so only those
+        # rows are encoded.
+        pv = np.array([probe_raw], dtype=np.float64)
+        near = [int(c) for c in _nearest_cells(pv, cents, nprobe)[0]]
+        encoded = encoded.filter(cell.isin(near))
+    if codes_src is None:
+        quant = F.transform(F.col(field), lambda x: F.floor(
+            x.cast("double") * F.lit(scale)))
+        encoded = encoded.withColumn(
+            "pq_code", _pq_assign_udf(books, maxq)(quant))
 
     # m x ks exact-integer distance tables: sub * (2*maxq)^2 <= 2^53
     tables = ((qv.reshape(m, 1, sub) - books) ** 2).sum(axis=2)  # (m, ks)
@@ -2074,9 +2082,9 @@ def op_model_refresh(df: DataFrame, config: Mapping, views) -> DataFrame:
     maxq_coarse = _pq_guard(dim, scale)
     books_new, qc_new = overlap(
         lambda: _pq_codebooks(qbatch, dim, m, ks, refine, seed_order,
-                              maxq_pq),
+                              maxq_pq, "model_refresh"),
         lambda: _pq_codebooks(qbatch, dim, 1, n_cells, refine,
-                              seed_order, maxq_coarse)[0])
+                              seed_order, maxq_coarse, "model_refresh")[0])
     if books_new.size == 0:
         raise ValueError("model_refresh: the drifted window has no "
                          "valid vectors to retrain on")
@@ -2178,24 +2186,11 @@ def op_ann_pq_versioned(df: DataFrame, config: Mapping, views) -> DataFrame:
         raise ValueError("ann_pq_versioned: books and codes must both "
                          "carry a model_version column")
 
-    if "probe" in config:
-        probe_raw = _check_probe_finite(config["probe"],
-                                        "ann_pq_versioned")
-    else:
-        row = df.filter(F.col(id_field) == config["probe_id"]) \
-                .select(field).head()
-        if (row is None or row[0] is None or len(row[0]) == 0
-                or not np.isfinite(np.asarray(
-                    row[0], dtype=np.float64)).all()):
-            schema = df.select(id_field).schema.add("adc_dist",
-                                                    T.LongType())
-            return lit_frame(df.sparkSession, [], schema)
-        probe_raw = list(row[0])
-    qv = np.floor(np.array(probe_raw, dtype=np.float64) * scale
-                  ).astype(np.int64)
-    if np.abs(qv).max(initial=0) > maxq:
-        raise ValueError(f"ann_pq_versioned: |quantized probe| exceeds "
-                         f"{maxq}")
+    probe = _pq_probe(df, config, "ann_pq_versioned", dim, scale, maxq)
+    if probe is None:
+        return lit_frame(df.sparkSession, [], df.select(id_field).schema
+                         .add("adc_dist", T.LongType()))
+    qv = probe[1]
 
     versions = sorted(r[0] for r in
                       books_src.select("model_version")

@@ -30,6 +30,10 @@ from pyspark.sql import DataFrame
 _ROW_PYTHON_NODES = ("BatchEvalPython",)
 _ARROW_PYTHON_NODES = ("ArrowEvalPython", "MapInPandas",
                        "FlatMapGroupsInPandas", "FlatMapCoGroupsInPandas")
+# a numbered Arrow node's header line of the formatted explain; a node
+# inside a whole-stage-codegen subtree prints ` [codegen id : N]` too
+_ARROW_NODE_HEAD = (rf"^\(\d+\) ({'|'.join(_ARROW_PYTHON_NODES)})"
+                    r"(?: \[codegen id : \d+\])?$")
 
 
 def explain_text(df: DataFrame, mode: str = "formatted") -> str:
@@ -133,14 +137,14 @@ def arrow_python_nodes(df: DataFrame) -> list[str]:
     twice appears twice. Reads the numbered node details of the
     formatted explain, so a node is counted once however the tree
     prints it."""
-    return re.findall(rf"^\(\d+\) ({'|'.join(_ARROW_PYTHON_NODES)})$",
-                      explain_text(df), re.M)
+    return re.findall(_ARROW_NODE_HEAD, explain_text(df), re.M)
 
 
 # one numbered Arrow node of the formatted explain, up to its
-# Arguments line (the Python function calls, plus attribute lists)
+# Arguments line (the Python function calls, plus attribute lists):
+# (node type, arguments)
 _ARROW_NODE_ARGS = re.compile(
-    rf"^\(\d+\) (?:{'|'.join(_ARROW_PYTHON_NODES)})\n"
+    _ARROW_NODE_HEAD.removesuffix("$") + r"\n"
     r"(?:(?!\(\d+\) ).*\n)*?Arguments: (.*)$", re.M)
 
 
@@ -152,7 +156,7 @@ def arrow_kernels(df: DataFrame) -> list[str]:
     ``name(args)#exprId`` inside the node's Arguments; attribute lists
     and the result slots (``pythonUDF0#12``) carry no call."""
     out = []
-    for args in _ARROW_NODE_ARGS.findall(explain_text(df)):
+    for _, args in _ARROW_NODE_ARGS.findall(explain_text(df)):
         for part in _split_top_level(args):
             calls = (_split_top_level(part[1:-1]) if part.startswith("[")
                      else [part])

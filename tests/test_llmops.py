@@ -2714,6 +2714,100 @@ def test_vector_ops_degenerate_corpora(spark):
                    for r in flags)
 
 
+WIDTH_ERROR = (r"\w+: every vector must have the model's width 8; "
+               r"this batch has widths \[[\d, ]+\]")
+
+
+@pytest.mark.parametrize("batch", ["short", "long", "mixed"])
+@pytest.mark.parametrize("name", [
+    "lsh_bucket", "similarity_join", "dedup_embedding",
+    "dedup_embedding_history", "knn_join_lsh", "knn_join_ivf",
+    "ivf_assign_cells", "pq_encode_books", "ann_pq", "semdedup"])
+def test_wrong_width_vectors_raise_one_error(spark, name, batch):
+    """Every op with a numpy vector kernel raises the same error for a
+    batch whose vectors are shorter or longer than the model's width
+    (hyperplanes, centroids or books: 8 here), or of mixed widths — no
+    numpy shape error, no silently sliced or NULL result."""
+    import numpy as np
+
+    rng = np.random.RandomState(17)
+    schema = "vec_id long, embedding array<float>"
+    good_rows = [(i, rng.randn(8).tolist()) for i in range(12)]
+    good = spark.createDataFrame(good_rows, schema)
+    rows = {"short": [(i, [0.5, -0.5, 0.25]) for i in range(12)],
+            "long": [(i, [0.5, -0.5, 0.25] * 4) for i in range(12)],
+            "mixed": good_rows[:10] + [(10, [0.5, -0.5, 0.25]),
+                                       (11, [0.5, -0.5, 0.25] * 4)]}[batch]
+    df = spark.createDataFrame(rows, schema)
+    lsh = {"dim": 8, "n_planes": 4, "n_tables": 2}
+    pq = {"dim": 8, "m": 2, "ks": 4, "seed_order": "id"}
+    configs = {
+        "lsh_bucket": ("lsh_bucket", lsh),
+        "similarity_join": ("similarity_join", lsh),
+        "dedup_embedding": ("dedup_embedding", lsh),
+        "dedup_embedding_history": ("dedup_embedding",
+                                    {**lsh, "history": good}),
+        "knn_join_lsh": ("knn_join", {**lsh, "method": "lsh", "k": 2}),
+        # the IVF model trains on the index; the queries are the batch
+        "knn_join_ivf": ("knn_join", {"index": good, "n_cells": 2,
+                                      "nprobe": 1, "k": 2}),
+        "ivf_assign_cells": ("ivf_assign", {"cells": op(
+            "ivf_assign", good, {"n_cells": 2, "emit": "cells"})}),
+        "pq_encode_books": ("pq_encode", {**pq, "books": op(
+            "pq_encode", good, {**pq, "emit": "books"})}),
+        "ann_pq": ("ann_pq", {**pq, "probe": [0.5] * 8, "k": 2}),
+        "semdedup": ("semdedup", {"dim": 8, "eps": 0.9, "n_cells": 2,
+                                  "seed_order": "id"}),
+    }
+    op_name, cfg = configs[name]
+    with pytest.raises(Exception, match=WIDTH_ERROR):
+        op(op_name, df, cfg, views={}).collect()
+
+
+def test_cosine_raises_on_a_length_mismatch(spark):
+    """cosine_col names both lengths of a mismatched pair instead of
+    NULL-padding the shorter one into a NULL cosine; NULL inputs still
+    score NULL. ann_bruteforce reaches it here, and the ann_lsh, ann_ivf
+    and ann_pq reranks through the same function."""
+    from blackroad_data_pipeline_spark.llmops.similarity import cosine_col
+
+    schema = "vec_id long, embedding array<float>"
+    df = spark.createDataFrame(
+        [(0, [1.0, 0.0, 0.0]), (1, [1.0, 0.0]), (2, [1.0, 0.0, 0.0, 0.0])],
+        schema)
+    with pytest.raises(Exception,
+                       match=r"cosine: vector lengths (2|4) and 3 differ"):
+        op("ann_bruteforce", df,
+           {"probe": [1.0, 0.0, 0.0], "k": 3}).collect()
+    pairs = spark.createDataFrame(
+        [([1.0, 0.0], [2.0, 0.0]), (None, [1.0, 0.0]), ([0.0, 1.0], None)],
+        "a array<float>, b array<float>")
+    assert [r[0] for r in pairs.select(cosine_col("a", "b")).collect()] \
+        == [1.0, None, None]
+
+
+@pytest.mark.parametrize("name", ["ann_ivf", "ann_pq"])
+def test_ivf_probe_ties_go_to_the_lowest_cells(spark, name):
+    """A zero-vector probe ties every cell at cosine 0. Both ann_ivf and
+    ann_pq's IVF pruning rank the probe with the kernels' nearest-cell
+    rule, so it probes cells 0..nprobe-1 — with 80 cells, where an
+    unstable argsort puts tied cells 72, 73, 74 first."""
+    import numpy as np
+
+    rng = np.random.RandomState(23)
+    df = spark.createDataFrame(
+        [(0, [0.0] * 8)] + [(i, rng.randn(8).tolist()) for i in range(1, 100)],
+        "vec_id long, embedding array<float>")
+    ivf = {"n_cells": 80, "nprobe": 3, "refine": 0, "k": 100}
+    cell = {r["vec_id"]: r["ivf_cell"]
+            for r in op("ivf_assign", df, ivf).collect()}
+    want = sorted(i for i, c in cell.items() if c < 3)
+    cfg = ({**ivf, "probe_id": 0} if name == "ann_ivf" else
+           {**ivf, "cells_refine": 0, "dim": 8, "m": 2, "ks": 4,
+            "probe": [0.0] * 8})
+    assert sorted(r["vec_id"] for r in op(name, df, cfg).collect()) == want
+
+
 @pytest.fixture()
 def dirty_vecs(spark):
     """The valid_vec contract fixture (round 10): 5 clean vectors plus

@@ -999,19 +999,12 @@ REPEATED_KERNELS = {
     ("ann_lsh", "buckets"): (
         3, "the probe row, plus the corpus once per recall-gate branch"),
     ("near_dup_simhash", "simhash_udf"): (
-        3, "the query recomputes simhash as an independent check; the "
-           "candidate branch evaluates the kernel twice per row, once "
-           "for an inferred isnotnull filter (a known defect)"),
-    ("ann_pq_served", "assign"): (
-        2, "the PQ encode evaluates the kernel twice per row, once for "
-           "an inferred isnotnull(pq_code) filter (a known defect)"),
+        2, "the query recomputes simhash as an independent check"),
     ("ann_pq_versioned", "assign"): (
-        4, "two model versions, each encoding twice per row as in "
-           "ann_pq_served (a known defect)"),
-    ("ngram_jaccard", "explode"): (
-        2, "the document-frequency aggregate reads only the shingle "
-           "column of the shared posting exchange, so column pruning "
-           "gives it an exchange of its own (a known defect)"),
+        2, "two model versions, each with its own books"),
+    ("model_refresh", "assign"): (
+        2, "two model versions: the old books encode the rows outside "
+           "the drifted cells, the new books the rows inside them"),
     ("dedup_against_bloom", "_bloom_maybe"): (
         5, "the bloom-negative and bloom-positive branches each probe "
            "every batch row and within_batch reads both twice; sharing "

@@ -645,6 +645,51 @@ def test_stream_vector_ingest_bootstrap_guard_refuses_tiny_batch(
     assert got == [0, 2, 3, 4, 5]
 
 
+def test_stream_vector_ingest_wrong_width_vector_fails_the_drain(
+        spark, tmp_path):
+    """A day file holding one vector of the wrong width fails its drain
+    with the vector kernels' width error (it is not dropped as invalid),
+    and the failed drain commits nothing: no store partition for the
+    batch and no checkpoint commit, so a replay sees it again."""
+    import os
+
+    import numpy as np
+    from pyspark.errors import StreamingQueryException
+
+    from blackroad_data_pipeline_spark.streaming.ops import (
+        run_stream_vector_ingest,
+    )
+
+    rng = np.random.RandomState(13)
+    src = tmp_path / "vecs"
+    src.mkdir()
+    out = str(tmp_path / "store")
+    models = str(tmp_path / "models")
+    ckpt = str(tmp_path / "ckpt")
+    schema = "vec_id long, embedding array<float>"
+    kw = dict(threshold=0.98, dim=8, m=2, ks=2, n_cells=2,
+              n_planes=2, n_tables=8)
+
+    def drain(rows, name):
+        spark.createDataFrame(rows, schema).write.parquet(
+            str(src / f"{name}.parquet"))
+        stream = spark.readStream.schema(schema).option(
+            "recursiveFileLookup", True).parquet(str(src))
+        run_stream_vector_ingest(stream, out, ckpt, models, **kw)
+
+    drain([(i, rng.randn(8).tolist()) for i in range(6)], "day1")
+    day2 = [(10, rng.randn(8).tolist()), (11, rng.randn(7).tolist()),
+            (12, rng.randn(8).tolist())]
+    with pytest.raises(StreamingQueryException, match=(
+            r"every vector must have the model's width 8; "
+            r"this batch has widths \[")):
+        drain(day2, "day2")
+    assert os.path.isdir(os.path.join(out, "__ingest_batch=0"))
+    assert not os.path.exists(os.path.join(out, "__ingest_batch=1"))
+    assert os.path.exists(os.path.join(ckpt, "commits", "0"))
+    assert not os.path.exists(os.path.join(ckpt, "commits", "1"))
+
+
 def test_vector_store_maintain_compacts_folds_and_stays_replay_safe(
         spark, tmp_path):
     """Round 11 (VERDICT r10 #5): store maintenance must (a) preserve
