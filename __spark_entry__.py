@@ -550,7 +550,7 @@ def q_fingerprint(spark, sf_dir):
 
 _SQL_FINGERPRINT = """
 SELECT doc_id,
-       md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS fingerprint
+       md5(regexp_replace(lower(trim(coalesce(text, ''))), '\\s+', ' ', 'g')) AS fingerprint
 FROM documents
 """
 
@@ -559,10 +559,10 @@ def q_winnow(spark, sf_dir):
     """Winnowing fingerprints (MOSS, Schleimer et al. SIGMOD'03):
     rightmost-min of every 4-window of char-5-gram md5 hashes, per
     document — the position-robust partial-overlap detector
-    (llmops/text.py op_winnow; ONE shuffle, max_by window + a
-    dedup the id partitioning already satisfies). DuckDB replays
-    selection with an explicit rightmost-min join, so the entire
-    fingerprint SET is value-checked."""
+    (llmops/text.py op_winnow; one doc-local Arrow kernel, no
+    shuffle). DuckDB replays selection with an explicit
+    rightmost-min join, so the entire fingerprint SET is
+    value-checked."""
     d = _hmod_docs(spark, sf_dir)
     df = op("winnow", d, {"field": "text", "id_field": "doc_id",
                           "k": 5, "window": 4})
@@ -649,7 +649,7 @@ _SQL_DEDUP_EXACT = """
 SELECT doc_id, lang, source, n_chars FROM documents
 WHERE doc_id IN (
   SELECT min(doc_id) FROM documents
-  GROUP BY md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')))
+  GROUP BY md5(regexp_replace(lower(trim(coalesce(text, ''))), '\\s+', ' ', 'g')))
 """
 
 
@@ -1132,7 +1132,7 @@ def q_corpus_prep(spark, sf_dir):
 _SQL_CORPUS_PREP = f"""
 WITH kept AS (
   SELECT min(doc_id) AS doc_id FROM documents
-  GROUP BY md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'))),
+  GROUP BY md5(regexp_replace(lower(trim(coalesce(text, ''))), '\\s+', ' ', 'g'))),
 scored AS ({_SQL_QUALITY_SCORE})
 SELECT scored.doc_id, scored.quality_score
 FROM scored JOIN kept USING (doc_id)
@@ -4158,23 +4158,6 @@ SELECT event_type, TRUE AS within_tolerance
 FROM (SELECT DISTINCT event_type FROM events)
 ORDER BY event_type
 """
-
-
-def q_dedup_against_bloom(spark, sf_dir):
-    """The same incremental dedup through the broadcast Bloom-bitmap
-    prefilter (llmops/dedup.py _bloom_anti_join): bloom-negative rows
-    skip the anti-join shuffle entirely; the maybe-set pays the exact
-    join which removes false positives — so the output must EQUAL the
-    plain path value-for-value (shared oracle)."""
-    d = _t(spark, sf_dir, "documents")
-    history = op("filter", op("expr", d, {"exprs": {"par": "doc_id % 2"}}),
-                 {"field": "par", "op": "eq", "value": 0})
-    batch = op("filter", op("expr", d, {"exprs": {"par": "doc_id % 2"}}),
-               {"field": "par", "op": "eq", "value": 1})
-    df = op("dedup_against", batch,
-            {"field": "text", "id_field": "doc_id", "history": history,
-             "prefilter": "bloom", "bloom_fpp": 0.01}, views={})
-    return op("select", df, {"fields": ["doc_id", "lang", "source"]})
 
 
 def q_budget_select(spark, sf_dir):
@@ -7321,7 +7304,6 @@ def _queries_registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "corpus_prep_stream": q_corpus_prep_stream,
         "decode_meta": q_decode_meta,
         "dedup_against": q_dedup_against,
-        "dedup_against_bloom": q_dedup_against_bloom,
         "dedup_embedding_groups_parity": q_dedup_embedding_groups_parity,
         "dedup_embedding_parity": q_dedup_embedding_parity,
         "dedup_near_best": q_dedup_near_best,
@@ -7390,7 +7372,6 @@ def oracle_sql() -> dict[str, str]:
         "unigram_logprob": _SQL_UNIGRAM_LOGPROB,
         "stream_join": _SQL_STREAM_JOIN,
         "stream_join_stream": _SQL_STREAM_JOIN,
-        "dedup_against_bloom": _SQL_DEDUP_AGAINST,
         "heavy_hitters": _SQL_HEAVY_HITTERS,
         "heavy_hitters_mg": _SQL_HEAVY_HITTERS,
         "distinct_sketch_gate": _SQL_DISTINCT_SKETCH_GATE,

@@ -29,17 +29,30 @@ from .text import kgrams_col, tokens_col
 # --------------------------------------------------------------------------
 
 
+def content_key(col: Column) -> Column:
+    """The exact-dedup content key of every op that compares whole
+    documents (``fingerprint``, ``dedup_exact``, ``dedup_against``,
+    ``corpus_diff``, the streaming ingest's fingerprint store): md5 of
+    the text lowercased, trimmed and whitespace-collapsed. md5, not
+    xxhash, so any engine reproduces it. NULL text keys as empty
+    text (coalesce BEFORE hashing, like clean_lines): a NULL key never
+    matches in an anti join (Spark keeps it, SQL's NOT IN drops it —
+    engines diverge) and a NULL fingerprint in a store could never
+    match a NULL-text document."""
+    return F.md5(F.regexp_replace(
+        F.lower(F.trim(F.coalesce(col, F.lit("")))), r"\s+", " "))
+
+
 @register("dedup_exact")
 def op_dedup_exact(df: DataFrame, config: Mapping, views) -> DataFrame:
-    """Keep one row per normalized-content fingerprint (the row with
-    the smallest id — deterministic at any partitioning). One shuffle
-    on the md5 key; partial aggregation runs map-side."""
+    """Keep one row per content key (the row with the smallest id —
+    deterministic at any partitioning; NULL text dedups as empty
+    text). One shuffle on the md5 key; partial aggregation runs
+    map-side."""
     field = config.get("field", "text")
     id_field = config.get("id_field", "doc_id")
-    normalized = F.regexp_replace(F.lower(F.trim(F.col(field))), r"\s+", " ")
-    fp = F.md5(normalized)
     keep = (
-        df.withColumn("__fp", fp)
+        df.withColumn("__fp", content_key(F.col(field)))
         .groupBy("__fp")
         .agg(F.min(id_field).alias(id_field))
         .drop("__fp")
@@ -910,115 +923,26 @@ def op_contamination_join(df: DataFrame, config: Mapping, views) -> DataFrame:
     )
 
 
-def _bloom_anti_join(out: DataFrame, h_fp: DataFrame,
-                     config: Mapping) -> DataFrame:
-    """Exact anti-join with a broadcast Bloom-bitmap prefilter.
-
-    At 100 TB intake the plain left-anti shuffles EVERY batch row on
-    its fingerprint. A fresh crawl is mostly new content, so the
-    bitmap answers "definitely not in history" for the bulk of the
-    batch without any shuffle; only the maybe-set (true matches +
-    ~fpp false positives) pays the exact anti-join, which removes the
-    false positives — the result is bit-identical to the plain path
-    (the contract query shares dedup_against's oracle).
-
-    Construction is distributed end-to-end: k=ln(2)*m/H positions per
-    history fingerprint via JVM xxhash64(fp, i), OR-folded into
-    64-bit words by a groupBy(word) bit_or — at most m/64 rows leave
-    the cluster (Arrow collect), never H*k. The bitmap broadcasts via
-    sparkContext.broadcast; membership tests run as a vectorized
-    numpy kernel over the JVM-computed position arrays.
-
-    Applicability envelope: m = -H*ln(fpp)/ln(2)^2 bits. The default
-    cap (``bloom_max_bits`` 2^33 = 1 GiB) covers histories to ~9e8
-    fingerprints at fpp 1%; past that, raise fpp, or keep the plain
-    anti-join against the narrow fingerprint store — the cap raises
-    rather than silently degrading. Eager steps: one count + one
-    word-collect over the (narrow) history side.
-    """
-    import math
-
-    import numpy as np
-
-    spark = out.sparkSession
-    fpp = float(config.get("bloom_fpp", 0.01))
-    if not 0.0 < fpp < 1.0:
-        raise ValueError(f"bloom_fpp must be in (0, 1), got {fpp}")
-    h_count = h_fp.count()
-    if h_count == 0:
-        return out
-    m_bits = max(64, int(-h_count * math.log(fpp) / (math.log(2) ** 2)))
-    m_bits = (m_bits + 63) // 64 * 64
-    max_bits = int(config.get("bloom_max_bits", 1 << 33))
-    if m_bits > max_bits:
-        raise ValueError(
-            f"bloom filter needs {m_bits} bits for {h_count} history "
-            f"fingerprints at fpp={fpp} (> bloom_max_bits={max_bits}); "
-            "raise bloom_fpp / bloom_max_bits or drop prefilter='bloom'")
-    k = max(1, round(m_bits / h_count * math.log(2)))
-
-    def positions(col: Column) -> Column:
-        return F.array(*[
-            F.pmod(F.xxhash64(col, F.lit(i)), F.lit(m_bits))
-            for i in range(k)])
-
-    words_pdf = (
-        h_fp.select(F.explode(positions(F.col("__fp"))).alias("__pos"))
-        .select(F.expr("__pos div 64").alias("w"),
-                F.expr("shiftleft(1L, CAST(__pos % 64 AS INT))").alias("b"))
-        .groupBy("w").agg(F.bit_or("b").alias("bits"))
-        .toPandas())
-    order = np.argsort(words_pdf["w"].values)
-    idx_arr = words_pdf["w"].values[order].astype(np.int64)
-    bits_arr = words_pdf["bits"].values[order].astype(np.int64).view(np.uint64)
-    bc = spark.sparkContext.broadcast((idx_arr, bits_arr))
-
-    @F.pandas_udf("boolean")
-    def _bloom_maybe(pos_ser: pd.Series) -> pd.Series:
-        idx, bits = bc.value
-        if not len(pos_ser):
-            return pd.Series([], dtype=bool)
-        flat = np.concatenate([np.asarray(p, dtype=np.int64)
-                               for p in pos_ser.values])
-        words = flat // 64
-        loc = np.searchsorted(idx, words)
-        loc_c = np.clip(loc, 0, max(len(idx) - 1, 0))
-        present = (loc < len(idx)) & (idx[loc_c] == words) if len(idx) \
-            else np.zeros(len(flat), dtype=bool)
-        hit = np.zeros(len(flat), dtype=bool)
-        if present.any():
-            shifts = (flat[present] % 64).astype(np.uint64)
-            hit[present] = (bits[loc_c[present]] >> shifts) & np.uint64(1) != 0
-        return pd.Series(hit.reshape(len(pos_ser), -1).all(axis=1))
-
-    tagged = out.withColumn(
-        "__bloom_maybe", _bloom_maybe(positions(F.col("__fp"))))
-    definite_new = tagged.filter(~F.col("__bloom_maybe"))
-    suspects = (tagged.filter(F.col("__bloom_maybe"))
-                .join(h_fp, "__fp", "left_anti"))
-    return definite_new.unionByName(suspects).drop("__bloom_maybe")
-
-
 @register("dedup_against")
 def op_dedup_against(df: DataFrame, config: Mapping, views) -> DataFrame:
-    """Incremental corpus dedup: drop rows whose normalized-content
-    fingerprint already exists in a HISTORY table — the "don't
+    """Incremental corpus dedup: drop rows whose content key
+    (``content_key``) already exists in a HISTORY table — the "don't
     re-ingest what the corpus already holds" step of a continuously
     crawling training pipeline. The reference has no incremental
     notion at all (its run_pipeline re-reads everything,
     main.py:437-442); this is the Spark-native replacement.
 
-    Shape: fingerprint both sides with the same normalization as
-    ``dedup_exact`` and LEFT ANTI join on the fingerprint. An anti
-    join is the cheapest possible contract at scale — it shuffles only
-    the two fingerprint columns (narrow projection on the history
-    side), streams map-side under AQE when the history fingerprint set
-    is broadcastable, and never materializes matches. History can be a
-    raw corpus (``history_field``, fingerprinted on the fly) or a
-    precomputed fingerprint store (``history_is_fingerprint: true`` —
-    the 100 TB path: keep a narrow md5 table instead of re-reading old
-    text). Optionally also dedups WITHIN the batch (``within_batch``,
-    default true) so the output is ingestible as-is.
+    Shape: key both sides with ``content_key`` and LEFT ANTI join on
+    the key. An anti join is the cheapest possible contract at scale —
+    it shuffles only the two fingerprint columns (narrow projection on
+    the history side), streams map-side under AQE when the history
+    fingerprint set is broadcastable, and never materializes matches.
+    History can be a raw corpus (``history_field``, fingerprinted on
+    the fly) or a precomputed fingerprint store
+    (``history_is_fingerprint: true`` — the 100 TB path: keep a narrow
+    md5 table instead of re-reading old text). Optionally also dedups
+    WITHIN the batch (``within_batch``, default true) so the output is
+    ingestible as-is.
     """
     field = config.get("field", "text")
     id_field = config.get("id_field", "doc_id")
@@ -1026,31 +950,16 @@ def op_dedup_against(df: DataFrame, config: Mapping, views) -> DataFrame:
     if isinstance(history, str):
         history = views[history]
 
-    def fingerprint(col: Column) -> Column:
-        # coalesce to '' BEFORE hashing (matches clean_lines' NULL
-        # handling): a NULL fingerprint never matches in the anti
-        # join (Spark keeps it; SQL's NOT IN drops it — engines
-        # diverge), so NULL text dedups as empty text instead
-        return F.md5(F.regexp_replace(
-            F.lower(F.trim(F.coalesce(col, F.lit("")))), r"\s+", " "))
-
     if config.get("history_is_fingerprint"):
         h_fp = history.select(
             F.col(config.get("history_field", "fp")).alias("__fp"))
     else:
         h_field = config.get("history_field", field)
-        h_fp = history.select(fingerprint(F.col(h_field)).alias("__fp"))
-    out = df.withColumn("__fp", fingerprint(F.col(field)))
+        h_fp = history.select(content_key(F.col(h_field)).alias("__fp"))
+    out = df.withColumn("__fp", content_key(F.col(field)))
     if config.get("broadcast"):
         h_fp = F.broadcast(h_fp)
-    if config.get("prefilter") == "bloom":
-        # broadcast Bloom bitmap screens out definitely-new rows
-        # before the shuffle; exact anti-join only on the maybe-set.
-        # Result identical to the plain path (false positives are
-        # removed by the exact join) — see _bloom_anti_join.
-        out = _bloom_anti_join(out, h_fp, config)
-    else:
-        out = out.join(h_fp, "__fp", "left_anti")
+    out = out.join(h_fp, "__fp", "left_anti")
     if config.get("within_batch", True):
         keep = (out.groupBy("__fp").agg(F.min(id_field).alias(id_field))
                 .drop("__fp"))

@@ -605,7 +605,7 @@ def op_knn_join(df: DataFrame, config: Mapping, views) -> DataFrame:
     deterministic in every engine), ``neighbor_id``, ``cos_sim``.
     Queries whose candidate set is empty simply emit no rows.
     Zero-norm vectors score cosine 0 (norms are pinned to 1 in every
-    impl and in the oracle — never NaN/inf).
+    method and in the oracle — never NaN/inf).
 
     method: "ivf" (default) — a deterministic coarse quantizer
     (xxhash-seeded + Lloyd refine, `_ivf_centroids`) partitions the
@@ -613,16 +613,14 @@ def op_knn_join(df: DataFrame, config: Mapping, views) -> DataFrame:
     ``nprobe`` nearest cells. Work is per-cell — query×index pairs
     within a cell — never all-pairs, and because the index side lands
     in exactly ONE cell each (query, index) pair arises at most once.
-    The default ``impl: "cogroup"`` never materializes pair rows at
-    all: a cogrouped applyInPandas runs ONE blocked numpy matmul per
-    cell (queries × index of the cell) and emits each query's
-    per-cell top-k as narrow (qid, iid, cos) rows — sound because a
-    single-cell index makes per-cell top-k a superset filter of the
-    global top-k — so the final per-query window ranks ≤ k·nprobe
-    narrow candidates. ``impl: "pairs"`` keeps the explicit
-    cell-join + Arrow pair-dot shape (pytest-pinned identical).
-    ``nprobe == n_cells`` probes every list and is EXACT (the parity
-    gate's geometry); recall tunes with nprobe and no index rebuild.
+    Pair rows are never materialized: a cogrouped applyInPandas runs
+    ONE blocked numpy matmul per cell (queries × index of the cell)
+    and emits each query's per-cell top-k as narrow (qid, iid, cos)
+    rows — sound because a single-cell index makes per-cell top-k a
+    superset filter of the global top-k — so the final per-query
+    window ranks ≤ k·nprobe narrow candidates. ``nprobe == n_cells``
+    probes every list and is EXACT (the parity gate's geometry);
+    recall tunes with nprobe and no index rebuild.
 
     method: "lsh" — both sides hash into ``n_tables`` ×
     ``n_planes`` sign-random-projection tables (one stacked-matmul
@@ -666,7 +664,6 @@ def op_knn_join(df: DataFrame, config: Mapping, views) -> DataFrame:
     if method == "ivf":
         n_cells = int(config.get("n_cells", 16))
         nprobe = int(config.get("nprobe", 2))
-        impl = config.get("impl", "cogroup")
         cents = _ivf_centroids(
             idx_df, {**config, "field": i_field, "id_field": i_id,
                      "n_cells": n_cells})
@@ -678,7 +675,7 @@ def op_knn_join(df: DataFrame, config: Mapping, views) -> DataFrame:
                               idx_df.schema[i_id].dataType),
                 T.StructField("cos_sim", T.DoubleType())]))
         # index side: ONE cell each => (query, index) candidate pairs
-        # arise at most once — no dedup needed in either impl
+        # arise at most once — no dedup needed
         iside = idx_df.select(
             F.col(i_id).alias("__iid"), F.col(i_field).alias("__iemb"),
             _assign_multi_udf(cents, 1)(F.col(i_field))[0].alias("__cell"))
@@ -686,38 +683,16 @@ def op_knn_join(df: DataFrame, config: Mapping, views) -> DataFrame:
             F.col(id_field).alias("__qid"), F.col(field).alias("__qemb"),
             F.explode(_assign_multi_udf(cents, nprobe)(F.col(field)))
             .alias("__cell"))
-        if impl == "cogroup":
-            # default scale path: ONE blocked numpy matmul per cell
-            # (cogrouped applyInPandas) computes every query x index
-            # cosine of the cell and keeps each query's per-cell
-            # top-k. Correct because the index side is single-cell:
-            # any global top-k neighbor is inside its own cell's
-            # top-k for that query. Pair rows with 2x wide vectors
-            # are never materialized; only <= k * nprobe narrow
-            # candidate rows per query reach the final window.
-            scored = _knn_cells_cogroup(
-                qside, iside, df.schema[id_field].dataType,
-                idx_df.schema[i_id].dataType, k, exclude_self)
-        elif impl == "pairs":
-            # reference impl (pytest-pinned equal to cogroup): vectors
-            # ride the cell join, one Arrow pair-dot per candidate.
-            # Norms attach once per SIDE row (the O(dim) aggregate
-            # must not re-run per candidate — review r9), zero-guarded
-            # like the cogroup kernel.
-            cands = (qside.withColumn("__qnorm", _safe_norm("__qemb"))
-                     .join(iside.withColumn(
-                         "__inorm", _safe_norm("__iemb")), "__cell"))
-            if exclude_self:
-                cands = cands.filter(F.col("__qid") != F.col("__iid"))
-            scored = (cands
-                      .withColumn(
-                          "cos_sim",
-                          _pair_dot_udf(F.col("__qemb"), F.col("__iemb"))
-                          / (F.col("__qnorm") * F.col("__inorm")))
-                      .select("__qid", "__iid", "cos_sim"))
-        else:
-            raise ValueError(
-                f"knn_join impl must be cogroup|pairs, got {impl!r}")
+        # ONE blocked numpy matmul per cell (cogrouped applyInPandas)
+        # computes every query x index cosine of the cell and keeps
+        # each query's per-cell top-k. Correct because the index side
+        # is single-cell: any global top-k neighbor is inside its own
+        # cell's top-k for that query. Pair rows with 2x wide vectors
+        # are never materialized; only <= k * nprobe narrow candidate
+        # rows per query reach the final window.
+        scored = _knn_cells_cogroup(
+            qside, iside, df.schema[id_field].dataType,
+            idx_df.schema[i_id].dataType, k, exclude_self)
     elif method == "lsh":
         qside = _side(df, field, id_field)
         iside = _side(idx_df, i_field, i_id)

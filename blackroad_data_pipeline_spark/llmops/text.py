@@ -183,19 +183,22 @@ def op_lang_id(df: DataFrame, config: Mapping, views) -> DataFrame:
 
 @register("fingerprint")
 def op_fingerprint(df: DataFrame, config: Mapping, views) -> DataFrame:
-    """Content fingerprint: md5 of the normalized text (lowercased,
-    whitespace collapsed) — the exact-dedup key. md5 not xxhash so the
-    fingerprint is portable across engines."""
+    """Content fingerprint: the exact-dedup key (``content_key``: md5
+    of the lowercased, trimmed, whitespace-collapsed text; NULL text
+    keys as empty text), so a fingerprint store built with it matches
+    what ``dedup_exact`` / ``dedup_against`` compare."""
+    from .dedup import content_key
+
     field = config.get("field", "text")
-    normalized = F.regexp_replace(F.lower(F.trim(F.col(field))), r"\s+", " ")
-    return df.withColumn(config.get("as", "fingerprint"), F.md5(normalized))
+    return df.withColumn(config.get("as", "fingerprint"),
+                         content_key(F.col(field)))
 
 
 def _winnow_arrow(df: DataFrame, id_field: str, field: str, k: int,
                   win: int) -> DataFrame:
     """Whole-winnow Arrow kernel (see op_winnow): per doc, normalize
-    exactly like the JVM path (trim = spaces only, Java-\\s whitespace
-    collapse — Python's Unicode \\s would diverge on NBSP), memoize
+    like SQL (trim = spaces only, Java-\\s whitespace collapse —
+    Python's Unicode \\s would diverge on NBSP), memoize
     the md5-prefix hash per batch-unique gram, vectorize the sliding
     rightmost-min in numpy, dedup (pos, fp) per doc. Doc-local work →
     zero shuffle; only (id, text) crosses the Arrow boundary."""
@@ -270,50 +273,25 @@ def op_winnow(df: DataFrame, config: Mapping, views) -> DataFrame:
     ``fingerprint`` and shingle-set minhash are not (winnowing keeps
     POSITIONS, so matches localize).
 
-    All JVM-side, ONE hash shuffle on the id — placed BEFORE the
-    gram explode, which cuts shuffled bytes ~k× (docs move, not
-    grams) AND acts as the projection barrier that keeps the
-    normalization regex evaluated once per DOC: Catalyst's
-    CollapseProject otherwise inlines it into the per-gram
-    projection, re-running the regex per gram row (measured 10-20s
-    per 1.5M grams; exchanges are barriers projections don't cross).
-    Grams explode from a ``sequence()`` per doc (no per-row Python),
-    hashes are md5-prefix bigints (portable across engines), the
-    per-window rightmost-min runs as ``window-1`` LAGs + a
-    ``least()``/``coalesce(when...)`` finish (offset window
-    functions are one streaming pass; a bounded-frame ``max_by``
-    aggregate is recomputed per row — O(window) interpreted evals,
-    measured 20s/1.5M rows), and the final set-dedup groups on
-    (id, pos, hash) — a grouping the id partitioning already
-    satisfies, so no second exchange. Docs shorter than one full
-    window contribute their single all-grams window; docs shorter
-    than ``k`` contribute nothing.
+    Winnowing is doc-local, so the whole algorithm runs in ONE
+    ``mapInPandas`` kernel (``_winnow_arrow``) with ZERO shuffle at
+    any scale: per doc, normalize, hash every gram, take the sliding
+    rightmost-min in numpy and dedup (pos, fp). Hashes are
+    md5-prefix bigints (the first 15 hex digits — portable across
+    engines), memoized per batch-unique gram (the minhash_text_kernel
+    Zipf argument). Docs shorter than one full window contribute
+    their single all-grams window; docs shorter than ``k`` (and NULL
+    text) contribute nothing.
 
-    Two implementations, byte-identical output (parity pytest):
-
-    - ``impl: "arrow"`` (default): the whole algorithm — normalize,
-      gram-hash, sliding rightmost-min, per-doc dedup — runs in ONE
-      ``mapInPandas`` kernel, because winnowing is doc-local: ZERO
-      shuffle at any scale, the per-gram md5 memoized per
-      batch-unique gram (the minhash_text_kernel Zipf argument), the
-      sliding min vectorized in numpy. This removed the dominant
-      cost of the JVM path (the 1-row-per-gram explode + window
-      machinery; winnow was the slowest batch op at 8.3 s/sf0.1).
-    - ``impl: "jvm"``: the original all-JVM plan described above
-      (one id shuffle, LAG-based sliding min) — kept as the
-      no-Python-workers fallback and the parity anchor.
-
-    Locale note (ADVICE r7): the Arrow kernel lowercases with Python
-    ``str.lower()`` (locale-independent); the JVM path's ``F.lower``
-    falls back to Java ``String.toLowerCase()`` for non-ASCII, which
-    is DEFAULT-LOCALE sensitive (a Turkish-locale JVM lowers 'I' to
-    dotless 'ı'). The session factory pins the JVM default locale to
-    en-US (driver at runtime, executors via extraJavaOptions —
-    session.py), so the two impls stay byte-identical on any host.
+    Normalization is the SQL one the oracle replays,
+    ``regexp_replace(lower(trim(text)), '\\s+', ' ')``: trim strips
+    spaces only, and whitespace collapses on Java's ``\\s``
+    (``[ \\t\\n\\x0b\\f\\r]``), not Python's Unicode ``\\s``,
+    which would also collapse NBSP and diverge from every SQL engine.
+    Lowercasing is Python ``str.lower()`` (locale-independent).
 
     config: ``field`` (default text), ``id_field`` (default doc_id),
-    ``k`` char-gram size (default 5), ``window`` (default 4),
-    ``impl`` ("arrow"|"jvm").
+    ``k`` char-gram size (default 5), ``window`` (default 4).
     Output: one row per selected fingerprint — id_field, ``pos``
     (gram offset in the normalized text, long), ``fp`` (bigint).
     """
@@ -323,61 +301,7 @@ def op_winnow(df: DataFrame, config: Mapping, views) -> DataFrame:
     win = int(config.get("window", 4))
     if k < 1 or win < 1:
         raise ValueError(f"k and window must be >= 1, got k={k} window={win}")
-    impl = config.get("impl", "arrow")
-    if impl not in ("arrow", "jvm"):
-        raise ValueError(f"winnow impl must be arrow|jvm, got {impl!r}")
-    if impl == "arrow":
-        return _winnow_arrow(df, id_field, field, k, win)
-    norm = F.regexp_replace(F.lower(F.trim(F.col(field))), r"\s+", " ")
-
-    def positions_of(col_name: str, gram: int) -> Column:
-        c = F.col(col_name)
-        # sequence(a, b) REVERSES when a > b — gate short docs explicitly
-        return F.when(F.length(c) >= gram,
-                      F.sequence(F.lit(0), F.length(c) - gram)
-                      ).otherwise(F.array().cast("array<int>"))
-
-    g = (df.select(F.col(id_field), norm.alias("__norm"))
-         .repartition(F.col(id_field))
-         .select(F.col(id_field), F.col("__norm"),
-                 F.explode(positions_of("__norm", k)).alias("pos"))
-         .select(id_field, F.col("pos").cast("long").alias("pos"),
-                 F.conv(F.substring(F.md5(
-                     F.expr(f"substring(__norm, pos + 1, {k})")),
-                     1, 15), 16, 10).cast("long").alias("__h")))
-    from pyspark.sql import Window
-
-    part = Window.partitionBy(id_field)
-    ordered = part.orderBy("pos")
-    n_grams = F.count(F.lit(1)).over(part)
-    # Sliding-window min via w-1 LAGs, not a bounded-frame aggregate:
-    # Spark recomputes bounded RowFrame aggregates from scratch for
-    # EVERY row (O(w) interpreted evals per row — measured 20s/1.5M
-    # rows for max_by at w=4), while offset window functions are one
-    # streaming pass and the least()/CASE finish is codegen'd.
-    # least() skips NULLs, so truncated frames at partition starts
-    # (and short docs) fall out correctly.
-    lags = [F.col("__h")] + [F.lag("__h", j).over(ordered)
-                             for j in range(1, win)]
-    lagged = g.withColumn("__n", n_grams)
-    lag_cols = []
-    for j, expr in enumerate(lags):
-        lagged = lagged.withColumn(f"__l{j}", expr)
-        lag_cols.append(F.col(f"__l{j}"))
-    mn = lag_cols[0] if win == 1 else F.least(*lag_cols)
-    # rightmost tie: probe the smallest offset (largest position) first
-    sel_expr = F.coalesce(*[F.when(lag_cols[j] == mn, F.col("pos") - j)
-                            for j in range(win)])
-    sel = (lagged.withColumn("__mn", mn)
-           .withColumn("__sel", sel_expr)
-           .select(id_field, "pos", "__n", "__mn", "__sel")
-           # complete windows only; a doc with < window grams gets
-           # exactly its final (all-grams) window
-           .filter((F.col("pos") >= win - 1)
-                   | (F.col("__n") < win) & (F.col("pos") == F.col("__n") - 1)))
-    return (sel.groupBy(id_field, F.col("__sel").alias("pos"),
-                        F.col("__mn").alias("fp"))
-            .agg(F.count(F.lit(1)).alias("__c")).drop("__c"))
+    return _winnow_arrow(df, id_field, field, k, win)
 
 
 @register("winnow_overlap")

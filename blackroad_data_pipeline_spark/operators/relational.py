@@ -29,7 +29,7 @@ from __future__ import annotations
 from collections.abc import Mapping
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -182,6 +182,24 @@ def op_sql(df: DataFrame, config: Mapping, views) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
+def exact_sum(col: Column, w: WindowSpec | None = None) -> Column:
+    """The one float sum of the package: sum in exact decimal, then
+    cast back to double — bit-for-bit deterministic under any
+    partitioning / AQE re-plan / window frame impl (double addition
+    is order-sensitive; decimal is not). The cast goes through string
+    because decimal->string->double is correctly rounded in every
+    engine, while direct decimal->double isn't (DuckDB computes
+    int128/10^scale in floating point). ``w`` makes it a window sum;
+    ``.over()`` attaches to the aggregate itself, never the outer cast.
+    Domain bound: decimal(38,10) holds |x| < 1e28 — far beyond any
+    realistic metric, but inputs past it raise under ANSI mode rather
+    than silently losing precision."""
+    s = F.sum(col.cast("decimal(38,10)"))
+    if w is not None:
+        s = s.over(w)
+    return s.cast("string").cast("double")
+
+
 def _agg_expr(field: str, fn: str, alias: str | None = None,
               spec: Mapping | None = None) -> Column:
     """One aggregate. ``count`` counts rows including NULL agg-field
@@ -215,16 +233,7 @@ def _agg_expr(field: str, fn: str, alias: str | None = None,
     if fn == "approx_count_distinct":
         return F.approx_count_distinct(col).alias(name)
     if fn in ("sum", "avg"):
-        # Sum in exact decimal then cast back to double: bit-for-bit
-        # deterministic under any partitioning / AQE re-plan (double
-        # addition is order-sensitive; decimal is not). The cast goes
-        # through string because decimal->string->double is correctly
-        # rounded in every engine, while direct decimal->double isn't
-        # (DuckDB computes int128/10^scale in floating point).
-        # Domain bound: decimal(38,10) holds |x| < 1e28 — far beyond
-        # any realistic metric, but inputs past it raise under ANSI
-        # mode rather than silently losing precision.
-        dec = F.sum(col.cast("decimal(38,10)")).cast("string").cast("double")
+        dec = exact_sum(col)
         if fn == "avg":
             return (dec / F.count(col)).alias(name)
         return dec.alias(name)
@@ -843,11 +852,6 @@ _WINDOW_FNS = {
     "dense_rank": lambda c: F.dense_rank(),
     "lag": lambda c: F.lag(c),
     "lead": lambda c: F.lead(c),
-    # decimal-summed for the same reason as the aggregate operator:
-    # double window sums associate differently per engine/frame impl;
-    # the back-to-double cast happens AFTER .over() (see _WINDOW_POST —
-    # .over() must attach to the aggregate itself, not an outer cast)
-    "sum": lambda c: F.sum(c.cast("decimal(38,10)")),
     "avg": lambda c: F.avg(c),
     "min": lambda c: F.min(c),
     "max": lambda c: F.max(c),
@@ -865,16 +869,11 @@ _WINDOW_FNS = {
     "last_value": lambda c: F.last(c, ignorenulls=False),
 }
 
-# applied to the windowed expression AFTER .over()
-_WINDOW_POST = {
-    "sum": lambda col: col.cast("string").cast("double"),
-}
-
 
 @register("window")
 def op_window(df: DataFrame, config: Mapping, views) -> DataFrame:
     fn = config["function"]
-    if fn not in _WINDOW_FNS and fn != "ntile":
+    if fn not in _WINDOW_FNS and fn not in ("ntile", "sum"):
         raise ValueError(f"unknown window function: {fn!r}")
     partition_by = config.get("partition_by", [])
     if (not partition_by and (config.get("frame") or config.get("order_by"))
@@ -919,13 +918,14 @@ def op_window(df: DataFrame, config: Mapping, views) -> DataFrame:
     if fn == "ntile":
         # bucket count rides the config, not a column
         expr = F.ntile(int(config.get("n", 4))).over(w)
+    elif fn == "sum":
+        # double window sums associate differently per engine/frame impl
+        expr = exact_sum(F.col(field), w)
     elif fn in ("first_value", "last_value") and config.get("ignore_nulls"):
         expr = (F.first if fn == "first_value" else F.last)(
             F.col(field), ignorenulls=True).over(w)
     else:
         expr = _WINDOW_FNS[fn](F.col(field) if field else None).over(w)
-    if fn in _WINDOW_POST:
-        expr = _WINDOW_POST[fn](expr)
     alias = config.get("alias", f"{field or 'w'}_{fn}")
     return df.withColumn(alias, expr)
 
@@ -1528,17 +1528,17 @@ def op_corpus_diff(df: DataFrame, config: Mapping, views) -> DataFrame:
     if isinstance(other, str):
         other = views[other]
 
-    def fp(col: Column) -> Column:
-        return F.md5(F.regexp_replace(
-            F.lower(F.trim(F.coalesce(col, F.lit("")))), r"\s+", " "))
+    from ..llmops.dedup import content_key
 
-    new = df.select(F.col(id_field).alias("__id"), fp(F.col(field)).alias("__fp_new"))
+    new = df.select(F.col(id_field).alias("__id"),
+                    content_key(F.col(field)).alias("__fp_new"))
     if config.get("other_is_fingerprint"):
         old = other.select(F.col(id_field).alias("__oid"),
                            F.col(config.get("other_field", "fp")).alias("__fp_old"))
     else:
         old = other.select(F.col(id_field).alias("__oid"),
-                           fp(F.col(config.get("other_field", field))).alias("__fp_old"))
+                           content_key(F.col(config.get("other_field", field)))
+                           .alias("__fp_old"))
     joined = new.join(old, new["__id"] == old["__oid"], "full_outer")
     status = (F.when(F.col("__oid").isNull(), F.lit("added"))
               .when(F.col("__id").isNull(), F.lit("removed"))

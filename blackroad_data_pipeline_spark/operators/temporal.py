@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .registry import register
+from .relational import exact_sum
 
 
 def _resolve(right, views):
@@ -580,9 +581,9 @@ def _epoch_col(df: DataFrame, ts_field: str) -> F.Column:
 
 def _resample_aggs(df: DataFrame, specs, opname: str):
     """Aggregate-spec builder shared by time_resample / time_rollup:
-    count/sum/min/max with the decimal(38,10)-via-string route for
-    float sums (double sums associate differently per partitioning/
-    engine — op_aggregate precedent). Returns (agg_cols, aliases)."""
+    count/sum/min/max with ``exact_sum`` for float sums (double sums
+    associate differently per partitioning/engine). Returns
+    (agg_cols, aliases)."""
     floaty = {f.name for f in df.schema.fields
               if f.dataType.typeName() in ("float", "double")}
     agg_cols, out_names = [], []
@@ -597,8 +598,7 @@ def _resample_aggs(df: DataFrame, specs, opname: str):
         elif fn == "sum":
             c = F.col(field)
             if field in floaty:
-                agg_cols.append(F.sum(c.cast("decimal(38,10)"))
-                                .cast("string").cast("double").alias(alias))
+                agg_cols.append(exact_sum(c).alias(alias))
             else:
                 agg_cols.append(F.sum(c).alias(alias))
         elif fn in ("min", "max"):
@@ -633,8 +633,8 @@ def op_time_resample(df: DataFrame, config: Mapping, views) -> DataFrame:
 
     config: ``ts_field`` (default ts), ``interval`` seconds,
     ``group_by`` keys, ``aggregates`` [{field, function, alias}]
-    with count/sum/min/max (sum over float columns routes through
-    decimal(38,10) like the aggregate operator — order-independent),
+    with count/sum/min/max (sum over float columns is ``exact_sum``,
+    like the aggregate operator — order-independent),
     ``fill``: none (empty buckets hold NULL aggregates) | zero |
     ffill (carry the last observed value forward) | linear
     (interpolate between the gap's two observed endpoints:
@@ -1009,8 +1009,7 @@ def op_rolling(df: DataFrame, config: Mapping, views) -> DataFrame:
                            T.ByteType)):
                 s = F.sum(c.cast("long")).over(w)
             else:
-                s = (F.sum(c.cast("decimal(38,10)")).over(w)
-                     .cast("string").cast("double"))
+                s = exact_sum(c, w)
             col = s if fn == "sum" else \
                 s / F.count(c).over(w).cast("double")
         elif fn in ("min", "max"):

@@ -87,9 +87,11 @@ def get_spark(
     )
     # Pin the JVM default locale (ADVICE r7): Java
     # String.toLowerCase() — the F.lower fallback for non-ASCII — is
-    # default-locale sensitive (Turkish 'I' -> dotless 'ı'), which
-    # would break the byte-identical parity contract between the
-    # Arrow and JVM winnow kernels on a non-English host. Executors
+    # default-locale sensitive (Turkish 'I' -> dotless 'ı'). F.lower
+    # is in every text normalization (content_key, the shingle and
+    # token columns, the SQL oracles' replays), so on a non-English
+    # host every one of them would disagree with the Python kernels'
+    # locale-independent str.lower() and with other engines. Executors
     # get the same pin for real-cluster deployments — APPENDED to any
     # caller-supplied executor JVM options, never replacing them.
     # (Options set only in spark-defaults.conf are not visible here

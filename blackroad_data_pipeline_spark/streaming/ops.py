@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from ..operators.parallel import overlap
 from ..operators.registry import register
+from ..operators.relational import exact_sum
 
 # Guards the set-conf -> start -> restore-conf window in
 # run_stream_to_memory: harness threads share ONE SparkSession, so an
@@ -37,8 +38,7 @@ def _windowed_aggs(config: Mapping, ts: str) -> list:
         if fn == "count":
             aggs.append(F.count(F.lit(1)).alias(alias))
         elif fn == "sum":
-            aggs.append(F.sum(col.cast("decimal(38,10)")).cast("string")
-                        .cast("double").alias(alias))
+            aggs.append(exact_sum(col).alias(alias))
         elif fn in ("avg", "min", "max"):
             aggs.append(getattr(F, fn)(col.cast("double")).alias(alias))
         else:
@@ -312,20 +312,49 @@ def run_stream_to_memory(df: DataFrame, name: str,
     # thread's temporary value (round-9 review finding). Queries never
     # hold the lock while running; start() is async.
     with _CONF_LOCK:
+        prev = None
         if shuffle_partitions is not None:
             prev = spark.conf.get("spark.sql.shuffle.partitions")
             spark.conf.set("spark.sql.shuffle.partitions",
                            str(shuffle_partitions))
-            try:
-                q = (df.writeStream.outputMode(output_mode)
-                     .format("memory").queryName(name).start())
-            finally:
-                spark.conf.set("spark.sql.shuffle.partitions", prev)
-        else:
+        try:
             q = (df.writeStream.outputMode(output_mode)
                  .format("memory").queryName(name).start())
+        finally:
+            if prev is not None:
+                spark.conf.set("spark.sql.shuffle.partitions", prev)
     q.processAllAvailable()
     q.stop()
+    return q
+
+
+def _read_existing(spark: SparkSession, path: str) -> DataFrame | None:
+    """The parquet dataset at ``path``, or None while nothing has been
+    written there yet (a store writer's first drain). ONLY a missing
+    path is swallowed — a schema mismatch / corrupt footer / bad
+    config must surface, or the writer silently skips its history and
+    re-ingests duplicates."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as e:
+        cond = getattr(e, "getCondition", lambda: None)()
+        if cond != "PATH_NOT_FOUND" and "PATH_NOT_FOUND" not in str(e):
+            raise
+        return None
+
+
+def _drain(df: DataFrame, each_batch, checkpoint: str):
+    """Run ``each_batch(batch, batch_id)`` over every micro-batch that
+    is available now, then stop (foreachBatch + ``availableNow``).
+    foreachBatch is at-least-once: a batch whose drain failed before
+    its checkpoint commit replays with the same id and input, so
+    ``each_batch`` must converge on replay."""
+    q = (df.writeStream.foreachBatch(each_batch)
+         .option("checkpointLocation", checkpoint)
+         .trigger(availableNow=True).start())
+    q.awaitTermination()
     return q
 
 
@@ -411,7 +440,7 @@ def run_stream_ingest_dedup(df: DataFrame, path: str, checkpoint: str,
     """Incremental corpus ingestion with CROSS-RESTART content dedup —
     the production crawl-intake shape at 100 TB: each availableNow
     drain dedups the new micro-batch within itself (keep min id per
-    normalized-content md5, same normalization as dedup_exact), drops
+    ``content_key``, the dedup_exact key), drops
     everything whose fingerprint already exists in a persistent
     NARROW fingerprint store (fp + ingest batch id — never re-reads
     old text), then appends the survivors and their fingerprints.
@@ -421,53 +450,40 @@ def run_stream_ingest_dedup(df: DataFrame, path: str, checkpoint: str,
     partition, so a replayed batch rewrites its own partition instead
     of duplicating rows; the store anti-join EXCLUDES the current
     batch id, so a replay that already appended its fingerprints
-    still recomputes the same survivor set (fingerprint duplicates
-    are harmless — the store is consumed as a set). Net effect:
-    exactly-once corpus contents without a transactional table
-    format.
+    still recomputes the same survivor set, and appends only the
+    fingerprints its failed attempt did not. Net effect: exactly-once
+    corpus and fingerprint-store contents without a transactional
+    table format.
     """
-    from pyspark.sql import functions as F
+    from ..llmops.dedup import content_key
 
     def _ingest(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        fp = F.md5(F.regexp_replace(
-            F.lower(F.trim(F.coalesce(F.col(field), F.lit("")))),
-            r"\s+", " "))
-        fped = batch.withColumn("__fp", fp)
+        fped = batch.withColumn("__fp", content_key(F.col(field)))
         keep = (fped.groupBy("__fp").agg(F.min(id_field).alias(id_field))
                 .drop("__fp"))
         fped = fped.join(keep, id_field, "left_semi")
-        from pyspark.errors import AnalysisException
-
-        try:
-            store = (spark.read.parquet(fingerprint_path)
-                     .filter(F.col("ingest_batch") != F.lit(batch_id))
+        store = _read_existing(batch.sparkSession, fingerprint_path)
+        if store is not None:
+            older = (store.filter(F.col("ingest_batch") != F.lit(batch_id))
                      .select("fp"))
             fped = fped.join(
-                store, fped["__fp"] == store["fp"], "left_anti")
-        except AnalysisException as e:
-            # first batch: no store yet. ONLY a missing path may be
-            # swallowed — a schema mismatch / corrupt footer / bad
-            # config must surface, or the anti-join is silently
-            # skipped and history duplicates re-ingest (ADVICE r3).
-            cond = getattr(e, "getCondition", lambda: None)()
-            if cond != "PATH_NOT_FOUND" and "PATH_NOT_FOUND" not in str(e):
-                raise
+                older, fped["__fp"] == older["fp"], "left_anti")
         survivors = fped.localCheckpoint(eager=True)  # compute ONCE
-        (survivors.select(F.col("__fp").alias("fp"),
-                          F.lit(batch_id).alias("ingest_batch"))
-         .write.mode("append").parquet(fingerprint_path))
+        fps = survivors.select(F.col("__fp").alias("fp"),
+                               F.lit(batch_id).alias("ingest_batch"))
+        if store is not None:
+            # a replay appends only what its failed attempt did not
+            fps = fps.join(
+                store.filter(F.col("ingest_batch") == F.lit(batch_id))
+                .select("fp"), "fp", "left_anti")
+        fps.write.mode("append").parquet(fingerprint_path)
         (survivors.drop("__fp")
          .withColumn("__ingest_batch", F.lit(batch_id))
          .write.mode("overwrite")
          .option("partitionOverwriteMode", "dynamic")
          .partitionBy("__ingest_batch").parquet(path))
 
-    q = (df.writeStream.foreachBatch(_ingest)
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    return q
+    return _drain(df, _ingest, checkpoint)
 
 
 def run_stream_scd2(df: DataFrame, path: str, checkpoint: str,
@@ -491,26 +507,19 @@ def run_stream_scd2(df: DataFrame, path: str, checkpoint: str,
     from ..operators.temporal import op_scd2
 
     def _merge(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        from pyspark.errors import AnalysisException
-
         cfg = {"keys": keys, "attrs": attrs, "ts_field": ts_field}
-        try:
-            history = spark.read.parquet(path).drop("__bucket")
-            cfg["history"] = history
-            # merge touches only keys in this batch; rows for other
-            # buckets are untouched history rows that the dynamic
-            # overwrite below would rewrite byte-identically, so prune
-            # the output to the touched buckets before writing
-        except AnalysisException as e:
-            cond = getattr(e, "getCondition", lambda: None)()
-            if cond != "PATH_NOT_FOUND" and "PATH_NOT_FOUND" not in str(e):
-                raise
+        history = _read_existing(batch.sparkSession, path)
+        if history is not None:
+            cfg["history"] = history.drop("__bucket")
         merged = op_scd2(batch, cfg, views=None)
         bucket = F.pmod(F.hash(*[F.col(k) for k in keys]),
                         F.lit(n_buckets))
         out = merged.withColumn("__bucket", bucket)
         if "history" in cfg:
+            # merge touches only keys in this batch; rows for other
+            # buckets are untouched history rows that the dynamic
+            # overwrite below would rewrite byte-identically, so prune
+            # the output to the touched buckets before writing
             touched = (batch.select(*keys).dropDuplicates(list(keys))
                        .withColumn("__b", bucket)
                        .select("__b").dropDuplicates())
@@ -520,11 +529,7 @@ def run_stream_scd2(df: DataFrame, path: str, checkpoint: str,
          .option("partitionOverwriteMode", "dynamic")
          .partitionBy("__bucket").parquet(path))
 
-    q = (df.writeStream.foreachBatch(_merge)
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    return q
+    return _drain(df, _merge, checkpoint)
 
 
 def run_stream_vector_ingest(df: DataFrame, path: str, checkpoint: str,
@@ -590,8 +595,6 @@ def run_stream_vector_ingest(df: DataFrame, path: str, checkpoint: str,
 
     def _ingest(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        from pyspark.errors import AnalysisException
-
         from ..store import (
             is_managed,
             store_current_version,
@@ -626,13 +629,7 @@ def run_stream_vector_ingest(df: DataFrame, path: str, checkpoint: str,
         batch = batch.filter(valid_vec(F.col(field)))
 
         def _read(sub):
-            try:
-                return spark.read.parquet(f"{model_dir}/{sub}")
-            except AnalysisException as e:
-                cond = getattr(e, "getCondition", lambda: None)()
-                if cond != "PATH_NOT_FOUND" and "PATH_NOT_FOUND" not in str(e):
-                    raise
-                return None
+            return _read_existing(spark, f"{model_dir}/{sub}")
 
         books = _read("books")
         cells = _read("cells")
@@ -680,15 +677,10 @@ def run_stream_vector_ingest(df: DataFrame, path: str, checkpoint: str,
             overlap(_train_books, _train_cells)
             books, cells = _read("books"), _read("cells")
 
-        store = hist = None
-        try:
-            store = (spark.read.parquet(path_)
-                     .filter(F.col("__ingest_batch") != F.lit(batch_id)))
-        except AnalysisException as e:
-            cond = getattr(e, "getCondition", lambda: None)()
-            if cond != "PATH_NOT_FOUND" and "PATH_NOT_FOUND" not in str(e):
-                raise
+        hist = None
+        store = _read_existing(spark, path_)
         if store is not None:
+            store = store.filter(F.col("__ingest_batch") != F.lit(batch_id))
             # array_repeat folds to the same literal bounds array as a
             # dim-wide F.array of literals, in one py4j call
             hist = store.select(
@@ -725,11 +717,7 @@ def run_stream_vector_ingest(df: DataFrame, path: str, checkpoint: str,
          .option("partitionOverwriteMode", "dynamic")
          .partitionBy("__ingest_batch").parquet(path_))
 
-    q = (df.writeStream.foreachBatch(_ingest)
-         .option("checkpointLocation", checkpoint)
-         .trigger(availableNow=True).start())
-    q.awaitTermination()
-    return q
+    return _drain(df, _ingest, checkpoint)
 
 
 def vector_store_maintain(spark: SparkSession, src_path: str,

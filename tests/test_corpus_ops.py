@@ -56,41 +56,62 @@ def test_dedup_against_keeps_batch_dups_when_disabled(spark):
     assert _ids(out) == [10, 11]
 
 
-def test_dedup_against_bloom_prefilter_equals_plain(spark):
-    """prefilter='bloom' must be invisible in the result: the bitmap
-    only routes rows around the shuffle; the exact anti-join removes
-    any false positives. Includes NULL text (hashes as empty) and a
-    within-batch dup."""
+def test_dedup_against_null_text_and_within_batch(spark):
+    """NULL text keys as empty text, history matches drop after
+    normalization, and one of a within-batch dup pair stays."""
     history = _docs(spark, [(i, f"hist doc {i}") for i in range(50)]
                     + [(99, "the cat sat")])
     batch = _docs(spark, [(10, "THE  cat  sat"), (11, "fresh content"),
                           (12, "fresh  CONTENT"), (13, None),
                           (14, "hist doc 7"), (15, "other")])
-    cfg = {"field": "text", "history": history}
-    plain = sorted(r["doc_id"] for r in op(
-        "dedup_against", batch, cfg, views={}).collect())
-    bloom = sorted(r["doc_id"] for r in op(
-        "dedup_against", batch, {**cfg, "prefilter": "bloom"},
-        views={}).collect())
-    assert bloom == plain == [11, 13, 15]
+    out = op("dedup_against", batch, {"field": "text", "history": history},
+             views={})
+    assert _ids(out) == [11, 13, 15]
 
 
-def test_dedup_against_bloom_empty_history_keeps_all(spark):
+def test_dedup_against_empty_history_keeps_all(spark):
     history = _docs(spark, [(0, "z")]).filter("doc_id > 100")  # empty
     batch = _docs(spark, [(1, "a"), (2, "b")])
     out = op("dedup_against", batch,
-             {"field": "text", "history": history, "prefilter": "bloom"},
-             views={})
+             {"field": "text", "history": history}, views={})
     assert _ids(out) == [1, 2]
 
 
-def test_dedup_against_bloom_bit_cap_raises(spark):
-    history = _docs(spark, [(i, f"h{i}") for i in range(64)])
-    batch = _docs(spark, [(1, "x")])
-    with pytest.raises(ValueError, match="bloom_max_bits"):
-        op("dedup_against", batch,
-           {"field": "text", "history": history, "prefilter": "bloom",
-            "bloom_max_bits": 128}, views={})
+def test_content_key_ops_agree_on_null_and_blank_text(spark, tmp_path):
+    """fingerprint, dedup_exact, dedup_against and the streaming
+    ingest all key a document by ``content_key``: NULL, empty and
+    whitespace-only text are one key, so every op keeps [1, 4]."""
+    from blackroad_data_pipeline_spark.streaming.ops import (
+        run_stream_ingest_dedup,
+    )
+
+    schema = "doc_id long, text string"
+    rows = [(1, None), (2, ""), (3, "  "), (4, "words")]
+    batch = spark.createDataFrame(rows, schema)
+    empty = batch.filter("doc_id > 100")
+
+    fps = op("fingerprint", batch, {"field": "text"})
+    store = fps.filter("doc_id = 1").select(F.col("fingerprint").alias("fp"))
+    by_fp = {}
+    for r in fps.collect():
+        by_fp.setdefault(r["fingerprint"], []).append(r["doc_id"])
+    assert sorted(min(v) for v in by_fp.values()) == [1, 4]
+    assert _ids(op("dedup_exact", batch, {"field": "text"})) == [1, 4]
+    assert _ids(op("dedup_against", batch,
+                   {"field": "text", "history": empty}, views={})) == [1, 4]
+    # a fingerprint store built with `fingerprint` matches NULL text
+    assert _ids(op("dedup_against", batch,
+                   {"field": "text", "history": store,
+                    "history_is_fingerprint": True}, views={})) == [4]
+
+    src = tmp_path / "crawl"
+    batch.write.parquet(str(src / "drop1.parquet"))
+    stream = spark.readStream.schema(schema).option(
+        "recursiveFileLookup", True).parquet(str(src))
+    out = str(tmp_path / "corpus")
+    run_stream_ingest_dedup(stream, out, str(tmp_path / "ckpt"),
+                            str(tmp_path / "fps"))
+    assert _ids(spark.read.parquet(out)) == [1, 4]
 
 
 # -- cap_per_group ---------------------------------------------------------

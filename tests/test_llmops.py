@@ -123,43 +123,142 @@ def test_winnow_validation_and_plan(spark):
         op("winnow", df, {"k": 0}, views={})
     from blackroad_data_pipeline_spark.plans import quality as plans
 
-    with pytest.raises(ValueError, match="impl"):
-        op("winnow", df, {"impl": "rust"}, views={})
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        # default (arrow kernel): doc-local -> ZERO shuffles
+        # the Arrow kernel is doc-local -> ZERO shuffles
         out = op("winnow", df, {}, views={})
         plans.assert_no_row_python(out)
         plans.assert_max_shuffles(out, 0)
-        # jvm path: the one documented id shuffle
-        outj = op("winnow", df, {"impl": "jvm"}, views={})
-        plans.assert_no_row_python(outj)
-        plans.assert_max_shuffles(outj, 1)
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", "true")
 
 
-def test_winnow_arrow_jvm_parity(spark):
-    """impl='arrow' (zero-shuffle mapInPandas kernel) and impl='jvm'
-    (explode + LAG window) must be byte-identical — including
+_WINNOW_EDGE_DOCS = [
+    (1, "the quick brown fox jumps over the lazy dog"),
+    (2, "aaaaaaaaaaaa"),
+    (3, "abc"), (4, None),
+    (5, "ab\u00a0cd efgh\u00a0ijkl"),   # real NBSPs
+    (6, "  MiXeD   Case\tand\nnewlines  "),
+    (7, "abcdefg"),
+    (8, "\u00c9LAN d\u00e9j\u00e0 vu na\u00efve"),
+]
+
+# (doc_id, pos, fp) rows per (k, window), as the Arrow kernel and the
+# former explode + LAG window plan both produced them
+_PINNED_WINNOW = {
+    (5, 4): [
+        (1, 3, 771299835052696017), (1, 4, 134887290390610550),
+        (1, 8, 90221415455246214), (1, 11, 137125510881225487),
+        (1, 12, 363426704509528618), (1, 16, 848320153900747515),
+        (1, 17, 215465607223559179), (1, 19, 141986352809399880),
+        (1, 21, 165018324668779544), (1, 23, 523674764108252068),
+        (1, 27, 32308818633107717), (1, 31, 122060442873671895),
+        (1, 35, 150761605112597130), (2, 3, 402218961522959379),
+        (2, 4, 402218961522959379), (2, 5, 402218961522959379),
+        (2, 6, 402218961522959379), (2, 7, 402218961522959379),
+        (5, 0, 7948536292567354), (5, 4, 163896906224369424),
+        (5, 5, 181880115640528860), (5, 8, 594042914114351535),
+        (6, 0, 132698491989581321), (6, 2, 425220513817970873),
+        (6, 6, 363071565923088560), (6, 8, 224523059922411886),
+        (6, 9, 66817638125991197), (6, 10, 1695681883001306),
+        (6, 11, 22982882080931363), (6, 15, 173480062524137105),
+        (7, 1, 55225719737629791), (8, 2, 206424984352470638),
+        (8, 4, 76857516093299286), (8, 5, 398470615733712463),
+        (8, 9, 216744802404651334), (8, 10, 41614749790155377),
+    ],
+    (2, 7): [
+        (1, 4, 63806577357540360), (1, 11, 243295694138882178),
+        (1, 18, 313900579710143726), (1, 19, 158187596885319281),
+        (1, 21, 62206945807812219), (1, 22, 140420439907039576),
+        (1, 28, 583490773513285870), (1, 31, 143482937000668389),
+        (1, 37, 302971329862980291), (2, 6, 293380216577023015),
+        (2, 7, 293380216577023015), (2, 8, 293380216577023015),
+        (2, 9, 293380216577023015), (2, 10, 293380216577023015),
+        (3, 0, 110319792137841948), (5, 0, 110319792137841948),
+        (5, 5, 117411423007140813), (5, 8, 115714801707822833),
+        (5, 12, 22985913850639803), (6, 0, 188023322320401279),
+        (6, 6, 379248403650694235), (6, 11, 111187687231738711),
+        (6, 14, 361864702720350429), (6, 19, 88765766676243198),
+        (6, 21, 82314930504418305), (7, 0, 110319792137841948),
+        (8, 2, 111187687231738711), (8, 8, 124255045684037750),
+        (8, 10, 32382223376974931),
+    ],
+    (1, 1): [
+        (1, 0, 1023881695908026374), (1, 1, 166928100160723943),
+        (1, 2, 1015123532609413471), (1, 3, 513796190670281762),
+        (1, 4, 534045211780804179), (1, 5, 556041653115827356),
+        (1, 6, 605101658848562694), (1, 7, 335694708444724083),
+        (1, 8, 634527158356367497), (1, 9, 513796190670281762),
+        (1, 10, 661666306091311870), (1, 11, 338960790091817548),
+        (1, 12, 978802393637669421), (1, 13, 1086088894687808284),
+        (1, 14, 556398400330517006), (1, 15, 513796190670281762),
+        (1, 16, 646852370794608924), (1, 17, 978802393637669421),
+        (1, 18, 710810379057940483), (1, 19, 513796190670281762),
+        (1, 20, 244233567702938957), (1, 21, 556041653115827356),
+        (1, 22, 502421250254638498), (1, 23, 592356155975611273),
+        (1, 24, 17024884454022528), (1, 25, 513796190670281762),
+        (1, 26, 978802393637669421), (1, 27, 712525990981957053),
+        (1, 28, 1015123532609413471), (1, 29, 338960790091817548),
+        (1, 30, 513796190670281762), (1, 31, 1023881695908026374),
+        (1, 32, 166928100160723943), (1, 33, 1015123532609413471),
+        (1, 34, 513796190670281762), (1, 35, 205923035426399867),
+        (1, 36, 57446577476672362), (1, 37, 1133463027340014445),
+        (1, 38, 294186462471603296), (1, 39, 513796190670281762),
+        (1, 40, 587576853797490713), (1, 41, 978802393637669421),
+        (1, 42, 805968361848989467), (2, 0, 57446577476672362),
+        (2, 1, 57446577476672362), (2, 2, 57446577476672362),
+        (2, 3, 57446577476672362), (2, 4, 57446577476672362),
+        (2, 5, 57446577476672362), (2, 6, 57446577476672362),
+        (2, 7, 57446577476672362), (2, 8, 57446577476672362),
+        (2, 9, 57446577476672362), (2, 10, 57446577476672362),
+        (2, 11, 57446577476672362), (3, 0, 57446577476672362),
+        (3, 1, 661666306091311870), (3, 2, 335694708444724083),
+        (5, 0, 57446577476672362), (5, 1, 661666306091311870),
+        (5, 2, 639352528646779353), (5, 3, 335694708444724083),
+        (5, 4, 587576853797490713), (5, 5, 513796190670281762),
+        (5, 6, 1015123532609413471), (5, 7, 646852370794608924),
+        (5, 8, 805968361848989467), (5, 9, 166928100160723943),
+        (5, 10, 639352528646779353), (5, 11, 605101658848562694),
+        (5, 12, 244233567702938957), (5, 13, 634527158356367497),
+        (5, 14, 205923035426399867), (6, 0, 502421250254638498),
+        (6, 1, 605101658848562694), (6, 2, 710810379057940483),
+        (6, 3, 1015123532609413471), (6, 4, 587576853797490713),
+        (6, 5, 513796190670281762), (6, 6, 335694708444724083),
+        (6, 7, 57446577476672362), (6, 8, 17024884454022528),
+        (6, 9, 1015123532609413471), (6, 10, 513796190670281762),
+        (6, 11, 57446577476672362), (6, 12, 556398400330517006),
+        (6, 13, 587576853797490713), (6, 14, 513796190670281762),
+        (6, 15, 556398400330517006), (6, 16, 1015123532609413471),
+        (6, 17, 1086088894687808284), (6, 18, 205923035426399867),
+        (6, 19, 605101658848562694), (6, 20, 556398400330517006),
+        (6, 21, 1015123532609413471), (6, 22, 17024884454022528),
+        (7, 0, 57446577476672362), (7, 1, 661666306091311870),
+        (7, 2, 335694708444724083), (7, 3, 587576853797490713),
+        (7, 4, 1015123532609413471), (7, 5, 646852370794608924),
+        (7, 6, 805968361848989467), (8, 0, 463269163352058555),
+        (8, 1, 205923035426399867), (8, 2, 57446577476672362),
+        (8, 3, 556398400330517006), (8, 4, 513796190670281762),
+        (8, 5, 587576853797490713), (8, 6, 463269163352058555),
+        (8, 7, 244233567702938957), (8, 8, 907292594294782475),
+        (8, 9, 513796190670281762), (8, 10, 712525990981957053),
+        (8, 11, 556041653115827356), (8, 12, 513796190670281762),
+        (8, 13, 556398400330517006), (8, 14, 57446577476672362),
+        (8, 15, 31985117442138843), (8, 16, 712525990981957053),
+        (8, 17, 1015123532609413471),
+    ],
+}
+
+
+def test_winnow_outputs_pinned_on_edge_docs(spark):
+    """Every selected (pos, fp) equals the pinned value — including
     rightmost-tie selection on degenerate all-equal hashes, short and
     NULL docs, Java-\\s-only whitespace collapse (NBSP must NOT
     collapse), and non-ASCII lowercasing."""
-    rows = [(1, "the quick brown fox jumps over the lazy dog"),
-            (2, "aaaaaaaaaaaa"),
-            (3, "abc"), (4, None),
-            (5, "ab\u00a0cd efgh\u00a0ijkl"),   # real NBSPs
-            (6, "  MiXeD   Case\tand\nnewlines  "),
-            (7, "abcdefg"),
-            (8, "ÉLAN déjà vu naïve")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    for cfg in ({"k": 5, "window": 4}, {"k": 2, "window": 7},
-                {"k": 1, "window": 1}):
-        a = sorted(map(tuple, op("winnow", df, {**cfg, "impl": "arrow"},
-                                 views={}).collect()))
-        j = sorted(map(tuple, op("winnow", df, {**cfg, "impl": "jvm"},
-                                 views={}).collect()))
-        assert a and a == j, cfg
+    df = spark.createDataFrame(_WINNOW_EDGE_DOCS, "doc_id long, text string")
+    for (k, win), want in _PINNED_WINNOW.items():
+        got = sorted(map(tuple, op("winnow", df, {"k": k, "window": win},
+                                   views={}).collect()))
+        assert got == want, (k, win)
 
 
 # -- dedup --------------------------------------------------------------------
@@ -485,17 +584,41 @@ def test_knn_join_index_mode_and_exclude_self(spark, vecs):
         assert abs(got[q]["cos_sim"] - 1.0) < 1e-9
 
 
-def test_knn_join_cogroup_equals_pairs_impl(spark):
-    """The default cogrouped per-cell matmul kernel must produce the
-    SAME ranked neighbor lists as the explicit pair-join impl (cos
-    values may differ by accumulation-order ulps; ordering may not)."""
+def test_knn_join_matches_numpy_replay(spark):
+    """The cogrouped per-cell matmul kernel against a numpy replay of
+    the IVF contract: every index row in its nearest cell, every query
+    probing its ``nprobe`` nearest cells, self excluded, ranked by
+    (-cos, neighbor id). Ranks and neighbors match exactly; cosines
+    to 1e-12 (the kernel's matmul blocks may sum in another order)."""
+    import numpy as np
+
+    from blackroad_data_pipeline_spark.llmops.similarity import (
+        _ivf_centroids, _nearest_cells, _nonzero)
+
     e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     cfg = {"k": 4, "n_cells": 8, "nprobe": 3, "refine": 1}
-    cg = {(r["vec_id"], r["knn_rank"], r["neighbor_id"]) for r in
-          op("knn_join", e, cfg).collect()}
-    pr = {(r["vec_id"], r["knn_rank"], r["neighbor_id"]) for r in
-          op("knn_join", e, {**cfg, "impl": "pairs"}).collect()}
-    assert cg == pr and len(cg) == 4 * e.count()
+    got = {(r["vec_id"], r["knn_rank"]): (r["neighbor_id"], r["cos_sim"])
+           for r in op("knn_join", e, cfg).collect()}
+
+    rows = sorted((r["vec_id"], r["embedding"]) for r in e.collect())
+    ids = np.array([i for i, _ in rows])
+    mat = np.vstack([v for _, v in rows]).astype(np.float64)
+    cents = _ivf_centroids(e, cfg)
+    cell = _nearest_cells(mat, cents, 1)[:, 0]
+    probes = _nearest_cells(mat, cents, 3)
+    norms = _nonzero(np.linalg.norm(mat, axis=1))
+    cos = (mat @ mat.T) / (norms[:, None] * norms[None, :])
+    want = {}
+    for q in range(len(ids)):
+        cand = [i for i in range(len(ids))
+                if i != q and cell[i] in probes[q]]
+        top = sorted(cand, key=lambda i: (-cos[q, i], ids[i]))[:4]
+        for rank, i in enumerate(top, 1):
+            want[(ids[q], rank)] = (ids[i], cos[q, i])
+    assert len(want) == 4 * len(ids)
+    assert ({key: n for key, (n, _) in got.items()}
+            == {key: n for key, (n, _) in want.items()})
+    assert all(abs(got[key][1] - c) <= 1e-12 for key, (_, c) in want.items())
 
 
 def test_knn_join_null_embeddings_excluded(spark):

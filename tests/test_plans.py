@@ -1005,12 +1005,6 @@ REPEATED_KERNELS = {
     ("model_refresh", "assign"): (
         2, "two model versions: the old books encode the rows outside "
            "the drifted cells, the new books the rows inside them"),
-    ("dedup_against_bloom", "_bloom_maybe"): (
-        5, "the bloom-negative and bloom-positive branches each probe "
-           "every batch row and within_batch reads both twice; sharing "
-           "the probe through repartition('__fp') still planned 5 "
-           "probes and added 3 shuffles of every batch row, which the "
-           "prefilter exists to avoid"),
 }
 
 

@@ -1201,3 +1201,179 @@ def test_maintain_recovers_concurrent_drain_commits_zero_lost(
                {"root": root, "hot_batches": 1}, views={}).collect()[0]
     assert "9" in stats["recovered_batches"].split(",")
     assert 40 in ids_now()                                    # recovered
+
+
+# -- crash replay: a drain that dies between a store write and its
+# checkpoint commit replays the batch; the final store must be the
+# uninterrupted run's -------------------------------------------------------
+
+
+def _unit_vecs(seed, n, dim=8):
+    import numpy as np
+
+    rng = np.random.RandomState(seed)
+    out = []
+    for _ in range(n):
+        v = rng.randn(dim)
+        out.append((v / np.linalg.norm(v)).tolist())
+    return out
+
+
+def _near(v, seed):
+    import numpy as np
+
+    w = np.asarray(v) + np.random.RandomState(seed).randn(len(v)) * 1e-3
+    return (w / np.linalg.norm(w)).tolist()
+
+
+_BASE = _unit_vecs(5, 6)
+_NEW = _unit_vecs(6, 2)
+
+# per writer: the input schema, the rows of drain 1 and drain 2, and
+# the parquet writes each drain makes (a case per write)
+_CRASH_WRITERS = {
+    "ingest_dedup": (
+        "doc_id long, text string",
+        [(1, "the cat sat"), (2, "fresh content"), (3, None),
+         (4, "fresh content")],
+        [(10, "THE  cat   SAT"), (11, "brand new text"),
+         (12, "brand  NEW   text"), (13, ""), (14, "other novel words")],
+        (2, 2)),
+    "scd2": (
+        "k long, ts long, v string",
+        [(1, 10, "a"), (1, 30, "b"), (2, 10, "x"), (3, 5, "z")],
+        [(1, 60, "c"), (4, 7, "q"), (2, 10, "x")],
+        (1, 1)),
+    "vector_ingest": (
+        "vec_id long, embedding array<float>",
+        list(enumerate(_BASE)),
+        [(10, _near(_BASE[0], 7)), (11, _NEW[0]), (13, _NEW[1]),
+         (14, _near(_NEW[0], 8))],
+        (3, 1)),   # drain 1: books and cells (concurrent), then the store
+}
+
+
+def _writer_run(writer, root, stream):
+    from blackroad_data_pipeline_spark.streaming.ops import (
+        run_stream_ingest_dedup,
+        run_stream_scd2,
+        run_stream_vector_ingest,
+    )
+
+    ckpt = str(root / "ckpt")
+    if writer == "ingest_dedup":
+        run_stream_ingest_dedup(stream, str(root / "corpus"), ckpt,
+                                str(root / "fps"))
+    elif writer == "scd2":
+        run_stream_scd2(stream, str(root / "store"), ckpt, keys=["k"],
+                        attrs=["v"], ts_field="ts", n_buckets=8)
+    else:
+        run_stream_vector_ingest(
+            stream, str(root / "store"), ckpt, str(root / "models"),
+            threshold=0.98, dim=8, m=2, ks=2, n_cells=2, n_planes=2,
+            n_tables=8)
+
+
+def _land(spark, writer, root, day):
+    """Write drain ``day``'s input file into the source directory."""
+    schema, day1, day2, _ = _CRASH_WRITERS[writer]
+    spark.createDataFrame(day1 if day == 1 else day2, schema) \
+        .write.parquet(str(root / "src" / f"day{day}.parquet"))
+
+
+def _drain(spark, writer, root):
+    """Drain everything the source directory holds now."""
+    stream = spark.readStream.schema(_CRASH_WRITERS[writer][0]).option(
+        "recursiveFileLookup", True).parquet(str(root / "src"))
+    _writer_run(writer, root, stream)
+
+
+def _store_digests(spark, writer, root) -> dict:
+    """sha256 of the sorted rows of every store the writer keeps."""
+    import hashlib
+
+    subs = {"ingest_dedup": ("corpus", "fps"), "scd2": ("store",),
+            "vector_ingest": ("store", "models/books", "models/cells")}
+    out = {}
+    for sub in subs[writer]:
+        df = spark.read.parquet(str(root / sub))
+        cols = sorted(df.columns)
+        rows = sorted(repr(tuple(r[c] for c in cols)) for r in df.collect())
+        out[sub] = (len(rows), hashlib.sha256(
+            "\n".join([repr(cols)] + rows).encode()).hexdigest())
+    return out
+
+
+def _patch_parquet_writes(monkeypatch, crash_at=None) -> list:
+    """Count DataFrameWriter.parquet calls; with ``crash_at``, the
+    crash_at-th call raises after its write returned — the process
+    dies between the store write and the checkpoint commit. Locked:
+    the vector ingest's bootstrap writes its two models concurrently."""
+    import threading
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    real = DataFrameWriter.parquet
+    lock = threading.Lock()
+    calls = []
+
+    def parquet(self, path, *args, **kwargs):
+        real(self, path, *args, **kwargs)
+        with lock:
+            calls.append(path)
+            n = len(calls)
+        if n == crash_at:
+            raise RuntimeError(f"injected crash after parquet write {n}")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    return calls
+
+
+@pytest.fixture(scope="module")
+def uninterrupted_stores(spark, tmp_path_factory) -> dict:
+    """Each writer's store digests after two uninterrupted drains."""
+    out = {}
+    with pytest.MonkeyPatch.context() as mp:
+        for writer, spec in _CRASH_WRITERS.items():
+            root = tmp_path_factory.mktemp(writer)
+            writes = []
+            for day in (1, 2):
+                _land(spark, writer, root, day)
+                calls = _patch_parquet_writes(mp)
+                _drain(spark, writer, root)
+                mp.undo()
+                writes.append(len(calls))
+            # every write of both drains has its crash case below
+            assert tuple(writes) == spec[3]
+            out[writer] = _store_digests(spark, writer, root)
+    return out
+
+
+@pytest.mark.parametrize("writer,day,crash_at", [
+    (w, day, n) for w, spec in _CRASH_WRITERS.items()
+    for day, n_writes in zip((1, 2), spec[3])
+    for n in range(1, n_writes + 1)])
+def test_store_writer_crash_replay_converges(
+        spark, tmp_path, monkeypatch, uninterrupted_stores, writer, day,
+        crash_at):
+    """Crash a drain after its crash_at-th parquet write returns (before
+    the checkpoint commit), rerun it unpatched from the same
+    checkpoint, finish the remaining drains: every store — rows,
+    and for the vector ingest its frozen books and cells — equals an
+    uninterrupted run's."""
+    from pyspark.errors import StreamingQueryException
+
+    _land(spark, writer, tmp_path, 1)
+    if day == 2:
+        _drain(spark, writer, tmp_path)
+        _land(spark, writer, tmp_path, 2)
+    _patch_parquet_writes(monkeypatch, crash_at)
+    with pytest.raises(StreamingQueryException, match="injected crash"):
+        _drain(spark, writer, tmp_path)
+    monkeypatch.undo()
+    _drain(spark, writer, tmp_path)
+    if day == 1:
+        _land(spark, writer, tmp_path, 2)
+        _drain(spark, writer, tmp_path)
+    assert (_store_digests(spark, writer, tmp_path)
+            == uninterrupted_stores[writer])

@@ -75,12 +75,10 @@ PROBED = [
     "retention",
     "event_transitions",
     "text_normalize",
-    # round 4: bloom-prefiltered anti-join (fixed bitmap cost +
-    # linear membership), MG heavy hitters (bounded candidates +
-    # pruned recount), SCD2 window compression, BM25 (query-term
-    # pre-filtered explode), degree-ordered triangle join (the one
-    # with superlinear potential: wedges ~ m^1.5 worst case)
-    "dedup_against_bloom",
+    # round 4: MG heavy hitters (bounded candidates + pruned
+    # recount), SCD2 window compression, BM25 (query-term pre-filtered
+    # explode), degree-ordered triangle join (the one with
+    # superlinear potential: wedges ~ m^1.5 worst case)
     "heavy_hitters_mg",
     "scd2",
     "bm25",
