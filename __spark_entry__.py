@@ -1998,7 +1998,7 @@ def q_centroid_drift(spark, sf_dir):
     from blackroad_data_pipeline_spark.llmops.similarity import valid_vec
 
     e = _t(spark, sf_dir, "embeddings")
-    seed_rows = (e.filter(valid_vec(F.col("embedding")))
+    seed_rows = (e.filter(valid_vec("embedding"))
                  .orderBy("vec_id").limit(4).select("embedding").collect())
     cells = lit_frame(
         spark,
@@ -2204,7 +2204,7 @@ def q_model_refresh(spark, sf_dir):
     from blackroad_data_pipeline_spark.llmops.similarity import valid_vec
 
     e = _hmod_embs(spark, sf_dir)
-    seed_rows = (e.filter(valid_vec(F.col("embedding")))
+    seed_rows = (e.filter(valid_vec("embedding"))
                  .orderBy("vec_id").limit(4).select("embedding").collect())
     cells = lit_frame(
         spark,
@@ -2259,7 +2259,7 @@ def q_ann_pq_versioned(spark, sf_dir):
     from blackroad_data_pipeline_spark.llmops.similarity import valid_vec
 
     e = _hmod_embs(spark, sf_dir)
-    seed_rows = (e.filter(valid_vec(F.col("embedding")))
+    seed_rows = (e.filter(valid_vec("embedding"))
                  .orderBy("vec_id").limit(4).select("embedding").collect())
     cells = lit_frame(
         spark,
@@ -2826,7 +2826,7 @@ def q_vector_ingest_stream(spark, sf_dir):
         # batch twin over the same split, same frozen models
         dd = {k: kw[k] for k in ("threshold", "dim", "n_planes", "n_tables")}
         pq = {"dim": 64, "m": 8, "ks": 4, "seed_order": "id"}
-        k1 = op("dedup_embedding", day1.filter(valid_vec(F.col("embedding"))), dd)
+        k1 = op("dedup_embedding", day1.filter(valid_vec("embedding")), dd)
         h = op("dequantize_embedding",
                store.filter("__ingest_batch = 0").select(
                    "vec_id", F.col("q_emb").alias("embedding"),
@@ -2835,7 +2835,7 @@ def q_vector_ingest_stream(spark, sf_dir):
                {"bits": 8})
         k2 = op("dedup_embedding_against",
                 op("dedup_embedding",
-                   day2.filter(valid_vec(F.col("embedding"))), dd),
+                   day2.filter(valid_vec("embedding")), dd),
                 {**dd, "history": h}, views={})
         batch_kept = k1.select("vec_id").unionByName(k2.select("vec_id"))
         twin = op("ivf_assign",
@@ -3816,7 +3816,7 @@ def q_embedding_stats(spark, sf_dir):
     so summed stats aren't oracle-exact for float32 data."""
     from blackroad_data_pipeline_spark.llmops.similarity import valid_vec
     e = _t(spark, sf_dir, "embeddings")
-    e = e.filter(valid_vec(F.col("embedding")))
+    e = e.filter(valid_vec("embedding"))
     df = op("explode", e, {"field": "embedding", "as": "val",
                            "with_position": True})
     df = op("aggregate", df, {"group_by": ["pos"], "aggregates": [

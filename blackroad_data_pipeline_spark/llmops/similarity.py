@@ -10,14 +10,14 @@ vectorized) Pandas UDF closure.
 
 from __future__ import annotations
 
+import hashlib
 import threading
 from collections import OrderedDict
 from collections.abc import Mapping
-from functools import lru_cache, wraps
+from functools import lru_cache, reduce, wraps
 
 import numpy as np
 import pandas as pd
-from py4j.protocol import Py4JJavaError
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -26,24 +26,23 @@ from ..operators.parallel import _leaf_scan_bytes, fan_out, lit_frame, overlap
 from ..operators.registry import register
 
 
-def valid_vec(col: Column) -> Column:
+def valid_vec(name: str) -> Column:
     """The vector-validity contract (round 10, extending round 9's
-    NULL contract): a vector participates in similarity/quantization
-    math iff it is non-NULL, non-empty, and every component is a
-    finite non-NULL float. NaN/Inf components, NULL components, and
-    zero-length arrays are excluded exactly like NULL embeddings —
-    they have no position in cosine/L2 space, and engines DISAGREE
-    about them (Spark orders NaN largest in min/max, floor(NaN)
-    long-casts to 0 while DuckDB propagates NaN; an empty array
-    fails the batch decode). Filter-ops drop the row; annotate-ops emit
-    NULL (callers wrap the kernel input in ``F.when(valid_vec(c), c)``
-    so the existing NULL masks apply). Oracles replay the same
-    predicate as ``len(list_filter(emb, x -> isfinite(x))) = len(emb)``
-    — DuckDB's lambda-filter keeps only TRUE elements, so a NULL
-    component (NULL predicate) shortens the list exactly where the
-    compact-size check fails here, and isfinite(x) is false exactly
-    where the NaN/Inf checks fire (equivalence pytest-pinned on every
-    invalid shape).
+    NULL contract) over the array column ``name``: a vector
+    participates in similarity/quantization math iff it is non-NULL,
+    non-empty, and every component is a finite non-NULL float. NaN/Inf
+    components, NULL components, and zero-length arrays are excluded
+    exactly like NULL embeddings — they have no position in cosine/L2
+    space, and engines DISAGREE about them (Spark orders NaN largest in
+    min/max, floor(NaN) long-casts to 0 while DuckDB propagates NaN; an
+    empty array fails the batch decode). Filter-ops drop the row;
+    annotate-ops emit NULL (callers feed the kernel `_when_valid(name)`
+    so the existing NULL masks apply). Oracles replay the same predicate as
+    ``len(list_filter(emb, x -> isfinite(x))) = len(emb)`` — DuckDB's
+    lambda-filter keeps only TRUE elements, so a NULL component (NULL
+    predicate) shortens the list exactly where the compact-size check
+    fails here, and isfinite(x) is false exactly where the NaN/Inf
+    checks fire (equivalence pytest-pinned on every invalid shape).
     Array-NATIVE, no lambdas: Spark evaluates higher-order functions
     (filter/forall) interpreted per element, so this hot predicate —
     it now guards every vector op — uses only collection expressions
@@ -51,21 +50,35 @@ def valid_vec(col: Column) -> Column:
     pass: NULL components via the compact-size check, NaN via
     isnan(array_max) (Spark orders NaN greatest, so any NaN pins the
     max), ±Inf via array_contains equality. A vector of the wrong
-    width is not excluded: it raises (`_batch_matrix`, `cosine_col`)."""
-    return col.isNotNull() & (F.size(col) > 0) & _components_ok(col)
+    width is not excluded: it raises (`_batch_matrix`, `cosine_col`).
+    One F.expr parse (`_valid_sql`)."""
+    return F.expr(_valid_sql(_sql_name(name)))
 
 
-def _components_ok(col: Column) -> Column:
-    """True iff every component is a finite non-NULL number; FALSE
-    (never NULL — coalesced) otherwise. Shared by valid_vec and
-    vector_health's n_nonfinite counter."""
-    inf = float("inf")
-    return F.coalesce(
-        (F.size(F.array_compact(col)) == F.size(col))
-        & ~F.isnan(F.array_max(col))
-        & ~F.array_contains(col, F.lit(inf))
-        & ~F.array_contains(col, F.lit(-inf)),
-        F.lit(False))
+def _valid_sql(a: str) -> str:
+    """SQL text of `valid_vec` over the array expression ``a``."""
+    return f"({a} IS NOT NULL AND size({a}) > 0) AND {_components_sql(a)}"
+
+
+def _components_sql(a: str) -> str:
+    """SQL text that is true iff every component of the array ``a`` is
+    a finite non-NULL number; FALSE (never NULL — coalesced) otherwise.
+    Shared by valid_vec and vector_health's n_nonfinite counter. The
+    parentheses keep the AND chain left-deep, as the Column API builds
+    it (the SQL parser balances an unparenthesized chain)."""
+    return (f"coalesce(((size(array_compact({a})) = size({a})"
+            f" AND NOT isnan(array_max({a})))"
+            f" AND NOT array_contains({a}, CAST('Infinity' AS DOUBLE)))"
+            f" AND NOT array_contains({a}, CAST('-Infinity' AS DOUBLE)),"
+            " false)")
+
+
+def _when_valid(name: str) -> str:
+    """SQL text of the column ``name`` where `valid_vec` holds, NULL
+    elsewhere: a kernel's input, whose NULL mask then skips invalid
+    vectors."""
+    a = _sql_name(name)
+    return f"CASE WHEN {_valid_sql(a)} THEN {a} END"
 
 
 def _check_probe_finite(probe, op: str) -> list[float]:
@@ -84,8 +97,13 @@ def _check_probe_finite(probe, op: str) -> list[float]:
 def _sql_name(name: str) -> str:
     """``name`` as SQL text resolving like ``F.col(name)``: each
     dot-separated part backtick-quoted."""
-    return ".".join("`" + p.replace("`", "``") + "`"
-                    for p in name.split("."))
+    return ".".join(_sql_alias(p) for p in name.split("."))
+
+
+def _sql_alias(name: str) -> str:
+    """``name`` as one backtick-quoted SQL identifier: ``AS`` it names
+    a column exactly ``name``, as ``Column.alias(name)`` does."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def _float_array_sql(vals) -> str:
@@ -102,7 +120,12 @@ def _float_array_sql(vals) -> str:
 
 
 def _norm_sql(a: str) -> str:
-    """SQL text of `_safe_norm` over the array expression ``a``."""
+    """SQL text of the Euclidean norm of the array expression ``a``,
+    element-sequential in double (reduction order never varies with
+    partitioning), with zero pinned to 1.0 — the one norm contract of
+    every cosine here: a zero vector scores cosine 0 against anything
+    instead of dividing by zero (NaN, or DIVIDE_BY_ZERO under ANSI).
+    Matches the knn cogroup kernel's guard (`_nonzero`)."""
     n = ("sqrt(aggregate(transform(" + a + ", x -> CAST(x AS DOUBLE) * "
          "CAST(x AS DOUBLE)), 0.0D, (x, y) -> x + y))")
     return f"CASE WHEN {n} = 0.0D THEN 1.0D ELSE {n} END"
@@ -113,7 +136,7 @@ def cosine_col(a: str, b: str) -> Column:
     (SQL text: `_sql_name` of a column, or `_float_array_sql` of a
     driver-held probe), computed element-sequentially in double
     (deterministic — float reduction order never varies with
-    partitioning). A zero vector scores 0 (`_safe_norm`), a NULL input
+    partitioning). A zero vector scores 0 (`_norm_sql`), a NULL input
     NULL (array_size is NULL for it in every ANSI mode), and vectors of
     different lengths raise — zip_with would pad one with NULLs. One
     F.expr parse builds the same Catalyst expression as the Column-API
@@ -146,13 +169,13 @@ def op_ann_bruteforce(df: DataFrame, config: Mapping, views) -> DataFrame:
     else:
         probe_df = df.filter(F.col(id_field) == config["probe_id"]).select(
             F.col(field).alias("__probe")).filter(
-            valid_vec(F.col("__probe")))
+            valid_vec("__probe"))
     out = (
         # invalid (NULL/empty/non-finite) embeddings are neither
         # probes nor neighbors — the vector family's validity
         # contract (valid_vec; round-9 NULL sweep + round-10 NaN/Inf
         # fixture lever)
-        df.filter(valid_vec(F.col(field))).join(F.broadcast(probe_df))
+        df.filter(valid_vec(field)).join(F.broadcast(probe_df))
         .withColumn("cos_sim", cosine_col(_sql_name(field), "`__probe`"))
         .select(id_field, "cos_sim")
         .orderBy(F.col("cos_sim").desc(), F.col(id_field))
@@ -223,11 +246,13 @@ def _hyperplanes(dim: int, n_planes: int, seed: int) -> np.ndarray:
     return np.random.RandomState(seed).randn(n_planes, dim)
 
 
+@lru_cache(maxsize=8)
 def _multi_bucket_udf(dim: int, n_planes: int, seed: int, n_tables: int):
     """All L tables' bucket ids in one kernel: the L*n_planes
     hyperplanes stack into a single (L*b, dim) matrix, so the per-batch
     cost is one matmul regardless of table count. Table t hashes with
-    seed + t and packs plane i's sign bit as ``1 << i``."""
+    seed + t and packs plane i's sign bit as ``1 << i``. Built once per
+    geometry: the hyperplanes are its model."""
     if not 1 <= n_planes <= 62:
         # 62 sign bits fill an int64 without touching the sign bit; beyond
         # that the packed id would silently wrap and multi-probe XOR masks
@@ -264,7 +289,7 @@ def op_lsh_bucket(df: DataFrame, config: Mapping, views) -> DataFrame:
     return df.withColumn(
         "lsh_bucket",
         _multi_bucket_udf(dim, n_planes, seed, 1)(
-            F.when(valid_vec(F.col(field)), F.col(field)))[0])
+            F.expr(_when_valid(field)))[0])
 
 
 @register("ann_lsh")
@@ -345,7 +370,7 @@ def _ivf_centroids(df: DataFrame, config: Mapping) -> np.ndarray:
     # invalid embeddings can neither seed nor pull a centroid (a None
     # has no position to seed from; a NaN seed would NaN-poison every
     # refined mean)
-    df = df.filter(valid_vec(F.col(field)))
+    df = df.filter(valid_vec(field))
     seed = (df.select(F.col(field).alias("__e"))
             .orderBy(F.xxhash64(F.col(id_field)), F.col(id_field))
             .limit(k).collect())
@@ -396,7 +421,7 @@ def op_ivf_assign(df: DataFrame, config: Mapping, views) -> DataFrame:
     # invalid vectors get a NULL cell (valid_vec when-wrap -> the
     # kernel's NULL mask)
     return df.withColumn("ivf_cell", _assign_multi_udf(cents, 1)(
-        F.when(valid_vec(F.col(field)), F.col(field)))[0])
+        F.expr(_when_valid(field)))[0])
 
 
 @register("ann_ivf")
@@ -415,7 +440,7 @@ def op_ann_ivf(df: DataFrame, config: Mapping, views) -> DataFrame:
     # invalid embeddings are neither probes nor neighbors (valid_vec
     # contract — a NULL cell would crash the scan, a NaN vector would
     # poison the rerank cosine)
-    df = df.filter(valid_vec(F.col(field)))
+    df = df.filter(valid_vec(field))
     if cents.size == 0:  # empty/all-NULL corpus: nothing to search
         return lit_frame(
             df.sparkSession, [],
@@ -441,6 +466,36 @@ def op_ann_ivf(df: DataFrame, config: Mapping, views) -> DataFrame:
     )
 
 
+def _per_model(build):
+    """Decorate a kernel builder ``build(model, *params)`` to build once
+    per frozen model: a read-only array (what `_model_np` serves, one
+    object per model identity) keys by its id, held by the entry so the
+    id is not reused while cached, with ``params``. A writable array (a
+    training round's books, a model built in memory) builds per call.
+    The kernel's UDF object is reused, and with it the JVM function
+    PySpark builds for it on first use. 8 entries, oldest evicted."""
+    cache: OrderedDict = OrderedDict()
+
+    @wraps(build)
+    def cached(model: np.ndarray, *params):
+        if model.flags.writeable:
+            return build(model, *params)
+        k = (id(model), *params)
+        with _model_lock:
+            hit = cache.get(k)
+        if hit is not None:
+            return hit[1]
+        kernel = build(model, *params)
+        with _model_lock:
+            cache[k] = (model, kernel)
+            while len(cache) > _MODEL_CACHE_SIZE:
+                cache.popitem(last=False)
+        return kernel
+
+    return cached
+
+
+@_per_model
 def _assign_multi_udf(centroids: np.ndarray, nprobe: int):
     """Top-``nprobe`` nearest cells per vector (`_nearest_cells`), one
     matmul per Arrow batch. A vector's cell is element 0 of the
@@ -451,17 +506,6 @@ def _assign_multi_udf(centroids: np.ndarray, nprobe: int):
         return _scatter(mask, _nearest_cells(mat, centroids, nprobe))
 
     return assign
-
-
-def _safe_norm(name: str) -> Column:
-    """Euclidean norm of the array<float> column ``name``,
-    element-sequential in double (reduction order never varies with
-    partitioning), with zero pinned to 1.0 — the one norm contract of
-    every cosine here: a zero vector scores cosine 0 against anything
-    instead of dividing by zero (NaN, or DIVIDE_BY_ZERO under ANSI).
-    Matches the knn cogroup kernel's guard. One F.expr parse
-    (`_norm_sql`)."""
-    return F.expr(_norm_sql(_sql_name(name)))
 
 
 @F.pandas_udf(T.DoubleType())
@@ -483,12 +527,19 @@ _pair_dot_udf.asNondeterministic()
 
 
 def _side(df: DataFrame, field: str, id_field: str) -> DataFrame:
-    """(__id, __emb) rows of ``df``'s valid vectors — one side of an
-    LSH join. Invalid embeddings pair with nothing (valid_vec contract:
-    NULLs crashed the bucket kernel in the round-9 sweep; a NaN
-    component would NaN-poison the norm and every cosine it meets)."""
-    return df.filter(valid_vec(F.col(field))).select(
-        F.col(id_field).alias("__id"), F.col(field).alias("__emb"))
+    """(__id, __emb) rows of ``df``'s valid vectors with a non-NULL id —
+    one side of an LSH join. Invalid embeddings pair with nothing
+    (valid_vec contract: NULLs crashed the bucket kernel in the round-9
+    sweep; a NaN component would NaN-poison the norm and every cosine
+    it meets), and neither does a NULL id, which no id join matches.
+    Dropping NULL ids here rather than by an inferred join filter keeps
+    every read of a side one plan, so the reads share one exchange.
+    Like every step of an LSH join below, it is built from SQL text:
+    one parse per call, where the Column API makes a py4j call per
+    column, operator and alias."""
+    a, i = _sql_name(field), _sql_name(id_field)
+    return (df.filter(f"({_valid_sql(a)}) AND {i} IS NOT NULL")
+            .selectExpr(f"{i} AS __id", f"{a} AS __emb"))
 
 
 def _lsh_kernel(config: Mapping):
@@ -507,7 +558,7 @@ def _table_keys(side: DataFrame, multi, shared: bool = True) -> DataFrame:
     bucket kernel runs once per row however many joins it feeds. Keys
     only one join reads are left to that join, which may broadcast
     them instead of shuffling."""
-    keys = side.select("__id", F.posexplode(multi(F.col("__emb")))
+    keys = side.select("__id", F.posexplode(multi("__emb"))
                        .alias("__tbl", "__bkt"))
     return keys.repartition("__tbl", "__bkt") if shared else keys
 
@@ -525,20 +576,86 @@ def _candidates(a: DataFrame, b: DataFrame,
     return pairs.select("id_a", "id_b").dropDuplicates()
 
 
+def _attach(side: DataFrame, tag: str) -> DataFrame:
+    """(id_<tag>, emb_<tag>, norm_<tag>): a `_side`'s vectors keyed by
+    id for candidate pairs to join, each norm computed once per side
+    row (`_norm_sql`: a zero vector scores 0)."""
+    return side.selectExpr(f"__id AS id_{tag}", f"__emb AS emb_{tag}",
+                           f"{_norm_sql('`__emb`')} AS norm_{tag}")
+
+
+def _cos_sim() -> Column:
+    """``cos_sim`` of an attached candidate pair: the Arrow pair-dot of
+    ``emb_a`` and ``emb_b``, once per candidate, over the two norms."""
+    return (_pair_dot_udf("emb_a", "emb_b")
+            / F.expr("norm_a * norm_b")).alias("cos_sim")
+
+
 def _verified(pairs: DataFrame, a: DataFrame, b: DataFrame) -> DataFrame:
     """(id_a, id_b, cos_sim) of each candidate pair, ``a`` and ``b``
-    being the `_side` frames its ids come from. Norms are computed once
-    per side row (`_safe_norm`: a zero vector scores 0), the Arrow
-    pair-dot once per candidate."""
-    def attach(side: DataFrame, tag: str) -> DataFrame:
-        return side.select(F.col("__id").alias(f"id_{tag}"),
-                           F.col("__emb").alias(f"emb_{tag}"),
-                           _safe_norm("__emb").alias(f"norm_{tag}"))
+    being the `_side` frames its ids come from."""
+    return (pairs.join(_attach(a, "a"), "id_a").join(_attach(b, "b"), "id_b")
+            .select("id_a", "id_b", _cos_sim()))
 
-    return (pairs.join(attach(a, "a"), "id_a").join(attach(b, "b"), "id_b")
-            .select("id_a", "id_b",
-                    (_pair_dot_udf(F.col("emb_a"), F.col("emb_b"))
-                     / (F.col("norm_a") * F.col("norm_b"))).alias("cos_sim")))
+
+def _dup_losers(df: DataFrame, config: Mapping, history: DataFrame | None,
+                h_field: str, h_id: str, within: bool = True) -> DataFrame:
+    """Ids (column ``id_field``, possibly repeated) of the valid ``df``
+    rows within cosine ``threshold`` of a valid ``df`` row of smaller
+    id (``within``) or of any valid ``history`` row: the one
+    candidate-and-verify pass of every dedup_embedding form, over
+    batch × (batch ∪ history).
+
+    Each input has one `_side` and one bucket kernel; the batch's keys
+    are one exchange read by both sides of the bucket join. A row a
+    batch row can lose to (a rival) carries its id in the column of its
+    input, ``id_b`` or ``id_h``, the other one NULL, so batch and
+    history ids keep their own types (one id column for both would
+    coerce one type to the other: a string history id cast to a numeric
+    batch id raises under ANSI). One dropDuplicates dedups the
+    candidates; the batch vectors attach once by ``id_a``, the rivals'
+    vectors once by their id (a null-safe join on (id_b, id_h) when
+    both inputs are rivals), and one pair-dot verifies every candidate.
+    History rows pair only with batch rows, never with each other."""
+    multi = _lsh_kernel(config)
+    id_field = config.get("id_field", "vec_id")
+    batch = _side(df, config.get("field", "embedding"), id_field)
+    keys = _table_keys(batch, multi)
+    sides, rival_keys = {}, {}  # by rival id column
+    if within:
+        sides["id_b"], rival_keys["id_b"] = batch, keys
+    if history is not None:
+        sides["id_h"] = _side(history, h_field, h_id)
+        rival_keys["id_h"] = _table_keys(sides["id_h"], multi, shared=False)
+    wins = {"id_b": "id_b < id_a", "id_h": "id_h IS NOT NULL"}
+
+    def tagged(frames: dict, *cols: str) -> DataFrame:
+        """``cols`` of every rival frame, its ids under their own
+        column and NULL under the other's."""
+        return reduce(DataFrame.unionByName, [
+            frame.selectExpr(*cols, *[
+                f"{'__id' if c == col else 'NULL'} AS {c}" for c in frames])
+            for col, frame in frames.items()])
+
+    pairs = (keys.withColumnRenamed("__id", "id_a")
+             .join(tagged(rival_keys, "__tbl", "__bkt"), ["__tbl", "__bkt"])
+             .filter(" OR ".join(f"({wins[c]})" for c in sides))
+             .selectExpr("id_a", *sides).dropDuplicates()
+             .join(_attach(batch, "a"), "id_a"))
+    if len(sides) == 1:
+        # one input's rows: a plain id join, which shares the a side's
+        # attach exchange when they are batch rows
+        (col, side), = sides.items()
+        vecs, on = _attach(side, "b").withColumnRenamed("id_b", col), col
+    else:
+        vecs = tagged(sides, "__emb AS emb_b",
+                      f"{_norm_sql('`__emb`')} AS norm_b").selectExpr(
+            "emb_b", "norm_b", *[f"{c} AS r{c}" for c in sides])
+        on = F.expr(" AND ".join(f"{c} <=> r{c}" for c in sides))
+    threshold = _double_sql(config.get("threshold", 0.9))
+    return (pairs.join(vecs, on).select("id_a", _cos_sim())
+            .filter(f"cos_sim >= {threshold}")
+            .selectExpr(f"id_a AS {_sql_alias(id_field)}"))
 
 
 def _knn_cells_cogroup(qside: DataFrame, iside: DataFrame,
@@ -658,8 +775,8 @@ def op_knn_join(df: DataFrame, config: Mapping, views) -> DataFrame:
     # invalid (NULL/empty/non-finite) embeddings have no position in
     # cosine space: they neither query nor serve as neighbors
     # (valid_vec contract — the oracle replays the same exclusion)
-    df = df.filter(valid_vec(F.col(field)))
-    idx_df = idx_df.filter(valid_vec(F.col(i_field)))
+    df = df.filter(valid_vec(field))
+    idx_df = idx_df.filter(valid_vec(i_field))
 
     if method == "ivf":
         n_cells = int(config.get("n_cells", 16))
@@ -755,20 +872,15 @@ def op_dedup_embedding(df: DataFrame, config: Mapping, views) -> DataFrame:
 
     That is exactly ``dedup_embedding_against(dedup_embedding(df),
     history)``, since a row's history test never depends on which
-    batch rows survive. The within-batch losers and the history hits
-    are unioned under ONE anti-join, so the within-batch self-join
-    runs once, not under each of the against-join's three reads of its
-    input, and the batch's bucket keys are one exchange shared by the
-    self-join and the history join. History rows are only ever paired
-    with batch rows."""
+    batch rows survive. Both tests are one candidate-and-verify pass
+    over batch × (batch ∪ history) (`_dup_losers`) under one
+    anti-join: each input is hashed and attached once, and one
+    pair-dot verifies the within-batch and the history candidates
+    together. History rows are only ever paired with batch rows."""
+    field = config.get("field", "embedding")
     id_field = config.get("id_field", "vec_id")
-    pairs = op_similarity_join(df, config, views)
-    losers = pairs.select(F.col("id_b").alias(id_field))
-    if config.get("history") is not None:
-        field = config.get("field", "embedding")
-        losers = losers.union(_history_hits(
-            df, config["history"], config, field, id_field))
-    return df.join(losers.dropDuplicates(), id_field, "left_anti")
+    losers = _dup_losers(df, config, config.get("history"), field, id_field)
+    return df.join(losers, id_field, "left_anti")
 
 
 @register("dedup_embedding_groups")
@@ -802,10 +914,12 @@ def op_dedup_embedding_against(df: DataFrame, config: Mapping, views) -> DataFra
     batch×history work is per-bucket, never all-pairs — then exact
     cosine verifies each deduped candidate pair. Only ids ride the
     bucket join; the wide vectors attach per unique candidate pair
-    afterwards. For a 4× narrower history, store
-    ``quantize_embedding`` output and ``dequantize_embedding`` it as
-    the ``history`` input — buckets and cosines are recomputed from
-    the dequantized vectors, so no raw-fp32 history is ever re-read.
+    afterwards: dedup_embedding's one candidate-and-verify pass
+    (`_dup_losers`) without its within-batch half. For a 4× narrower
+    history, store ``quantize_embedding`` output and
+    ``dequantize_embedding`` it as the ``history`` input — buckets and
+    cosines are recomputed from the dequantized vectors, so no raw-fp32
+    history is ever re-read.
 
     config: ``history`` (view/DataFrame), ``history_field`` /
     ``history_id_field`` (default: same as batch), ``threshold``,
@@ -819,31 +933,11 @@ def op_dedup_embedding_against(df: DataFrame, config: Mapping, views) -> DataFra
     history = config["history"]
     if isinstance(history, str):
         history = views[history]
-    hits = _history_hits(df, history, config,
-                         config.get("history_field", field),
-                         config.get("history_id_field", id_field))
-    return df.join(hits.dropDuplicates(), id_field, "left_anti")
-
-
-def _history_hits(df: DataFrame, history: DataFrame, config: Mapping,
-                  h_field: str, h_id: str) -> DataFrame:
-    """Ids (column ``id_field``, possibly repeated) of the valid ``df``
-    rows within cosine ``threshold`` of a valid ``history`` row: the
-    candidate and verification half of dedup_embedding_against.
-    Invalid batch rows are never near-duplicates (the anti-join can't
-    hit them); invalid history rows match nothing."""
-    id_field = config.get("id_field", "vec_id")
-    threshold = float(config.get("threshold", 0.9))
-    batch = _side(df, config.get("field", "embedding"), id_field)
-    hist = _side(history, h_field, h_id)
-    multi = _lsh_kernel(config)
-    # the batch keys are similarity_join's, so dedup_embedding's
-    # self-join and this join share one exchange
-    pairs = _candidates(_table_keys(batch, multi),
-                        _table_keys(hist, multi, shared=False))
-    return (_verified(pairs, batch, hist)
-            .filter(F.col("cos_sim") >= threshold)
-            .select(F.col("id_a").alias(id_field)))
+    hits = _dup_losers(df, config, history,
+                       config.get("history_field", field),
+                       config.get("history_id_field", id_field),
+                       within=False)
+    return df.join(hits, id_field, "left_anti")
 
 
 @register("embedding_outlier")
@@ -895,7 +989,7 @@ def op_embedding_outlier(df: DataFrame, config: Mapping, views) -> DataFrame:
     # floor(NaN) long-casts to 0 while DuckDB propagates NaN, so a
     # single NaN component would silently shift the centroid here and
     # NaN it in the oracle (valid_vec contract, round-10 lever)
-    sums = df.filter(valid_vec(F.col(field))).groupBy(*keys).agg(*[
+    sums = df.filter(valid_vec(field)).groupBy(*keys).agg(*[
         F.sum(F.floor(F.col(field)[i].cast("double") * F.lit(scale)))
         .alias(f"__s{i}") for i in range(dim)])
     centroid = sums.select(
@@ -915,7 +1009,7 @@ def op_embedding_outlier(df: DataFrame, config: Mapping, views) -> DataFrame:
         # invalid vectors score NULL (and a fully-invalid group has no
         # centroid row at all — the joinback leaves __centroid NULL,
         # which cosine_col already NULLs through)
-        F.when(valid_vec(F.col(field)),
+        F.when(valid_vec(field),
                cosine_col(_sql_name(field), "`__centroid`"))
     ).drop("__centroid")
     if mode == "filter":
@@ -960,14 +1054,14 @@ def op_quantize_embedding(df: DataFrame, config: Mapping, views) -> DataFrame:
 
     bounds = config.get("bounds")
     if bounds is not None:
-        lo_arr = F.array(*[F.lit(float(bounds[0]))] * dim)
-        hi_arr = F.array(*[F.lit(float(bounds[1]))] * dim)
+        lo, hi = (f"array({', '.join([_double_sql(b)] * dim)})"
+                  for b in bounds[:2])
         src = df
     else:
         # bounds over VALID vectors only: Spark's min/max order NaN
         # largest (a single NaN would pin every hi_d to NaN) and an
         # Inf bound would zero-width every code (valid_vec contract)
-        agg = df.filter(valid_vec(F.col(field))).agg(*(
+        agg = df.filter(valid_vec(field)).agg(*(
             [F.min(F.col(field)[i].cast("double")).alias(f"__lo{i}")
              for i in range(dim)]
             + [F.max(F.col(field)[i].cast("double")).alias(f"__hi{i}")
@@ -976,20 +1070,32 @@ def op_quantize_embedding(df: DataFrame, config: Mapping, views) -> DataFrame:
             F.array(*[F.col(f"__lo{i}") for i in range(dim)]).alias("__lo"),
             F.array(*[F.col(f"__hi{i}") for i in range(dim)]).alias("__hi"))
         src = df.crossJoin(F.broadcast(code))
-        lo_arr, hi_arr = F.col("__lo"), F.col("__hi")
+        lo, hi = "`__lo`", "`__hi`"
 
-    x = F.transform(F.col(field), lambda v: v.cast("double"))
-    width = F.zip_with(hi_arr, lo_arr, lambda h, l:
-                       F.when(h > l, h - l).otherwise(F.lit(1.0)))
-    shifted = F.zip_with(x, lo_arr, lambda v, l: v - l)
-    q = F.zip_with(shifted, width, lambda s, w: F.least(
-        F.greatest(F.floor(s / w * F.lit(float(levels))), F.lit(0)),
-        F.lit(levels)).cast("int"))
-    out = (src.withColumns({"q_lo": lo_arr, "q_hi": hi_arr})
-           # invalid vectors quantize to NULL (valid_vec contract —
-           # floor(NaN/width) would otherwise clamp to a live code)
-           .withColumn(out_field, F.when(valid_vec(F.col(field)), q)))
-    return out.drop("__lo", "__hi")
+    # one F.expr parse each for the bounds and the code chain; invalid
+    # vectors quantize to NULL (valid_vec contract — floor(NaN/width)
+    # would otherwise clamp to a live code)
+    a = _sql_name(field)
+    q = (f"CASE WHEN {_valid_sql(a)} THEN zip_with(zip_with(transform("
+         f"{a}, x -> CAST(x AS DOUBLE)), {lo}, (x, y) -> x - y), "
+         f"{_width_sql(hi, lo)}, (x, y) -> CAST(least(greatest(floor("
+         f"x / y * {_double_sql(levels)}), 0), {levels}) AS INT)) END")
+    out = (src.withColumns({"q_lo": F.expr(lo), "q_hi": F.expr(hi)})
+           .withColumn(out_field, F.expr(q)))
+    return out if bounds is not None else out.drop("__lo", "__hi")
+
+
+def _double_sql(v: float) -> str:
+    """``v`` as SQL text of the DOUBLE ``F.lit(float(v))`` holds."""
+    v = float(v)
+    return f"{v!r}D" if np.isfinite(v) else f"CAST('{v}' AS DOUBLE)"
+
+
+def _width_sql(hi: str, lo: str) -> str:
+    """SQL text of the per-dimension quantization width of the bounds
+    arrays ``hi`` / ``lo``: hi - lo, or 1.0 where the range is empty."""
+    return (f"zip_with({hi}, {lo}, (x, y) -> "
+            "CASE WHEN x > y THEN x - y ELSE 1.0D END)")
 
 
 @register("dequantize_embedding")
@@ -1001,16 +1107,13 @@ def op_dequantize_embedding(df: DataFrame, config: Mapping, views) -> DataFrame:
     dimension (property-tested)."""
     field = config.get("field", "embedding")
     bits = int(config.get("bits", 8))
-    levels = float((1 << bits) - 1)
+    levels = _double_sql((1 << bits) - 1)
     out_field = config.get("as", field)
-    lo, hi = F.col("q_lo"), F.col("q_hi")
-    width = F.zip_with(hi, lo, lambda h, l:
-                       F.when(h > l, h - l).otherwise(F.lit(1.0)))
-    recon = F.zip_with(
-        F.zip_with(F.col(field), width, lambda q, w:
-                   (q.cast("double") + F.lit(0.5)) * w / F.lit(levels)),
-        lo, lambda v, l: v + l)
-    return df.withColumn(out_field, recon).drop("q_lo", "q_hi")
+    recon = (f"zip_with(zip_with({_sql_name(field)}, "
+             f"{_width_sql('`q_hi`', '`q_lo`')}, (x, y) -> "
+             f"(CAST(x AS DOUBLE) + 0.5D) * y / {levels}), `q_lo`, "
+             "(x, y) -> x + y)")
+    return df.withColumn(out_field, F.expr(recon)).drop("q_lo", "q_hi")
 
 
 def _fixed_point_guard(dim: int, scale: float) -> int:
@@ -1032,7 +1135,7 @@ def _quantized(df: DataFrame, field: str, id_field: str,
     valid_vec, not isNotNull: floor(NaN * scale) long-casts to 0 in
     Spark (NULL in DuckDB), so a NaN component would land the vector
     at that dimension's origin instead of excluding it (round 10)."""
-    return (df.filter(valid_vec(F.col(field)))
+    return (df.filter(valid_vec(field))
             .select(F.col(id_field).alias("__id"),
                     F.transform(F.col(field), lambda x: F.floor(
                         x.cast("double") * F.lit(scale))).alias("__q")))
@@ -1198,11 +1301,16 @@ _model_lock = threading.Lock()
 
 
 def _model_files(model_df: DataFrame) -> tuple | None:
-    """(path, length, mtime) of every input file of ``model_df`` when
-    every leaf of its plan is a file scan; None otherwise (a literal
-    frame, a checkpoint or a JDBC read has no file identity), and None
-    when a file cannot be stat'ed, so the caller's collect raises as
-    it would uncached."""
+    """(path, sha256 of its bytes) of every input file of ``model_df``
+    when every leaf of its plan is a scan of local files; None otherwise
+    (a literal frame, a checkpoint, a JDBC read or a remote file system
+    has no identity here), and None when a file cannot be read, so the
+    caller's collect raises as it would uncached. The key is the
+    content, not (length, mtime): a same-length rewrite inside the file
+    system's mtime granularity keeps those, which served the old array.
+    A model is m*ks or n_cells rows, so hashing it is cheap."""
+    from urllib.parse import unquote, urlparse
+
     jdf = model_df._jdf
     leaves = jdf.queryExecution().analyzed().collectLeaves()
     for i in range(leaves.size()):
@@ -1211,25 +1319,24 @@ def _model_files(model_df: DataFrame) -> tuple | None:
                 or leaf.relation().getClass().getSimpleName()
                 != "HadoopFsRelation"):
             return None
-    sc = model_df.sparkSession.sparkContext
-    conf = sc._jsc.hadoopConfiguration()
-    path = sc._jvm.org.apache.hadoop.fs.Path
     files = []
-    try:
-        for f in sorted(model_df.inputFiles()):
-            p = path(f)
-            st = p.getFileSystem(conf).getFileStatus(p)
-            files.append((f, st.getLen(), st.getModificationTime()))
-    except Py4JJavaError:
-        return None
+    for f in sorted(model_df.inputFiles()):
+        u = urlparse(f)
+        if u.scheme != "file":
+            return None
+        try:
+            with open(unquote(u.path), "rb") as fh:
+                files.append((f, hashlib.sha256(fh.read()).hexdigest()))
+        except OSError:
+            return None
     return tuple(files)
 
 
 def _model_np(resolve):
     """Decorate ``resolve(model_df, *params, op)`` (collect and validate
     a model table into an ndarray; ``op`` names the caller in errors
-    only) to run once per model identity: the files' (path, length,
-    mtime), the plan's semanticHash — so a filtered view of the same
+    only) to run once per model identity: the files' (path, content
+    digest), the plan's semanticHash — so a filtered view of the same
     files is its own entry — and ``params``, a hit confirmed with
     sameSemantics. A frozen model is collected by the first probe or
     drain that reads it; a rewrite changes the files and so the key.
@@ -1374,6 +1481,7 @@ def _pq_guard(sub: int, scale: float) -> int:
     return int(math.sqrt(2.0 ** 53 / (4 * sub)))
 
 
+@_per_model
 def _pq_assign_udf(books: np.ndarray, maxq: int):
     """PQ encoder: per-subspace argmin squared-L2 over quantized int64
     vectors, one ||x||^2 - 2x.c + ||c||^2 expansion (exact float64
@@ -1542,9 +1650,9 @@ def op_pq_encode(df: DataFrame, config: Mapping, views) -> DataFrame:
         # row's code is NULL, matching the validity contract
         return df.withColumn(out_field,
                              F.lit(None).cast(T.ArrayType(T.IntegerType())))
-    quant = F.transform(
-        F.when(valid_vec(F.col(field)), F.col(field)),  # invalid -> NULL code
-        lambda x: F.floor(x.cast("double") * F.lit(scale)))
+    quant = F.expr(  # invalid -> NULL code
+        f"transform({_when_valid(field)}, "
+        f"x -> floor(CAST(x AS DOUBLE) * {_double_sql(scale)}))")
     return df.withColumn(out_field, _pq_assign_udf(books, maxq)(quant))
 
 
@@ -1568,6 +1676,23 @@ def _pq_probe(df: DataFrame, config: Mapping, op: str, dim: int,
     _, qv = _batch_matrix(pd.Series([np.floor(
         np.asarray(raw, dtype=np.float64) * scale)]), dim, op, maxq)
     return raw, qv[0].astype(np.int64)
+
+
+def _adc_sql(tables: np.ndarray) -> str:
+    """SQL text of the ADC lookup-sum over ``pq_code``: per subspace
+    j, entry pq_code[j] of the probe's j-th ks-entry distance table,
+    summed left to right. The whole sum is one F.expr parse: a py4j
+    call per element (F.lit each, or F.lit(list) which desugars the
+    same) cost ~1s at m x ks = 2048 — the round-9 "m x ks literal
+    codegen" overhead — and Column-API lookups cost three calls per
+    subspace. The `L` suffix pins every element to BIGINT:
+    small-magnitude tables would otherwise resolve array<int> -> int32
+    adc_dist (silent wrap + dtype mismatch vs the oracle's BIGINT) —
+    ADVICE r9."""
+    return " + ".join(
+        "element_at(array(" + ",".join(f"{int(t)}L" for t in row)
+        + f"), element_at(`pq_code`, {j + 1}) + 1)"
+        for j, row in enumerate(tables))
 
 
 @register("ann_pq")
@@ -1686,7 +1811,7 @@ def op_ann_pq(df: DataFrame, config: Mapping, views) -> DataFrame:
         encoded = codes_src.filter(F.col("pq_code").isNotNull())
         cell = F.col("ivf_cell")
     else:
-        encoded = df.filter(valid_vec(F.col(field)))
+        encoded = df.filter(valid_vec(field))
         cell = (_assign_multi_udf(cents, 1)(F.col(field))[0]
                 if cents is not None else None)
 
@@ -1708,22 +1833,7 @@ def op_ann_pq(df: DataFrame, config: Mapping, views) -> DataFrame:
 
     # m x ks exact-integer distance tables: sub * (2*maxq)^2 <= 2^53
     tables = ((qv.reshape(m, 1, sub) - books) ** 2).sum(axis=2)  # (m, ks)
-
-    # ONE SQL-parsed array literal per subspace: a py4j call per
-    # element (F.lit each, or F.lit(list) which desugars the same)
-    # cost ~1s at m x ks = 2048 — the round-9 "m x ks literal
-    # codegen" overhead; one F.expr parse is ~10x cheaper. The `L`
-    # suffix pins every element to BIGINT: small-magnitude tables
-    # would otherwise resolve array<int> -> int32 adc_dist (silent
-    # wrap + dtype mismatch vs the oracle's BIGINT) — ADVICE r9
-    adc = None
-    for j in range(m):
-        arr = F.expr(
-            "array(" + ",".join(f"{int(t)}L" for t in tables[j]) + ")")
-        term = F.element_at(
-            arr, F.element_at(F.col("pq_code"), j + 1) + 1)
-        adc = term if adc is None else adc + term
-    out = (encoded.withColumn("adc_dist", adc)
+    out = (encoded.withColumn("adc_dist", F.expr(_adc_sql(tables)))
            .select(id_field, "adc_dist")
            .orderBy(F.col("adc_dist").asc(), F.col(id_field))
            .limit(max(k, rerank)))
@@ -1809,7 +1919,7 @@ def op_centroid_drift(df: DataFrame, config: Mapping, views) -> DataFrame:
             "the int64 squared-L2 sum would overflow; lower `scale`")
 
     def prep(d: DataFrame, is_base: bool) -> DataFrame:
-        d = d.filter(valid_vec(F.col(field)))
+        d = d.filter(valid_vec(field))
 
         # Executor-side guard on the DATA side too (ADVICE r11): an
         # out-of-domain component would silently wrap the non-ANSI
@@ -2035,7 +2145,7 @@ def op_model_refresh(df: DataFrame, config: Mapping, views) -> DataFrame:
                 F.coalesce(x.cast("string"), F.lit("NULL"))))
             .cast("long"))
 
-    s = store_src.filter(valid_vec(F.col(field)))
+    s = store_src.filter(valid_vec(field))
     qcol = F.transform(F.col(field), lambda x: _q(x))
     old_code_of = _pq_assign_udf(books_old, maxq_pq)
 
@@ -2191,8 +2301,8 @@ def op_ann_pq_versioned(df: DataFrame, config: Mapping, views) -> DataFrame:
             f"you accept that cost.")
 
     # one CASE over per-version literal ADC tables — a single codegen
-    # scan serves every live version
-    adc = None
+    # scan serves every live version, one F.expr parse builds it
+    adc = []
     for v in versions:
         bv = _books_np(
             books_src.filter(F.col("model_version") == v)
@@ -2202,19 +2312,11 @@ def op_ann_pq_versioned(df: DataFrame, config: Mapping, views) -> DataFrame:
                 f"ann_pq_versioned: |books codeword| exceeds {maxq} "
                 f"(version {v})")
         tables = ((qv.reshape(m, 1, sub) - bv) ** 2).sum(axis=2)
-        term = None
-        for j in range(m):
-            arr = F.expr(
-                "array(" + ",".join(f"{int(t)}L" for t in tables[j])
-                + ")")
-            t_j = F.element_at(arr,
-                               F.element_at(F.col("pq_code"), j + 1) + 1)
-            term = t_j if term is None else term + t_j
-        cond = F.col("model_version") == F.lit(v)
-        adc = F.when(cond, term) if adc is None else adc.when(cond, term)
+        adc.append(f"WHEN `model_version` = {int(v)} "
+                   f"THEN {_adc_sql(tables)}")
 
     return (codes_src.filter(F.col("pq_code").isNotNull())
-            .withColumn("adc_dist", adc)
+            .withColumn("adc_dist", F.expr(f"CASE {' '.join(adc)} END"))
             .filter(F.col("adc_dist").isNotNull())  # unknown versions
             .select(id_field, "adc_dist")
             .orderBy(F.col("adc_dist").asc(), F.col(id_field))
@@ -2277,10 +2379,11 @@ def op_vector_health(df: DataFrame, config: Mapping, views) -> DataFrame:
     by = config.get("by") or []
     if isinstance(by, str):
         by = [by]
-    c = F.col(field)
+    c, a = F.col(field), _sql_name(field)
     is_null = c.isNull()
     is_empty = c.isNotNull() & (F.size(c) == 0)
-    nonfinite = (c.isNotNull() & (F.size(c) > 0) & ~_components_ok(c))
+    nonfinite = F.expr(f"({a} IS NOT NULL AND size({a}) > 0)"
+                       f" AND NOT {_components_sql(a)}")
 
     def cnt(cond):
         return F.coalesce(F.sum(cond.cast("long")), F.lit(0).cast("long"))
@@ -2290,7 +2393,7 @@ def op_vector_health(df: DataFrame, config: Mapping, views) -> DataFrame:
         cnt(is_null).alias("n_null"),
         cnt(is_empty).alias("n_empty"),
         cnt(nonfinite).alias("n_nonfinite"),
-        cnt(valid_vec(c)).alias("n_valid"))
+        cnt(valid_vec(field)).alias("n_valid"))
     # SQL `div` (integral), never float `/` + cast: a double detour
     # can round across an integer boundary (CLAUDE.md invariant)
     return agg.withColumn(

@@ -26,6 +26,7 @@ we are SQL-sane, matching the ANSI/DuckDB oracle:
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Mapping
 from functools import reduce
 
@@ -158,23 +159,32 @@ def op_parse_json(df: DataFrame, config: Mapping, views) -> DataFrame:
     return out
 
 
+# serializes op_sql's use of the session-global temp-view namespace
+_SQL_VIEWS_LOCK = threading.Lock()
+
+
 @register("sql")
 def op_sql(df: DataFrame, config: Mapping, views) -> DataFrame:
     """Full Spark SQL over the current frame (view ``self``) and every
     named source view — subqueries, CTEs, any join shape. Views are
     dropped again after the query resolves (resolution is eager in
     ``spark.sql``), so no session-global view state leaks between
-    operators or pipelines sharing the session."""
+    operators or pipelines sharing the session. The views are
+    session-global, so the register → resolve → drop window holds
+    `_SQL_VIEWS_LOCK`: two concurrent sql ops over the same view names
+    would otherwise resolve each other's frames or drop each other's
+    views mid-query."""
     spark = df.sparkSession
     names = [config.get("self_name", "self"), *list(views or {})]
-    df.createOrReplaceTempView(names[0])
-    for name, v in (views or {}).items():
-        v.createOrReplaceTempView(name)
-    try:
-        return spark.sql(config["query"])
-    finally:
-        for name in names:
-            spark.catalog.dropTempView(name)
+    with _SQL_VIEWS_LOCK:
+        df.createOrReplaceTempView(names[0])
+        for name, v in (views or {}).items():
+            v.createOrReplaceTempView(name)
+        try:
+            return spark.sql(config["query"])
+        finally:
+            for name in names:
+                spark.catalog.dropTempView(name)
 
 
 # --------------------------------------------------------------------------

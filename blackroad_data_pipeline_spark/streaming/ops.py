@@ -333,16 +333,61 @@ def _read_existing(spark: SparkSession, path: str) -> DataFrame | None:
     written there yet (a store writer's first drain). ONLY a missing
     path is swallowed — a schema mismatch / corrupt footer / bad
     config must surface, or the writer silently skips its history and
-    re-ingests duplicates."""
+    re-ingests duplicates.
+
+    The schema is the one `_footer_schema` reads on the driver — what
+    Spark's own inference would read, without the one-task Spark job
+    it runs for that on every drain. So the frame's columns and types
+    are exactly the ones on disk: a missing or retyped column fails
+    the plan that names it, as an inferred read does."""
     from pyspark.errors import AnalysisException
 
+    schema = _footer_schema(path)
     try:
-        return spark.read.parquet(path)
+        return (spark.read if schema is None
+                else spark.read.schema(schema)).parquet(path)
     except AnalysisException as e:
         cond = getattr(e, "getCondition", lambda: None)()
         if cond != "PATH_NOT_FOUND" and "PATH_NOT_FOUND" not in str(e):
             raise
         return None
+
+
+def _footer_schema(path: str):
+    """The data schema Spark recorded in the footer of one data file of
+    the local parquet dataset at ``path`` — the schema Spark infers for
+    it (without ``mergeSchema``, it reads one data file's footer, and a
+    Spark-written footer carries the schema as written); partition
+    columns still come from the directory names. None, so Spark infers
+    it as before, when ``path`` is not a local directory, holds a
+    parquet summary file, no data file, or a footer without that
+    record."""
+    import json
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    root = path[len("file:"):] if path.startswith("file:") else path
+    if not os.path.isdir(root):
+        return None
+
+    def hidden(name: str) -> bool:  # Spark's listing rule
+        return ((name.startswith("_") and "=" not in name)
+                or name.startswith(".") or name.endswith("._COPYING_"))
+
+    if any(n in ("_metadata", "_common_metadata") for n in os.listdir(root)):
+        return None
+    for parent, dirs, files in os.walk(root):
+        dirs[:] = sorted(d for d in dirs if not hidden(d))
+        for name in sorted(f for f in files if not hidden(f)):
+            meta = pq.read_metadata(os.path.join(parent, name)).metadata
+            text = (meta or {}).get(
+                b"org.apache.spark.sql.parquet.row.metadata")
+            try:
+                return StructType.fromJson(json.loads(text))
+            except (TypeError, ValueError, KeyError):
+                return None
+    return None
 
 
 def _drain(df: DataFrame, each_batch, checkpoint: str):
@@ -550,9 +595,10 @@ def run_stream_vector_ingest(df: DataFrame, path: str, checkpoint: str,
        of what this drops),
     2. near-dedups the micro-batch within itself (greedy
        dedup_embedding) and against the PERSISTED history in one plan
-       (dedup_embedding with ``history``) — history consumed as
-       int8 codes dequantized on the fly (4x narrower I/O; the
-       bucketed join never re-reads raw fp32 history),
+       (dedup_embedding with ``history``: one candidate-and-verify
+       pass) — history consumed as int8 codes dequantized on the fly
+       (4x narrower I/O; the bucketed join never re-reads raw fp32
+       history),
     3. bootstraps the PQ codebooks and IVF coarse quantizer from the
        FIRST batch and persists them (`model_path`/books, /cells);
        every later batch serves the FROZEN models, so pq codes and
@@ -571,6 +617,17 @@ def run_stream_vector_ingest(df: DataFrame, path: str, checkpoint: str,
     vectors), never per-batch min/max — a drifting codebook would
     make day-1 and day-2 codes incomparable.
 
+    After the bootstrap a drain is one plan, run once by the store
+    write: the encode steps are projections over models collected to
+    the driver once per model identity (`_model_np`), so nothing is
+    materialized. The books, cells and store are read with the schema
+    their parquet footers record (`_read_existing`), read on the
+    driver instead of by a Spark inference job per table, and each is
+    exactly what is on disk: a store without ``q_emb`` or of another
+    element type, or books without ``codeword``, fails the drain
+    before it writes, where a declared schema would read NULLs that
+    the validity filter drops — a silently skipped history.
+
     Bootstrap is GUARDED: if the first drain has fewer than
     ``min_train`` valid deduped vectors (default max(ks, n_cells)),
     the drain raises instead of freezing degenerate models — an empty
@@ -579,7 +636,12 @@ def run_stream_vector_ingest(df: DataFrame, path: str, checkpoint: str,
     it losslessly.
     """
     from ..operators import apply_operator as op
-    from ..llmops.similarity import valid_vec
+    from ..llmops.similarity import (
+        _double_sql,
+        _sql_alias,
+        _sql_name,
+        valid_vec,
+    )
 
     lo, hi = float(bounds[0]), float(bounds[1])
     if min_train is None:
@@ -626,7 +688,7 @@ def run_stream_vector_ingest(df: DataFrame, path: str, checkpoint: str,
         else:
             model_ver, model_dir = None, model_path
 
-        batch = batch.filter(valid_vec(F.col(field)))
+        batch = batch.filter(valid_vec(field))
 
         def _read(sub):
             return _read_existing(spark, f"{model_dir}/{sub}")
@@ -680,14 +742,13 @@ def run_stream_vector_ingest(df: DataFrame, path: str, checkpoint: str,
         hist = None
         store = _read_existing(spark, path_)
         if store is not None:
-            store = store.filter(F.col("__ingest_batch") != F.lit(batch_id))
             # array_repeat folds to the same literal bounds array as a
-            # dim-wide F.array of literals, in one py4j call
-            hist = store.select(
-                id_field,
-                F.col("q_emb").alias(field),
-                F.array_repeat(F.lit(lo), dim).alias("q_lo"),
-                F.array_repeat(F.lit(hi), dim).alias("q_hi"))
+            # dim-wide array of literals
+            hist = store.filter(
+                f"__ingest_batch != {int(batch_id)}").selectExpr(
+                _sql_name(id_field), f"q_emb AS {_sql_alias(field)}",
+                f"array_repeat({_double_sql(lo)}, {dim}) AS q_lo",
+                f"array_repeat({_double_sql(hi)}, {dim}) AS q_hi")
             hist = op("dequantize_embedding", hist,
                       {"bits": bits, "field": field})
         if bootstrap and hist is None:
@@ -695,24 +756,24 @@ def run_stream_vector_ingest(df: DataFrame, path: str, checkpoint: str,
         else:
             # ONE plan does the within-batch and the against-history
             # dedup (re-running the within-batch step over bootstrap
-            # survivors drops nothing); materialized once so the three
-            # encode steps below do not each recompute it
-            kept = op("dedup_embedding", batch,
-                      {**dd_cfg, "history": hist}).localCheckpoint(eager=True)
+            # survivors drops nothing). The write below is its only
+            # consumer: the encode steps are projections over models
+            # already collected to the driver, so nothing is
+            # materialized here.
+            kept = op("dedup_embedding", batch, {**dd_cfg, "history": hist})
         q = op("quantize_embedding", kept,
                {"dim": dim, "bits": bits, "bounds": [lo, hi],
                 "field": field, "as": "q_emb"})
         coded = op("pq_encode", q, {**pq_cfg, "books": books})
         celled = op("ivf_assign", coded,
                     {**pq_cfg, "n_cells": n_cells, "cells": cells})
-        out = celled.select(id_field, "q_emb", "pq_code", "ivf_cell")
+        cols = [_sql_name(id_field), "q_emb", "pq_code", "ivf_cell"]
         if managed_model:
             # codes from different model versions are not joinable;
             # the tag is what lets op_ann_pq_versioned serve the
             # mixed store after a model_refresh swap
-            out = out.withColumn("model_version",
-                                 F.lit(int(model_ver)).cast("int"))
-        (out.withColumn("__ingest_batch", F.lit(batch_id))
+            cols.append(f"CAST({int(model_ver)} AS INT) AS model_version")
+        (celled.selectExpr(*cols, f"{int(batch_id)} AS __ingest_batch")
          .write.mode("overwrite")
          .option("partitionOverwriteMode", "dynamic")
          .partitionBy("__ingest_batch").parquet(path_))

@@ -118,6 +118,36 @@ def test_pivot_bool_values_renamed(spark):
     assert r["v_True"] == 2.0 and r["v_False"] == 3.0
 
 
+def test_sql_operator_concurrent_ops_see_their_own_views(spark):
+    """Concurrent sql ops on one session register the same view names
+    (``self``, ``dims``) in the session catalog; each must resolve its
+    own frames, never another op's, and never find its views dropped
+    by another op. More threads than cores, with a short switch
+    interval so the threads interleave inside each op."""
+    import os
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    n_threads, n_ops = min(2 * len(os.sched_getaffinity(0)), 16), 15
+
+    def run(k):
+        base = spark.createDataFrame([(k,)], "v int")
+        dims = spark.createDataFrame([(k, f"d{k}")], "v int, name string")
+        return [[tuple(r) for r in op("sql", base, {
+            "query": "SELECT v, name FROM self JOIN dims USING (v)"},
+            views={"dims": dims}).collect()] for _ in range(n_ops)]
+
+    prev = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(n_threads) as pool:
+            futures = [pool.submit(run, k) for k in range(n_threads)]
+            got = [f.result(timeout=300) for f in futures]
+    finally:
+        sys.setswitchinterval(prev)
+    assert got == [[[(k, f"d{k}")]] * n_ops for k in range(n_threads)]
+
+
 def test_sql_operator_drops_views_after(spark, sales):
     dims = spark.createDataFrame([("a", "alpha")], ["k", "kname"])
     op("sql", sales, {"query": "SELECT * FROM self"}, views={"dims": dims})

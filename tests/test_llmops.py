@@ -1847,8 +1847,8 @@ def test_dedup_embedding_history_matches_two_step(spark, n_tables):
     and the near-copy that shares no bucket still drops its id. Also: ids shared between batch and history,
     NULL/NaN/empty vectors and a NULL id on both sides, exact copies,
     an array<double> history against an array<float> batch, a history
-    whose ids are strings (batch ids keep their own numeric order),
-    and an empty history."""
+    whose ids are strings (batch ids keep their own numeric order), one
+    whose string ids are not numbers ("h-1"), and an empty history."""
     import numpy as np
 
     from blackroad_data_pipeline_spark.llmops.similarity import _hyperplanes
@@ -1924,7 +1924,11 @@ def test_dedup_embedding_history_matches_two_step(spark, n_tables):
         return {r["vec_id"] for r in df.collect()}
 
     str_ids = hdf.withColumn("vec_id", F.col("vec_id").cast("string"))
-    for hframe in (hdf, str_ids, hdf.limit(0)):
+    # ids no numeric type holds: cast to the batch's id type, they raise
+    # under ANSI
+    tag_ids = hdf.withColumn("vec_id", F.concat(
+        F.lit("h-"), F.col("vec_id").cast("string")))
+    for hframe in (hdf, str_ids, tag_ids, hdf.limit(0)):
         fused = op("dedup_embedding", bdf, {**cfg, "history": hframe},
                    views={})
         two_step = op("dedup_embedding_against",

@@ -515,6 +515,252 @@ def test_stream_vector_ingest_frozen_models_and_history_dedup(
     assert [r["vec_id"] for r in hit.collect()] == [3]
 
 
+def _vector_days(n_days: int, seed: int = 11):
+    """Day files of 8-dim vectors: day 0 has ids 0..7, day d > 0 has
+    ids 100*d .. 100*d+3 and a near-copy (id 100*d+10) of vector 0."""
+    import numpy as np
+
+    rng = np.random.RandomState(seed)
+    days = [[(i, [float(x) for x in rng.randn(8)]) for i in range(8)]]
+    for d in range(1, n_days):
+        days.append([(100 * d + i, [float(x) for x in rng.randn(8)])
+                     for i in range(4)]
+                    + [(100 * d + 10, [x + 1e-4 for x in days[0][0][1]])])
+    return days
+
+
+_VEC_KW = dict(dim=8, m=2, ks=2, n_cells=2, n_planes=2, n_tables=4)
+
+
+def _vector_drainer(spark, tmp_path):
+    """(add, drain, store, checkpoint, models): ``add(name, rows)``
+    writes a day file, ``drain()`` runs one availableNow vector-ingest
+    drain over every day file not drained yet."""
+    from blackroad_data_pipeline_spark.streaming.ops import (
+        run_stream_vector_ingest,
+    )
+
+    src = tmp_path / "vecs"
+    src.mkdir()
+    out, ckpt, models = (str(tmp_path / d) for d in
+                         ("store", "ckpt", "models"))
+    schema = "vec_id long, embedding array<float>"
+
+    def add(name, rows):
+        spark.createDataFrame(rows, schema).write.parquet(
+            str(src / f"{name}.parquet"))
+
+    def drain():
+        return run_stream_vector_ingest(
+            spark.readStream.schema(schema).option(
+                "recursiveFileLookup", True).parquet(str(src)),
+            out, ckpt, models, **_VEC_KW)
+
+    return add, drain, out, ckpt, models
+
+
+def test_stream_vector_ingest_steady_drain_is_one_lean_plan(
+        spark, tmp_path, monkeypatch):
+    """A drain after the bootstrap, with a store to dedup against, is
+    one lean plan: nothing is materialized (the dedup's only consumer
+    is the store write; the encode steps are projections over models
+    already collected to the driver), no Spark job runs inside a read
+    (the books, cells and store schemas come from a parquet footer
+    read on the driver, not from Spark's one-task inference job), at
+    most 9 Spark jobs run in all, and building it takes few py4j
+    calls (each step is one SQL parse, not a call per column and
+    operator; the ceiling is about twice what a drain makes)."""
+    from pyspark.sql.classic.dataframe import DataFrame
+    from pyspark.sql.readwriter import DataFrameReader
+
+    add, drain, out, _, _ = _vector_drainer(spark, tmp_path)
+    days = _vector_days(3)
+    for d in range(3):
+        add(f"day{d}", days[d])
+        if d < 2:
+            drain()
+
+    sc = spark.sparkContext
+    scheduler = sc._jsc.sc().dagScheduler()
+    checkpoints, read_jobs, calls = [], [], [0]
+    real_cp, real_parquet = DataFrame.localCheckpoint, DataFrameReader.parquet
+    client = type(sc._gateway._gateway_client)
+    real_send = client.send_command
+
+    def cp(self, *args, **kwargs):
+        checkpoints.append(args)
+        return real_cp(self, *args, **kwargs)
+
+    def parquet(self, *args, **kwargs):
+        j0 = scheduler.nextJobId()
+        try:
+            return real_parquet(self, *args, **kwargs)
+        finally:
+            read_jobs.append(scheduler.nextJobId() - j0)
+
+    def send(self, *args, **kwargs):
+        calls[0] += 1
+        return real_send(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", cp)
+    monkeypatch.setattr(DataFrameReader, "parquet", parquet)
+    j0 = scheduler.nextJobId()
+    monkeypatch.setattr(client, "send_command", send)
+    drain()
+    monkeypatch.undo()
+    jobs = scheduler.nextJobId() - j0
+
+    assert checkpoints == []
+    assert len(read_jobs) >= 3 and set(read_jobs) == {0}, read_jobs
+    assert jobs <= 9, jobs
+    assert calls[0] <= 1200, calls[0]
+    got = sorted(r["vec_id"] for r in spark.read.parquet(out).collect())
+    assert got == list(range(8)) + [100, 101, 102, 103, 200, 201, 202, 203]
+
+
+@pytest.mark.parametrize("bad", ["store_without_q_emb",
+                                 "store_q_emb_of_binary",
+                                 "books_without_codeword"])
+def test_stream_vector_ingest_fails_loudly_on_a_wrong_schema(
+        spark, tmp_path, bad):
+    """A store or model whose schema on disk is not the one the drain
+    reads fails the drain before anything is written: no store
+    partition for the batch and no checkpoint commit. A store read
+    with a declared schema would instead give NULL vectors, which the
+    validity filter drops, so the drain would silently skip its
+    history and store its duplicates."""
+    import os
+    import shutil
+
+    from pyspark.errors import StreamingQueryException
+    from pyspark.sql import functions as F
+
+    add, drain, out, ckpt, models = _vector_drainer(spark, tmp_path)
+    days = _vector_days(2)
+    add("day0", days[0])
+    drain()
+
+    target, column = {
+        "store_without_q_emb": (out, "q_emb"),
+        "store_q_emb_of_binary": (out, "q_emb"),
+        "books_without_codeword": (os.path.join(models, "books"),
+                                   "codeword"),
+    }[bad]
+    frame = spark.read.parquet(target)
+    if bad == "store_q_emb_of_binary":
+        frame = frame.withColumn("q_emb", F.transform(
+            "q_emb", lambda x: x.cast("string").cast("binary")))
+    else:
+        frame = frame.drop(column)
+    writer = frame.write
+    if target == out:
+        writer = writer.partitionBy("__ingest_batch")
+    writer.parquet(str(tmp_path / "rewritten"))
+    shutil.rmtree(target)
+    shutil.move(str(tmp_path / "rewritten"), target)
+
+    add("day1", days[1])
+    with pytest.raises(StreamingQueryException, match=column):
+        drain()
+    assert not os.path.exists(os.path.join(out, "__ingest_batch=1"))
+    assert os.path.exists(os.path.join(ckpt, "commits", "0"))
+    assert not os.path.exists(os.path.join(ckpt, "commits", "1"))
+
+
+def test_model_cache_sees_a_same_length_rewrite(spark, tmp_path):
+    """A frozen model rewritten in place between two drains, and between
+    a drain and a served ann_pq probe, by a model of the same byte
+    length with the old mtime (what a file system whose mtime clock is
+    coarser than the rewrite shows): the next read serves the new
+    model, never the array cached for the old one."""
+    import os
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    add, drain, out, _, models = _vector_drainer(spark, tmp_path)
+    days = _vector_days(2, seed=5)
+    rng = np.random.RandomState(3)
+    # books: m=2 subspaces x ks=2 codes of dim/m=4 longs; cells: 2 x 8
+    books = rng.randint(-10 ** 6, 10 ** 6, size=(2, 2, 4))
+    cells = rng.randn(2, 8)
+    paths = {k: os.path.join(models, k, "part-0.parquet")
+             for k in ("books", "cells")}
+
+    def write_models(flip: bool):
+        """The models, with codes 0/1 and cells 0/1 swapped if flip:
+        same values and sizes, every vector's code and cell changes."""
+        b, c = (books[:, ::-1], cells[::-1]) if flip else (books, cells)
+        tables = {
+            "books": pa.table({
+                "subspace": pa.array([0, 0, 1, 1], pa.int32()),
+                "code": pa.array([0, 1, 0, 1], pa.int32()),
+                "codeword": pa.array([[int(v) for v in b[j, k]]
+                                      for j in range(2) for k in range(2)],
+                                     pa.list_(pa.int64()))}),
+            "cells": pa.table({
+                "cell": pa.array([0, 1], pa.int32()),
+                "centroid": pa.array([list(map(float, r)) for r in c],
+                                     pa.list_(pa.float64()))})}
+        for k, t in tables.items():
+            before = os.stat(paths[k]) if os.path.exists(paths[k]) else None
+            os.makedirs(os.path.dirname(paths[k]), exist_ok=True)
+            pq.write_table(t, paths[k], compression="NONE",
+                           use_dictionary=False, write_statistics=False)
+            if before is not None:
+                assert os.path.getsize(paths[k]) == before.st_size
+                os.utime(paths[k], ns=(before.st_atime_ns,
+                                       before.st_mtime_ns))
+        return {k: spark.createDataFrame(t.to_pandas())
+                for k, t in tables.items()}
+
+    pq_cfg = {"dim": 8, "m": 2, "ks": 2, "seed_order": "id"}
+
+    def encoded(rows, mem):
+        """(vec_id, pq_code, ivf_cell) of ``rows`` under in-memory models,
+        which are never cached."""
+        df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+        df = op("ivf_assign", op("pq_encode", df, {**pq_cfg,
+                                                   "books": mem["books"]}),
+                {**pq_cfg, "n_cells": 2, "cells": mem["cells"]})
+        return sorted((r["vec_id"], list(r["pq_code"]), r["ivf_cell"])
+                      for r in df.collect())
+
+    def stored(batch):
+        return sorted((r["vec_id"], list(r["pq_code"]), r["ivf_cell"])
+                      for r in spark.read.parquet(out).filter(
+                          f"__ingest_batch = {batch}").collect())
+
+    first = write_models(flip=False)
+    add("day0", days[0])
+    drain()
+    assert stored(0) == encoded(days[0], first)
+    flipped = write_models(flip=True)
+    add("day1", days[1])
+    drain()
+    kept = days[1][:4]  # the near-copy of vector 0 is deduped away
+    assert stored(1) == encoded(kept, flipped) != encoded(kept, first)
+
+    corpus = spark.createDataFrame(days[0] + days[1],
+                                   "vec_id long, embedding array<float>")
+    probe = {**pq_cfg, "probe": days[0][3][1], "k": 5,  # pure ADC
+             "n_cells": 2, "nprobe": 1,
+             "codes": spark.read.parquet(out).select(
+                 "vec_id", "pq_code", "ivf_cell")}
+
+    def served(mem=None):
+        models_ = mem or {k: spark.read.parquet(os.path.dirname(p))
+                          for k, p in paths.items()}
+        return [tuple(r) for r in op("ann_pq", corpus,
+                                     {**probe, **models_}).collect()]
+
+    assert served() == served(flipped)
+    back = write_models(flip=False)
+    assert served() == served(back)
+    assert served(back) != served(flipped)
+
+
 def test_stream_vector_ingest_bootstrap_over_existing_store(
         spark, tmp_path):
     """A drain that finds no models but an existing store (models/
@@ -962,6 +1208,8 @@ def test_ingest_picks_up_refreshed_model_through_manifest(spark, tmp_path):
     with v1 (including the refreshed q_centroid coarse model) and
     tags its rows, so the mixed-version store serves one exact merged
     top-k through ann_pq_versioned + read_versioned_books."""
+    import hashlib
+
     import numpy as np
 
     from blackroad_data_pipeline_spark.llmops.similarity import (
@@ -1037,6 +1285,14 @@ def test_ingest_picks_up_refreshed_model_through_manifest(spark, tmp_path):
     # q_centroid coarse model serve the encode; rows tagged 1
     drain(day3, "d3")
     rows = spark.read.parquet(store).collect()
+    # both drains' stored rows, pinned to what the drain stored when it
+    # inferred the store and model schemas with Spark jobs and verified
+    # within-batch and history candidates in two passes
+    assert hashlib.sha256("\n".join(sorted(repr(tuple(r)) for r in (
+        spark.read.parquet(store).select(
+            "vec_id", "q_emb", "pq_code", "ivf_cell", "model_version",
+            "__ingest_batch").collect()))).encode()).hexdigest() == (
+        "9087547b9e60dd0485e9712b7e0a22efef0fd4197033790eb4bbc0b69c1d025a")
     tags = {r["vec_id"]: r["model_version"] for r in rows}
     # (the within-batch near-dedup keeps only distinct day-1 vectors;
     # assert over the survivors, which must all stay v0)
